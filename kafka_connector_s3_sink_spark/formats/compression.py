@@ -68,12 +68,14 @@ def decompress_bytes(data: bytes, compression: CompressionType) -> bytes:
 
 
 class _CompressedWriter:
-    """Buffering writer: streams text lines, compresses on close.
+    """Compressing writer over a raw object stream; ``close`` flushes the
+    codec's tail into the sink.
 
-    For gzip the compression is truly streaming (GzipFile over the sink);
-    snappy/zstd buffer up to ``part_size`` bytes before compressing a block —
-    bounded memory, mirroring the reference's 5 MiB multipart buffer
-    (``S3OutputStream.java:65,74-91``).
+    gzip (GzipFile) and zstd (``pa.CompressedOutputStream``) stream, so
+    memory is the codec's own buffer. snappy has no streaming framing in
+    pyarrow: it holds the WHOLE object in a ``BytesIO`` and compresses it as
+    one raw block on ``close``, so its memory is O(object) —
+    ``file.max.records`` bounds it.
     """
 
     def __init__(self, sink: BinaryIO, compression: CompressionType):

@@ -5,7 +5,7 @@ The reference's core competency is streaming object writes with abort-on-error:
 multipart upload on any failure, so a crashed task never leaves a partial
 object visible. This module gives the Spark engine the same contract over any
 filesystem ``pyarrow.fs`` can resolve — ``file:``, ``s3://``, ``gs://``,
-``hdfs://`` — WITHOUT the JVM, because the partition writers that need it run
+``hdfs://`` — WITHOUT the JVM, because the object-write loop that needs it runs
 inside Python executor tasks where no py4j gateway exists (the driver-side
 Hadoop client in ``operators/packing.list_files`` cannot be reached from a
 task).

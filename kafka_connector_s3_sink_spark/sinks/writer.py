@@ -9,19 +9,23 @@ Spark-first decomposition:
 3. line rendering                 — Column expressions, JVM codegen (formats/render.py)
 4. distribution                   — ``repartition(filename)`` +
                                     ``sortWithinPartitions(filename, offset)``
-5. object write                   — per-partition Python writer streaming Arrow
-                                    record batches into compressed files; memory
-                                    is bounded by one compression buffer (text) or
-                                    one group's columnar buffer (parquet/ORC),
-                                    not by partition size
+5. object write                   — ONE ``mapInArrow`` loop (``_write_objects``)
+                                    for every format: per group run of the
+                                    arriving Arrow batches it opens the object,
+                                    feeds the run's slices to a format encoder,
+                                    closes the encoder, calls the ``fault``
+                                    hook, commits — or aborts the in-flight
+                                    object on any exception — and emits the
+                                    manifest (rows to the driver, or a sidecar
+                                    shard)
 
 Only step 5 is Python, and it is pure I/O (the bytes were rendered JVM-side).
-Data crosses the JVM→Python boundary as Arrow record batches (``mapInArrow``,
-r16 — previously ``rdd.mapPartitions`` pickled every row): group boundaries are
-found with vectorized dictionary-encode + diff, text groups are joined with one
-C-level ``binary_join`` per batch slice instead of a per-row loop, and columnar
-groups are written from the arriving Arrow arrays directly. Output bytes are
-identical (verified object-for-object against the row path).
+An encoder is ``encoder(raw, name) -> (append, close)``: ``append`` takes one
+group's slice of a batch (its payload columns), ``close`` finishes the object's
+bytes into ``raw``. Text (CSV/JSONL/JSON) joins each slice with one C-level
+``binary_join`` into a compressed stream, so memory is one compression buffer;
+columnar (parquet/ORC) buffers the group's Arrow slices and writes one table;
+Avro streams rows into OCF blocks. No value round-trips through pickled Rows.
 Object I/O goes through ``sinks.storage.ObjectStorage`` (pyarrow.fs), so
 ``dest_dir`` may be a local path, ``file://``, ``s3://``, ``gs://`` or
 ``hdfs://`` URI; every object commit is atomic (temp+rename, or direct PUT on
@@ -158,11 +162,14 @@ def write_batch(
     (default) collects one (name, count) tuple per OBJECT — never data rows —
     which is fine until a batch writes millions of objects (file.max.records=1
     at 100 TB). ``"sidecar"`` keeps the manifest distributed: each task appends
-    its entries to ``dest_dir/_manifest/part-<pid>.jsonl`` and the driver sees
-    only the object count (returns []). Sidecar shards are written by the same
+    its entries to ``dest_dir/_manifest/part-<pid>.jsonl`` and no per-object
+    row reaches the driver (returns []). Sidecar shards are written by the same
     task that wrote the objects, so a task retry rewrites both identically
-    (same names, same contents — idempotent like the objects themselves).
+    (same names, same contents — idempotent like the objects themselves). Any
+    other value raises ``ValueError``.
     """
+    if manifest not in ("driver", "sidecar"):
+        raise ValueError(f"unknown manifest mode {manifest!r}")
     ensure_utc_session(df.sparkSession)
     if storage is None:
         storage = ObjectStorage(dest_dir)
@@ -178,54 +185,34 @@ def write_batch(
 
     fmt = config.format_type
     if fmt in (FormatType.PARQUET, FormatType.AVRO, FormatType.ORC):
-        cols = [F.col("_file")] + [
-            F.col(f.value).alias(f.value) for f in config.output_fields
-        ]
-        ordered = (
-            prepared.select(*cols, F.col("offset").alias("_ord"))
-            .repartition(F.col("_file"))
-            .sortWithinPartitions("_file", "_ord")
-        )
-        if config.parquet_value_schema is not None and "value" in ordered.columns:
-            # schema'd value mode: the envelope's value becomes a TRUE NESTED
-            # RECORD (the reference's Avro-record value shape,
-            # AvroParquetIntegrationTest.java:136-349, README.md:357-405).
-            # Parsed AFTER rotation/chunk assignment, which key on the raw
-            # JSON's observed key set — the JSON analog of the embedded
-            # Avro-schema identity that drives the reference's rotation.
-            ordered = ordered.withColumn(
-                "value",
-                F.from_json(
-                    F.col("value").cast("string"), config.parquet_value_schema
-                ),
-            )
-        if fmt is FormatType.AVRO:
-            writer = _avro_partition_writer(storage, config, ordered.schema, fault)
-        else:
-            writer = _parquet_partition_writer(
-                storage, config, ordered.schema, fault
-            )
+        payload = [F.col(f.value).alias(f.value) for f in config.output_fields]
     else:
-        ordered = (
-            prepared.select(
-                F.col("_file"),
-                record_line_column(config, prepared.schema).alias("_line"),
-                F.col("offset").alias("_ord"),
-            )
-            .repartition(F.col("_file"))
-            .sortWithinPartitions("_file", "_ord")
+        payload = [record_line_column(config, prepared.schema).alias("_line")]
+    ordered = (
+        prepared.select(F.col("_file"), *payload, F.col("offset").alias("_ord"))
+        .repartition(F.col("_file"))
+        .sortWithinPartitions("_file", "_ord")
+        .drop("_ord")
+    )
+    if config.parquet_value_schema is not None and "value" in ordered.columns:
+        # schema'd value mode: the envelope's value becomes a TRUE NESTED
+        # RECORD (the reference's Avro-record value shape,
+        # AvroParquetIntegrationTest.java:136-349, README.md:357-405).
+        # Parsed AFTER rotation/chunk assignment, which key on the raw
+        # JSON's observed key set — the JSON analog of the embedded
+        # Avro-schema identity that drives the reference's rotation.
+        ordered = ordered.withColumn(
+            "value",
+            F.from_json(F.col("value").cast("string"), config.parquet_value_schema),
         )
-        writer = _text_partition_writer(storage, config, fault)
-
-    out_schema = "object string, records long"
-    if manifest == "sidecar":
-        # triggers the write; only (object, records) rows reach the driver,
-        # and the sidecar mode discards even those (shards hold the manifest)
-        ordered.mapInArrow(
-            _sidecar_manifest(writer, storage), out_schema
-        ).collect()
-        return []
-    rows = ordered.mapInArrow(_arrow_emit(writer), out_schema).collect()
+    if fmt is FormatType.AVRO:
+        encoder = _avro_encoder(config, ordered.schema)
+    elif fmt in (FormatType.PARQUET, FormatType.ORC):
+        encoder = _columnar_encoder(config, ordered.schema)
+    else:
+        encoder = _text_encoder(config)
+    writer = _write_objects(storage, encoder, fault, sidecar=manifest == "sidecar")
+    rows = ordered.mapInArrow(writer, "object string, records long").collect()
     return sorted((r[0], r[1]) for r in rows)
 
 
@@ -248,18 +235,80 @@ def _group_runs(batch) -> Iterator[tuple[str, int, int]]:
         yield uniq[idx[s]], s, e - s
 
 
-def _arrow_emit(writer):
-    """Adapt a batch writer (yields (name, count) tuples) to ``mapInArrow``'s
-    contract: one (object, records) record batch per task."""
+def _write_objects(storage: ObjectStorage, encoder, fault=None, sidecar: bool = False):
+    """``mapInArrow`` body for every format — the reference's flush contract
+    (``S3SinkTask.java:121-144``) written once.
+
+    Rows arrive clustered by ``_file`` (column 0) and offset-sorted. Each new
+    name opens its object with ``storage.open_output`` and builds an encoder
+    over the raw stream; every run of the name then appends its batch slice
+    (the payload columns after ``_file``). A group may span batches, so the
+    object stays open until the next name arrives or the input ends. Then
+    the encoder closes, ``fault(name)`` runs (test hook — a raise must leave
+    no partial object, ``S3OutputStreamTest``) and the object commits. Any
+    exception aborts the in-flight object, so no partial bytes are ever
+    visible under its final name (``S3OutputStream.java:101-132``).
+
+    The manifest is one (object, records) row per object, all in one batch
+    per task. With ``sidecar`` the same entries go to a
+    ``_manifest/part-<pid>.jsonl`` shard instead, committed after the task's
+    objects through the same storage client (any pyarrow.fs backend; a task
+    retry rewrites both identically), and the task yields a zero-row batch,
+    so nothing per object reaches the driver."""
 
     def run(batches) -> Iterator:
+        import json
+
         import pyarrow as pa
 
         names: list[str] = []
         counts: list[int] = []
-        for name, count in writer(batches):
-            names.append(name)
-            counts.append(count)
+        out = close = None  # in-flight object's storage context + encoder close
+
+        def commit():
+            nonlocal out
+            close()
+            if fault is not None:
+                fault(names[-1])
+            done, out = out, None
+            done.__exit__(None, None, None)  # commit (rename / complete upload)
+
+        try:
+            for batch in batches:
+                payload = pa.RecordBatch.from_arrays(
+                    batch.columns[1:], names=batch.schema.names[1:]
+                )
+                for name, start, length in _group_runs(batch):
+                    if not names or name != names[-1]:
+                        if out is not None:
+                            commit()
+                        cm = storage.open_output(name)
+                        raw = cm.__enter__()  # a failed open has nothing to abort
+                        out = cm
+                        append, close = encoder(raw, name)
+                        names.append(name)
+                        counts.append(0)
+                    append(payload.slice(start, length))
+                    counts[-1] += length
+            if out is not None:
+                commit()
+        except BaseException as e:
+            if out is not None:  # abort: delete temp / never complete final
+                out.__exit__(type(e), e, e.__traceback__)
+            raise
+        if sidecar:
+            if names:
+                from pyspark import TaskContext
+
+                pid = TaskContext.get().partitionId()
+                storage.write_bytes(
+                    f"_manifest/part-{pid:05d}.jsonl",
+                    "".join(
+                        json.dumps({"object": n, "records": c}) + "\n"
+                        for n, c in zip(names, counts)
+                    ).encode(),
+                )
+            names, counts = [], []
         yield pa.RecordBatch.from_arrays(
             [pa.array(names, type=pa.string()), pa.array(counts, type=pa.int64())],
             names=["object", "records"],
@@ -268,239 +317,113 @@ def _arrow_emit(writer):
     return run
 
 
-def _sidecar_manifest(writer, storage: ObjectStorage):
-    """Wrap a partition writer so each task streams its own manifest shard to
-    ``<dest>/_manifest/part-<partitionId>.jsonl`` — one JSON line per object,
-    nothing returned to the driver.
-
-    Shards go through the same ``ObjectStorage`` client as the data objects,
-    so the manifest works on any pyarrow.fs backend (``file:``/``s3://``/
-    ``hdfs://``) — no shared-mount assumption. The shard is buffered in the
-    task (one small JSON line per OBJECT the task wrote — bounded by the
-    manifest's own documented O(objects-per-task)) and committed atomically
-    after the task's objects, so a task retry rewrites both identically."""
-
-    def write(batches) -> Iterator:
-        import json
-
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        lines: list[str] = []
-        names: list[str] = []
-        counts: list[int] = []
-        for name, count in writer(batches):
-            lines.append(json.dumps({"object": name, "records": count}))
-            names.append(name)
-            counts.append(count)
-        if lines:
-            pid = TaskContext.get().partitionId()
-            storage.write_bytes(
-                f"_manifest/part-{pid:05d}.jsonl",
-                ("\n".join(lines) + "\n").encode(),
-            )
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(names, type=pa.string()), pa.array(counts, type=pa.int64())],
-            names=["object", "records"],
-        )
-
-    return write
+# Codec names inside the container formats, per CompressionType. ORC and Avro
+# have no gzip codec; both take the same DEFLATE stream (zlib / deflate).
+_CODECS = {  #            parquet   ORC             Avro
+    CompressionType.NONE: ("none", "uncompressed", "null"),
+    CompressionType.GZIP: ("gzip", "zlib", "deflate"),
+    CompressionType.SNAPPY: ("snappy", "snappy", "snappy"),
+    CompressionType.ZSTD: ("zstd", "zstd", "zstandard"),
+}
+_CODEC_COLUMN = {FormatType.PARQUET: 0, FormatType.ORC: 1, FormatType.AVRO: 2}
 
 
-def _text_partition_writer(storage: ObjectStorage, config: EngineConfig, fault=None):
-    """Streaming per-partition writer for CSV/JSONL/JSON over Arrow batches.
+def _codec(config: EngineConfig) -> str:
+    return _CODECS[config.file_compression][_CODEC_COLUMN[config.format_type]]
 
-    Rows arrive clustered by filename and sorted by offset; the writer holds
-    one open compressed stream per in-flight object. Each batch slice of a
-    group is concatenated with ONE C-level ``binary_join`` (an Arrow string
-    column is a contiguous buffer + offsets, so the join never touches rows
-    from Python) and written in a single call — memory is O(compression
-    buffer + one batch), never O(group). JSON's array framing ("[", ",\\n"
-    separators, "]") is byte-identical to the old per-row lookbehind form:
-    a group renders as "[\\n" + ",\\n".join(lines) + "\\n]\\n" across any
-    batch split.
 
-    Each object streams through ``storage.open_output`` — committed only on a
-    clean finish; any exception (including the ``fault`` test hook) aborts the
-    in-flight object so no partial bytes are visible under its final name
-    (``S3OutputStream.java:101-132`` abort parity).
-    """
+def _text_encoder(config: EngineConfig):
+    """CSV/JSONL/JSON: each slice of rendered ``_line`` strings is joined
+    with ONE C-level ``binary_join`` (an Arrow string column is a contiguous
+    buffer + offsets, so no row is touched from Python) and written into the
+    compressed stream in one call — memory is O(compression buffer + one
+    batch), never O(group). JSON frames a group as one array,
+    "[\\n" + ",\\n".join(lines) + "\\n]\\n", across any batch split."""
     compression = config.file_compression
-    is_json_array = config.format_type is FormatType.JSON
+    json_array = config.format_type is FormatType.JSON
 
-    def write(batches) -> Iterator[tuple[str, int]]:
+    def encoder(raw, name):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        current: str | None = None
-        cm = None  # storage.open_output context for the in-flight object
-        stream = None
-        count = 0
+        stream = open_compressed(raw, compression)
+        lead = b"[\n"  # JSON: the array opener, then the continuation separator
 
-        def join_slice(lines, sep: str) -> bytes:
-            la = pa.ListArray.from_arrays(
-                pa.array([0, len(lines)], type=pa.int32()), lines
-            )
-            return pc.binary_join(la, sep)[0].as_py().encode()
+        def append(rows):
+            nonlocal lead
+            lines = rows.column(0)
+            joined = pc.binary_join(
+                pa.ListArray.from_arrays(
+                    pa.array([0, len(lines)], type=pa.int32()), lines
+                ),
+                ",\n" if json_array else "\n",
+            )[0].as_py().encode()
+            if json_array:
+                stream.write(lead)
+                stream.write(joined)
+                lead = b",\n"
+            else:
+                stream.write(joined + b"\n")
 
-        def finish():
-            nonlocal cm, stream, count
-            if cm is None:
-                return None
-            if is_json_array:
+        def close():
+            if json_array:
                 stream.write(b"\n]\n")
-            stream.close()  # flush compressed tail into the raw stream
-            if fault is not None:
-                fault(current)  # raises → except below aborts via cm.__exit__
-            cm.__exit__(None, None, None)  # commit (rename / complete upload)
-            result = (current, count)
-            cm = stream = None
-            return result
+            stream.close()  # flush the compressed tail into the raw stream
 
-        try:
-            for batch in batches:
-                lines_col = batch.column(1)
-                for name, start, length in _group_runs(batch):
-                    if name != current:
-                        done = finish()
-                        if done:
-                            yield done
-                        current = name
-                        count = 0
-                        cm = storage.open_output(name)
-                        raw = cm.__enter__()
-                        stream = open_compressed(raw, compression)
-                        if is_json_array:
-                            stream.write(b"[\n")
-                    elif is_json_array:
-                        stream.write(b",\n")  # group continues across batches
-                    sl = lines_col.slice(start, length)
-                    if is_json_array:
-                        stream.write(join_slice(sl, ",\n"))
-                    else:
-                        stream.write(join_slice(sl, "\n") + b"\n")
-                    count += length
-            done = finish()
-            if done:
-                yield done
-        except BaseException as e:
-            if cm is not None:  # abort: delete temp / never complete final
-                cm.__exit__(type(e), e, e.__traceback__)
-                cm = None
-            raise
+        return append, close
 
-    return write
+    return encoder
 
 
-def _parquet_partition_writer(
-    storage: ObjectStorage, config: EngineConfig, schema, fault=None
-):
-    """Per-partition columnar writer (parquet, and — r8 engine extension —
-    ORC via ``pyarrow.orc``): buffers one group's rows into an Arrow table
-    and writes a single object with the reference's envelope column order
-    (README.md:357-405). A columnar container needs the whole row group
-    anyway, so per-group buffering matches the format's own memory model;
-    the ``file.max.records`` chunking bounds it.
+def _columnar_encoder(config: EngineConfig, schema):
+    """parquet, and ORC via ``pyarrow.orc``: a columnar container needs the
+    whole row group anyway, so the group's Arrow slices are buffered and
+    written as one table in the reference's envelope column order
+    (README.md:357-405); ``file.max.records`` chunking bounds the buffer.
 
-    ``schema`` is the prepared DataFrame's Spark schema (``_file``, envelope
-    fields, ``_ord``); the Arrow schema is derived from it explicitly so
+    ``schema`` is the Spark schema of the writer's input (``_file`` + the
+    envelope fields). The Arrow schema is derived from it explicitly, so
     all-null groups keep their declared types and nested-struct values
-    (``parquet_value_schema`` mode) round-trip losslessly. The arriving Arrow
-    batch slices are buffered per group and written directly (cast to the
-    declared schema, chunks combined so the column layout matches the old
-    single-array build — verified byte-identical); no value ever round-trips
-    through Python objects.
-    """
+    (``parquet_value_schema`` mode) round-trip losslessly; the buffered
+    slices are cast to it and their chunks combined, and no value ever
+    round-trips through Python objects."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
+    arrow_schema = to_arrow_schema(StructType(schema.fields[1:]))
+    codec = _codec(config)
     is_orc = config.format_type is FormatType.ORC
-    if is_orc:
-        # ORC's codec registry (pyarrow.orc): gzip maps to zlib — the same
-        # DEFLATE family, matching the avro writer's gzip→deflate mapping
-        compression = {
-            CompressionType.NONE: "uncompressed",
-            CompressionType.GZIP: "zlib",
-            CompressionType.SNAPPY: "snappy",
-            CompressionType.ZSTD: "zstd",
-        }[config.file_compression]
-    else:
-        compression = {
-            CompressionType.NONE: "none",
-            CompressionType.GZIP: "gzip",
-            CompressionType.SNAPPY: "snappy",
-            CompressionType.ZSTD: "zstd",
-        }[config.file_compression]
-    field_names = [f.value for f in config.output_fields]
-    envelope_schema = StructType([schema[n] for n in field_names])
-    arrow_schema = to_arrow_schema(envelope_schema)
-    n_fields = len(field_names)
 
-    def write(batches) -> Iterator[tuple[str, int]]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def encoder(raw, name):
+        parts: list = []
 
-        if is_orc:
-            import pyarrow.orc as pa_orc
+        def close():
+            import pyarrow as pa
 
-        current: str | None = None
-        parts: list = []  # envelope-column batch slices of the open group
-
-        def flush():
-            nonlocal parts
-            if current is None or not parts:
-                return None
             table = pa.Table.from_batches(parts)
             if table.schema != arrow_schema:
                 table = table.cast(arrow_schema)
             table = table.combine_chunks()
-            parts = []
-            with storage.open_output(current) as out:
-                if is_orc:
-                    pa_orc.write_table(table, out, compression=compression)
-                else:
-                    pq.write_table(table, out, compression=compression)
-                if fault is not None:
-                    fault(current)  # raises inside the context → abort, no object
-            return (current, table.num_rows)
+            if is_orc:
+                import pyarrow.orc as pa_orc
 
-        for batch in batches:
-            env = pa.RecordBatch.from_arrays(
-                [batch.column(i + 1) for i in range(n_fields)],
-                names=field_names,
-            )
-            for name, start, length in _group_runs(batch):
-                if name != current:
-                    done = flush()
-                    if done:
-                        yield done
-                    current = name
-                parts.append(env.slice(start, length))
-        done = flush()
-        if done:
-            yield done
+                pa_orc.write_table(table, raw, compression=codec)
+            else:
+                import pyarrow.parquet as pq
 
-    return write
+                pq.write_table(table, raw, compression=codec)
+
+        return parts.append, close
+
+    return encoder
 
 
-def _avro_partition_writer(storage: ObjectStorage, config: EngineConfig, schema, fault=None):
-    """Per-partition Avro OCF writer (engine extension — the format family's
-    fifth member beside CSV/JSONL/JSON/parquet). Rows arrive clustered by
-    filename and offset-sorted; each group streams through ``formats.avro.
+def _avro_encoder(config: EngineConfig, schema):
+    """Avro OCF (engine extension): rows stream through ``formats.avro.
     OCFWriter`` in 1000-record blocks — memory is O(block), never O(group).
-
-    Idempotence: the 16-byte sync marker is ``md5(object_name)``, so an
-    at-least-once replay rewrites a byte-identical object — the same
-    name-determinism contract as every other format (README.md:101-133).
-
-    Compression maps onto OCF codecs (compression lives INSIDE the container,
-    like parquet — no filename suffix): none→null, gzip→deflate (OCF has no
-    gzip codec; deflate is the identical DEFLATE stream minus the gzip
-    wrapper), snappy→snappy (+ the spec's CRC32 suffix), zstd→zstandard.
-
-    Abort-on-error parity: any exception (including the ``fault`` hook) exits
-    the storage context with the error, so no partial object is ever visible
-    under its final name (S3OutputStream.java:101-132)."""
+    The 16-byte sync marker is ``md5(object_name)``, so an at-least-once
+    replay rewrites a byte-identical object (README.md:101-133). Compression
+    lives inside the container, like parquet — no filename suffix."""
     from pyspark.sql.types import StructType
 
     from kafka_connector_s3_sink_spark.formats.avro import (
@@ -508,78 +431,25 @@ def _avro_partition_writer(storage: ObjectStorage, config: EngineConfig, schema,
         avro_schema_for_spark,
     )
 
-    codec = {
-        CompressionType.NONE: "null",
-        CompressionType.GZIP: "deflate",
-        CompressionType.SNAPPY: "snappy",
-        CompressionType.ZSTD: "zstandard",
-    }[config.file_compression]
-    field_names = [f.value for f in config.output_fields]
-    envelope = StructType([schema[n] for n in field_names])
-    avro_schema = avro_schema_for_spark(envelope)
+    avro_schema = avro_schema_for_spark(StructType(schema.fields[1:]))
+    codec = _codec(config)
 
-    n_fields = len(field_names)
-
-    def write(batches) -> Iterator[tuple[str, int]]:
+    def encoder(raw, name):
         import hashlib
 
-        current: str | None = None
-        cm = None
-        ocf = None
-        count = 0
+        ocf = OCFWriter(
+            raw, avro_schema, codec=codec, sync_marker=hashlib.md5(name.encode()).digest()
+        )
 
-        def finish():
-            nonlocal cm, ocf, count
-            if cm is None:
-                return None
-            ocf.close()
-            if fault is not None:
-                fault(current)  # raises → except below aborts via cm.__exit__
-            cm.__exit__(None, None, None)
-            result = (current, count)
-            cm = ocf = None
-            return result
+        def append(rows):
+            # one Arrow→Python conversion per slice; the OCF block encoder
+            # itself is row-oriented
+            for record in rows.to_pylist():
+                ocf.append(record)
 
-        try:
-            for batch in batches:
-                # one columnar→python conversion per batch (Arrow gives
-                # bytes/dict/list natively — the old pickled-Row path needed
-                # a recursive to_py per value); the OCF block encoder itself
-                # is row-oriented, so rows are zipped from the converted
-                # columns per group slice.
-                cols = [
-                    batch.column(i + 1).to_pylist() for i in range(n_fields)
-                ]
-                for name, start, length in _group_runs(batch):
-                    if name != current:
-                        done = finish()
-                        if done:
-                            yield done
-                        current = name
-                        count = 0
-                        cm = storage.open_output(name)
-                        raw = cm.__enter__()
-                        ocf = OCFWriter(
-                            raw,
-                            avro_schema,
-                            codec=codec,
-                            sync_marker=hashlib.md5(name.encode()).digest(),
-                        )
-                    for vals in zip(
-                        *(c[start : start + length] for c in cols)
-                    ):
-                        ocf.append(dict(zip(field_names, vals)))
-                    count += length
-            done = finish()
-            if done:
-                yield done
-        except BaseException as e:
-            if cm is not None:  # abort: delete temp / never complete final
-                cm.__exit__(type(e), e, e.__traceback__)
-                cm = None
-            raise
+        return append, ocf.close
 
-    return write
+    return encoder
 
 
 def write_spark_native(

@@ -8,7 +8,6 @@ Files" chapter); the reference's own format family stops at parquet
 import hashlib
 import io
 import json
-import os
 
 import pytest
 from pyspark.sql import Row
@@ -181,22 +180,6 @@ def test_write_batch_avro_binary_and_headers(spark, tmp_path):
         "key": b"\x00\x01", "value": b"\xff", "offset": 0, "timestamp": None,
         "headers": [{"key": "h1", "value": b"v1"}, {"key": "h1", "value": None}],
     }]
-
-
-def test_write_batch_avro_abort_on_error_leaves_no_partial(spark, tmp_path):
-    cfg = EngineConfig(
-        format_type=FormatType.AVRO, file_compression=CompressionType.NONE
-    )
-    df = spark.createDataFrame(_rows(), KAFKA_RECORD_SCHEMA)
-
-    def fault(name):
-        if name == "t-1-100":
-            raise RuntimeError("mid-write fault")
-
-    with pytest.raises(Exception, match="mid-write fault"):
-        write_batch(df, cfg, str(tmp_path), fault=fault)
-    present = {p for p in os.listdir(tmp_path) if not p.startswith(".")}
-    assert "t-1-100" not in present  # aborted object never became visible
 
 
 def test_readback_avro_roundtrip_and_route(spark, tmp_path):

@@ -4,8 +4,6 @@ template names, no compression suffix), Spark-native read-back, footer
 validation with corrupt-object routing. Like Avro, ORC is Python-API-only:
 the reference-parity property path keeps its four-format message."""
 
-import os
-
 import pytest
 from pyspark.sql import Row
 
@@ -95,21 +93,3 @@ def test_readback_orc_roundtrip_and_route(spark, tmp_path):
     good = routed.filter("decode_error is null").collect()
     assert len(bad) == 1 and bad[0].object_name == "t-0-0"
     assert len(good) == 3
-
-
-def test_orc_abort_on_error_leaves_no_partial(spark, tmp_path):
-    cfg = EngineConfig(
-        format_type=FormatType.ORC,
-        file_compression=CompressionType.NONE,
-        output_fields=FIELDS,
-    )
-    df = spark.createDataFrame(_rows(), KAFKA_RECORD_SCHEMA)
-
-    def fault(name):
-        if name == "t-1-100":
-            raise RuntimeError("mid-write fault")
-
-    with pytest.raises(Exception, match="mid-write fault"):
-        write_batch(df, cfg, str(tmp_path), fault=fault)
-    present = {p for p in os.listdir(tmp_path) if not p.startswith(".")}
-    assert "t-1-100" not in present

@@ -139,15 +139,23 @@ def FailOnObject(name):
     return fault
 
 
-@pytest.mark.parametrize("fmt", [FormatType.CSV, FormatType.PARQUET])
-def test_failed_write_leaves_no_partial_object(spark, tmp_path, fmt):
-    """Kill the writer mid-batch: the failing object must not exist under its
-    final name (abort contract), and no hidden temp may linger."""
+@pytest.mark.parametrize("fmt,mode", [
+    pytest.param(fmt, mode, id=fmt.value if mode == "rename" else f"{fmt.value}-{mode}")
+    for mode in ("rename", "direct")
+    for fmt in (FormatType.CSV, FormatType.JSON, FormatType.PARQUET,
+                FormatType.AVRO, FormatType.ORC)
+])
+def test_failed_write_leaves_no_partial_object(spark, tmp_path, fmt, mode):
+    """Kill the writer mid-batch, for every encoder in both commit modes: the
+    failing object must not exist under its final name (abort contract), and
+    no hidden temp may linger."""
     cfg = EngineConfig(format_type=fmt, file_compression=CompressionType.GZIP
-                       if fmt is FormatType.CSV else CompressionType.NONE)
+                       if fmt in (FormatType.CSV, FormatType.JSON)
+                       else CompressionType.NONE)
     with pytest.raises(Exception, match="injected failure"):
         write_batch(records_df(spark), cfg, str(tmp_path),
-                    fault=FailOnObject("t-1-100" + (".gz" if fmt is FormatType.CSV else "")))
+                    storage=ObjectStorage(str(tmp_path), mode=mode),
+                    fault=FailOnObject("t-1-100" + cfg.filename_extension))
     names = {f for f in os.listdir(tmp_path)}
     assert not any("t-1-100" in n for n in names), names
     assert not any(".inprogress-" in n for n in names), names

@@ -454,6 +454,48 @@ def test_sidecar_manifest_mode(spark, tmp_path):
     assert read_lines(tmp_path, "t-1-10", CompressionType.NONE) == ["v-1-10"]
 
 
+def test_write_objects_sidecar_yields_no_rows(tmp_path, monkeypatch):
+    """The writer loop in sidecar mode, fed in-memory Arrow batches: it
+    yields one zero-row batch (nothing per object for the driver) and its
+    manifest shard names every object with its record count, including a
+    group that spans two batches."""
+    import json
+
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
+    from kafka_connector_s3_sink_spark.sinks.writer import _text_encoder, _write_objects
+
+    class Task:
+        def partitionId(self):
+            return 3
+
+    monkeypatch.setattr(TaskContext, "get", classmethod(lambda cls: Task()))
+    batches = [
+        pa.RecordBatch.from_pydict({"_file": ["a", "a", "b"], "_line": ["1", "2", "3"]}),
+        pa.RecordBatch.from_pydict({"_file": ["b", "c"], "_line": ["4", "5"]}),
+    ]
+    encoder = _text_encoder(EngineConfig(file_compression=CompressionType.NONE))
+    run = _write_objects(ObjectStorage(str(tmp_path)), encoder, sidecar=True)
+    assert [b.num_rows for b in run(iter(batches))] == [0]
+    shard = (tmp_path / "_manifest" / "part-00003.jsonl").read_text()
+    assert [json.loads(line) for line in shard.splitlines()] == [
+        {"object": "a", "records": 2},
+        {"object": "b", "records": 2},
+        {"object": "c", "records": 1},
+    ]
+    assert (tmp_path / "b").read_text() == "3\n4\n"
+
+
+def test_unknown_manifest_mode_rejected(spark, tmp_path):
+    """A typo must not silently fall back to driver mode."""
+    with pytest.raises(ValueError, match="unknown manifest mode 'sidcar'"):
+        write_batch(records_df(spark, []), EngineConfig(), str(tmp_path),
+                    manifest="sidcar")
+    assert not any(tmp_path.iterdir())
+
+
 def test_groups_spanning_arrow_batches_r16(spark, tmp_path):
     """r16 (Arrow writer): a group larger than one Arrow record batch must
     produce identical object content to the single-batch case — the
@@ -483,6 +525,12 @@ def test_groups_spanning_arrow_batches_r16(spark, tmp_path):
                 ("avro", dict(format_type=FormatType.AVRO,
                               file_compression=CompressionType.NONE,
                               output_fields=(OutputField.KEY, OutputField.VALUE))),
+                ("orc", dict(format_type=FormatType.ORC,
+                             output_fields=(OutputField.KEY, OutputField.VALUE))),
+                ("csv_gzip", dict(file_compression=CompressionType.GZIP)),
+                ("avro_zstd", dict(format_type=FormatType.AVRO,
+                                   file_compression=CompressionType.ZSTD,
+                                   output_fields=(OutputField.KEY, OutputField.VALUE))),
             ):
                 dest = tmp_path / f"{fmt}-{tag}"
                 written = write_batch(
@@ -494,7 +542,7 @@ def test_groups_spanning_arrow_batches_r16(spark, tmp_path):
                 }
         finally:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    for fmt in ("json", "csv", "parquet", "avro"):
+    for fmt in ("json", "csv", "parquet", "avro", "orc", "csv_gzip", "avro_zstd"):
         assert outputs[(fmt, "small")] == outputs[(fmt, "big")], fmt
     # JSON array framing stays a single well-formed array across the carry
     (name, data), = (
