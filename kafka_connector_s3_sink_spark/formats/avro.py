@@ -17,6 +17,13 @@ Confluent wire framing (magic byte 0x00 + 4-byte big-endian schema id before
 the Avro body) is stripped when requested — the shape the reference's
 AvroConverter consumes.
 
+The row codec (``_encode``/``encode``/``decode``) encodes or decodes one
+value at a time; it is the decode side, the fixture encoder and the
+reference the sink's encoder is tested against. The sink writes OCF through
+the column encoder ``encode_rows``: a whole Arrow slice at once, int/long as
+zigzag varints from one numpy byte matrix and string/bytes straight from the
+Arrow buffers, with any other column falling back to ``_encode`` per value.
+
 Spark integration (``decode_avro_column``) is Arrow-batched ``mapInPandas``:
 Python decodes each payload to a compact JSON document, the JVM parses it
 with ``from_json`` against the schema derived by ``spark_type_for`` —
@@ -482,6 +489,122 @@ def encode(value: Any, schema: Any, confluent_schema_id: int | None = None) -> b
 
 
 # ---------------------------------------------------------------------------
+# column-wise encode (the sink's OCF path: one Arrow slice per call)
+
+
+def _varints(z, branch=None, present=None):
+    """``large_binary`` Arrow array of each uint64 ``z``'s Avro varint, cut
+    from one (n, 10) byte matrix masked to each value's length. ``branch``
+    (a per-row union index byte) goes first; a row whose ``present`` is False
+    keeps only that byte."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = len(z)
+    lead = 0 if branch is None else 1
+    mat = np.empty((n, lead + 10), np.uint8)
+    nbytes = np.ones(n, np.int64)
+    for k in range(10):
+        digits = z >> np.uint64(7 * k)
+        mat[:, lead + k] = digits & np.uint64(0x7F)
+        if k:
+            nbytes += digits != 0
+    mat[:, lead:] |= (np.arange(10) < (nbytes - 1)[:, None]).astype(np.uint8) << 7
+    width = nbytes
+    if branch is not None:
+        mat[:, 0] = branch
+        width = np.where(present, nbytes + 1, 1)
+    offsets = np.zeros(n + 1, np.int64)
+    np.cumsum(width, out=offsets[1:])
+    data = mat[np.arange(lead + 10) < width[:, None]]
+    return pa.Array.from_buffers(
+        pa.large_binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(data)]
+    )
+
+
+def _column_parts(col, ftype, names: dict[str, Any]) -> list:
+    """One field's Avro bytes per row, as ``large_binary`` arrays whose
+    row-wise concatenation is the encoding (a null array element stands for
+    no bytes). ``int``/``long``/``string``/``bytes`` fields, plain or as a
+    two-branch union with ``"null"``, are encoded from the Arrow buffers;
+    any other field goes through ``_encode`` one value at a time."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ftype = _resolve(ftype, names)
+    inner = ftype
+    branch = present = None
+    if isinstance(ftype, list) and len(ftype) == 2 and "null" in ftype:
+        ni = ftype.index("null")
+        inner = _resolve(ftype[1 - ni], names)
+        present = pc.is_valid(col).to_numpy(zero_copy_only=False)
+        branch = np.where(present, 2 * (1 - ni), 2 * ni).astype(np.uint8)
+    at = col.type
+    fast = (
+        (inner in ("int", "long") and pa.types.is_signed_integer(at))
+        or (inner == "string" and (pa.types.is_string(at) or pa.types.is_large_string(at)))
+        or (inner == "bytes" and (pa.types.is_binary(at) or pa.types.is_large_binary(at)))
+    )
+    if not fast:
+
+        def encode_one(value):
+            out = io.BytesIO()
+            _encode(value, ftype, out, names)
+            return out.getvalue()
+
+        return [pa.array(map(encode_one, col.to_pylist()), pa.large_binary())]
+    if branch is None and col.null_count:
+        raise AvroError(f"null value for non-nullable {inner!r} field")
+    if inner in ("int", "long"):
+        v = pc.fill_null(col, 0).cast(pa.int64()).to_numpy()
+        zigzag = (v.view(np.uint64) << np.uint64(1)) ^ (v >> 63).view(np.uint64)
+        return [_varints(zigzag, branch, present)]
+    sizes = pc.fill_null(pc.binary_length(col), 0).cast(pa.int64()).to_numpy()
+    return [
+        _varints(sizes.view(np.uint64) << np.uint64(1), branch, present),
+        col.cast(pa.large_binary()),
+    ]
+
+
+def encode_rows(batch, schema: Any):
+    """Avro binary encoding of every row of an Arrow record batch (or
+    table) under a record ``schema`` whose field names are the batch's column
+    names, in order. Returns ``(offsets, data)``: record i is
+    ``data[offsets[i]:offsets[i + 1]]``, byte-identical to ``encode`` of the
+    row as a dict.
+
+    Works column by column: each field's per-row bytes come from
+    ``_column_parts`` and one C-level ``binary_join_element_wise`` lays them
+    out in row order, so no flat-typed value becomes a Python object."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = _registry(schema)
+    fields = schema["fields"]
+    if [f["name"] for f in fields] != batch.schema.names:
+        raise AvroError(
+            f"schema fields {[f['name'] for f in fields]} do not match "
+            f"batch columns {batch.schema.names}"
+        )
+    n = batch.num_rows
+    parts = [
+        part
+        for f, col in zip(fields, batch.columns)
+        for part in _column_parts(col, f["type"], names)
+    ]
+    if not parts:
+        return np.zeros(n + 1, np.int64), memoryview(b"")
+    joined = pc.binary_join_element_wise(
+        *parts, pa.scalar(b"", pa.large_binary()), null_handling="skip"
+    )
+    offsets = np.frombuffer(joined.buffers()[1], np.int64, n + 1)
+    data = joined.buffers()[2] or b""
+    return offsets, memoryview(data).cast("B")[: offsets[-1]]
+
+
+# ---------------------------------------------------------------------------
 # Avro → Spark mapping and the DataFrame-level converter
 
 
@@ -936,11 +1059,24 @@ class OCFWriter:
         out.write(header.getvalue())
 
     def append(self, datum: Any) -> None:
-        _encode(datum, self._schema, self._buf, self._names)
-        self._count += 1
-        self.total_records += 1
-        if self._count >= self._block_records:
-            self._flush_block()
+        buf = io.BytesIO()
+        _encode(datum, self._schema, buf, self._names)
+        self.append_encoded((0, buf.tell()), buf.getbuffer())
+
+    def append_encoded(self, offsets, data) -> None:
+        """Append ``len(offsets) - 1`` already-encoded records (record i is
+        ``data[offsets[i]:offsets[i + 1]]``, as ``encode_rows`` returns).
+        Blocks are cut every ``block_records`` records however the calls
+        split the stream."""
+        i, n = 0, len(offsets) - 1
+        while i < n:
+            take = min(n - i, self._block_records - self._count)
+            self._buf.write(data[int(offsets[i]) : int(offsets[i + take])])
+            i += take
+            self._count += take
+            self.total_records += take
+            if self._count >= self._block_records:
+                self._flush_block()
 
     def _flush_block(self) -> None:
         if self._count == 0:

@@ -25,7 +25,9 @@ group's slice of a batch (its payload columns), ``close`` finishes the object's
 bytes into ``raw``. Text (CSV/JSONL/JSON) joins each slice with one C-level
 ``binary_join`` into a compressed stream, so memory is one compression buffer;
 columnar (parquet/ORC) buffers the group's Arrow slices and writes one table;
-Avro streams rows into OCF blocks. No value round-trips through pickled Rows.
+Avro encodes each slice column by column (numpy over the Arrow buffers) and
+frames the encoded rows into OCF blocks. No value round-trips through pickled
+Rows.
 Object I/O goes through ``sinks.storage.ObjectStorage`` (pyarrow.fs), so
 ``dest_dir`` may be a local path, ``file://``, ``s3://``, ``gs://`` or
 ``hdfs://`` URI; every object commit is atomic (temp+rename, or direct PUT on
@@ -419,16 +421,20 @@ def _columnar_encoder(config: EngineConfig, schema):
 
 
 def _avro_encoder(config: EngineConfig, schema):
-    """Avro OCF (engine extension): rows stream through ``formats.avro.
-    OCFWriter`` in 1000-record blocks — memory is O(block), never O(group).
-    The 16-byte sync marker is ``md5(object_name)``, so an at-least-once
-    replay rewrites a byte-identical object (README.md:101-133). Compression
-    lives inside the container, like parquet — no filename suffix."""
+    """Avro OCF (engine extension): each slice is encoded column-wise by
+    ``formats.avro.encode_rows`` (numpy over the Arrow buffers; only nested
+    columns such as ``headers`` go value by value) and framed by
+    ``OCFWriter`` into 1000-record blocks that may straddle slices — memory
+    is O(slice + block), never O(group). The 16-byte sync marker is
+    ``md5(object_name)``, so an at-least-once replay rewrites a
+    byte-identical object (README.md:101-133). Compression lives inside the
+    container, like parquet — no filename suffix."""
     from pyspark.sql.types import StructType
 
     from kafka_connector_s3_sink_spark.formats.avro import (
         OCFWriter,
         avro_schema_for_spark,
+        encode_rows,
     )
 
     avro_schema = avro_schema_for_spark(StructType(schema.fields[1:]))
@@ -442,10 +448,7 @@ def _avro_encoder(config: EngineConfig, schema):
         )
 
         def append(rows):
-            # one Arrow→Python conversion per slice; the OCF block encoder
-            # itself is row-oriented
-            for record in rows.to_pylist():
-                ocf.append(record)
+            ocf.append_encoded(*encode_rows(rows, avro_schema))
 
         return append, ocf.close
 

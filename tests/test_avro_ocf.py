@@ -110,6 +110,133 @@ def test_ocf_detects_corruption():
         A.read_ocf(bytes(data[: len(data) // 2]))  # truncated
 
 
+_HEADERS = {
+    "type": "array",
+    "items": ["null", {
+        "type": "record",
+        "name": "header",
+        "fields": [
+            {"name": "key", "type": "string"},
+            {"name": "value", "type": ["null", "bytes"]},
+        ],
+    }],
+}
+SINK_SCHEMA = {
+    "type": "record",
+    "name": "sink",
+    "fields": [
+        {"name": "key", "type": ["null", "string"]},
+        {"name": "bkey", "type": ["null", "bytes"]},
+        {"name": "offset", "type": "long"},
+        {"name": "timestamp", "type": ["null", "long"]},
+        {"name": "partition", "type": "int"},
+        {"name": "value", "type": ["null", "bytes"]},
+        {"name": "svalue", "type": ["null", "string"]},
+        {"name": "headers", "type": ["null", _HEADERS]},
+    ],
+}
+_LONGS = [0, 1, -1, 63, -63, 64, -64, 8191, -8191, 8192, -8192,
+          2**63 - 1, -(2**63)]
+_TEXTS = [None, "", "a", "é", "漢字", "🙂x", "plain ascii " * 20]
+_HEADER_VALUES = [
+    None,
+    [],
+    [{"key": "h", "value": None}],
+    [{"key": "é", "value": b"\x00\xff"}, None, {"key": "", "value": b""}],
+]
+
+
+def _sink_batch(all_null=False):
+    import pyarrow as pa
+
+    rows = [
+        {
+            "key": _TEXTS[i % len(_TEXTS)],
+            "bkey": None if i % 5 == 0 else bytes(range(i % 7)),
+            "offset": _LONGS[i % len(_LONGS)],
+            "timestamp": None if i % 3 == 0 else _LONGS[(i * 5) % len(_LONGS)],
+            "partition": [0, 1, -1, 2**31 - 1, -(2**31)][i % 5],
+            "value": None if i % 4 == 0 else b"\x80" * (i % 200),
+            "svalue": _TEXTS[(i * 3) % len(_TEXTS)],
+            "headers": _HEADER_VALUES[i % len(_HEADER_VALUES)],
+        }
+        for i in range(60)
+    ]
+    if all_null:
+        rows = [
+            {k: v if k in ("offset", "partition") else None for k, v in r.items()}
+            for r in rows
+        ]
+    header = pa.struct([("key", pa.string()), ("value", pa.binary())])
+    schema = pa.schema([
+        ("key", pa.string()), ("bkey", pa.binary()), ("offset", pa.int64()),
+        ("timestamp", pa.int64()), ("partition", pa.int32()),
+        ("value", pa.binary()), ("svalue", pa.string()),
+        ("headers", pa.list_(header)),
+    ])
+    return pa.RecordBatch.from_pylist(rows, schema=schema)
+
+
+@pytest.mark.parametrize(
+    "all_null,start,length",
+    [(False, 0, 60), (False, 7, 41), (False, 59, 1), (False, 3, 0), (True, 5, 20)],
+)
+def test_encode_rows_matches_row_codec(all_null, start, length):
+    """The column encoder is byte-identical to the row codec for every
+    column type the sink sends, on slices with a nonzero Arrow offset (the
+    writer passes ``payload.slice(start, length)``), including a slice whose
+    nullable columns are all null."""
+    import numpy as np
+
+    batch = _sink_batch(all_null).slice(start, length)
+    offsets, data = A.encode_rows(batch, SINK_SCHEMA)
+    want = [A.encode(r, SINK_SCHEMA) for r in batch.to_pylist()]
+    assert bytes(data) == b"".join(want)
+    assert offsets.tolist() == np.cumsum([0] + [len(w) for w in want]).tolist()
+
+
+def test_ocf_append_encoded_straddles_slices():
+    """One block-framing path: slices of 1, 2, 4 and 5 rows through
+    ``append_encoded`` cut 3-record blocks across slice boundaries and end
+    in a partial block, exactly like row-by-row ``append``."""
+    batch = _sink_batch().slice(2, 12)
+    rows = batch.to_pylist()
+
+    def ocf(feed):
+        out = io.BytesIO()
+        w = A.OCFWriter(out, SINK_SCHEMA, codec="deflate", sync_marker=SYNC,
+                        block_records=3)
+        feed(w)
+        w.close()
+        assert w.total_records == 12
+        return out.getvalue()
+
+    def by_row(w):
+        for r in rows:
+            w.append(r)
+
+    def by_slice(w):
+        start = 0
+        for size in (1, 2, 4, 5):
+            w.append_encoded(*A.encode_rows(batch.slice(start, size), SINK_SCHEMA))
+            start += size
+
+    data = ocf(by_slice)
+    assert data == ocf(by_row)
+    assert A.read_ocf(data)[1] == rows
+
+
+def test_encode_rows_rejects_column_name_mismatch():
+    batch = _sink_batch()
+    renamed = batch.rename_columns(
+        ["offset", "bkey", "key"] + batch.schema.names[3:]
+    )
+    with pytest.raises(A.AvroError, match="do not match"):
+        A.encode_rows(renamed, SINK_SCHEMA)
+    with pytest.raises(A.AvroError, match="do not match"):
+        A.encode_rows(batch.drop_columns(["headers"]), SINK_SCHEMA)
+
+
 def test_property_path_rejects_avro_with_reference_message():
     """Reference parity: the property surface lists only the reference's four
     formats (S3SinkConfigTest.java:772-782); avro is Python-API-only."""

@@ -17,7 +17,10 @@ from kafka_connector_s3_sink_spark.config import (
     OutputField,
 )
 from kafka_connector_s3_sink_spark.formats.compression import read_compressed
-from kafka_connector_s3_sink_spark.records import KAFKA_RECORD_SCHEMA
+from kafka_connector_s3_sink_spark.records import (
+    KAFKA_RECORD_SCHEMA,
+    KAFKA_RECORD_SCHEMA_BINARY,
+)
 from kafka_connector_s3_sink_spark.sinks.writer import write_batch
 
 
@@ -500,8 +503,12 @@ def test_groups_spanning_arrow_batches_r16(spark, tmp_path):
     """r16 (Arrow writer): a group larger than one Arrow record batch must
     produce identical object content to the single-batch case — the
     cross-batch carry is the new seam (JSON's ",\n" continuation separator,
-    parquet's multi-slice buffer, avro's open OCF stream)."""
+    parquet's multi-slice buffer, avro's open OCF stream). The binary Avro
+    input also carries headers, the one column encoded value by value beside
+    the column-wise key/value bytes."""
     import json as _json
+
+    from kafka_connector_s3_sink_spark.formats.avro import read_ocf
 
     rows = [
         Row(topic="t", partition=0, offset=i, key=f"k{i}",
@@ -511,6 +518,18 @@ def test_groups_spanning_arrow_batches_r16(spark, tmp_path):
         Row(topic="u", partition=0, offset=100 + i, key=f"k{i}",
             value=f"w{i}", timestamp=2000 + i, headers=None)
         for i in range(7)
+    ]
+
+    def headers(offset):
+        if offset % 5 == 0:
+            return []
+        return [Row(key="h", value=b"\x00\xff" * (offset % 3)), Row(key="n", value=None)]
+
+    binary_rows = [
+        Row(topic=r.topic, partition=r.partition, offset=r.offset,
+            key=r.key.encode(), value=r.value.encode(), timestamp=r.timestamp,
+            headers=headers(r.offset))
+        for r in rows
     ]
     outputs = {}
     for tag, batch_rows in (("small", 4), ("big", 10000)):
@@ -531,19 +550,37 @@ def test_groups_spanning_arrow_batches_r16(spark, tmp_path):
                 ("avro_zstd", dict(format_type=FormatType.AVRO,
                                    file_compression=CompressionType.ZSTD,
                                    output_fields=(OutputField.KEY, OutputField.VALUE))),
+                ("avro_binary_headers", dict(
+                    format_type=FormatType.AVRO,
+                    file_compression=CompressionType.ZSTD,
+                    output_fields=(OutputField.KEY, OutputField.VALUE,
+                                   OutputField.HEADERS))),
             ):
                 dest = tmp_path / f"{fmt}-{tag}"
-                written = write_batch(
-                    records_df(spark, rows), EngineConfig(**cfgkw), str(dest)
+                df = (
+                    spark.createDataFrame(binary_rows, KAFKA_RECORD_SCHEMA_BINARY)
+                    if fmt == "avro_binary_headers"
+                    else records_df(spark, rows)
                 )
+                written = write_batch(df, EngineConfig(**cfgkw), str(dest))
                 assert [w[1] for w in written] == [25, 7]
                 outputs[(fmt, tag)] = {
                     n: (dest / n).read_bytes() for n, _ in written
                 }
         finally:
             spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-    for fmt in ("json", "csv", "parquet", "avro", "orc", "csv_gzip", "avro_zstd"):
+    for fmt in ("json", "csv", "parquet", "avro", "orc", "csv_gzip", "avro_zstd",
+                "avro_binary_headers"):
         assert outputs[(fmt, "small")] == outputs[(fmt, "big")], fmt
+    for name, data in outputs[("avro_binary_headers", "small")].items():
+        _, records = read_ocf(data)
+        want = [r for r in binary_rows if name.startswith(f"{r.topic}-")]
+        assert [(d["key"], d["value"]) for d in records] == [
+            (r.key, r.value) for r in want
+        ]
+        assert [d["headers"] for d in records] == [
+            [h.asDict() for h in r.headers] for r in want
+        ]
     # JSON array framing stays a single well-formed array across the carry
     (name, data), = (
         (n, d) for n, d in outputs[("json", "small")].items() if n.startswith("t-")
