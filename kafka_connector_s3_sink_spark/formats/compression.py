@@ -3,9 +3,7 @@
 The reference wraps its S3 output stream in a compressor
 (``S3SinkConfig.java:802-813``; extensions ``S3SinkTask.java:204``). Here the
 text-format writer streams through the same codecs. gzip comes from the
-stdlib; zstd/snappy use pyarrow's codecs (always present in this
-environment); each is import-gated so a missing codec degrades with a clear
-error instead of an import crash.
+stdlib; zstd/snappy use pyarrow's codecs.
 """
 
 from __future__ import annotations
@@ -14,20 +12,9 @@ import gzip
 import io
 from typing import BinaryIO
 
+import pyarrow as pa
+
 from kafka_connector_s3_sink_spark.config import CompressionType
-
-try:
-    import pyarrow as pa
-
-    _HAVE_ARROW = True
-except ImportError:  # pragma: no cover
-    _HAVE_ARROW = False
-
-
-def _arrow_codec(name: str):
-    if not _HAVE_ARROW:
-        raise RuntimeError(f"{name} compression requires pyarrow, which is not installed")
-    return pa.Codec(name)
 
 
 def compress_bytes(data: bytes, compression: CompressionType) -> bytes:
@@ -39,8 +26,7 @@ def compress_bytes(data: bytes, compression: CompressionType) -> bytes:
         with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
             gz.write(data)
         return buf.getvalue()
-    codec = _arrow_codec(compression.value)
-    return codec.compress(data, asbytes=True)
+    return pa.Codec(compression.value).compress(data, asbytes=True)
 
 
 def _snappy_uvarint(data: bytes) -> int:
@@ -60,11 +46,10 @@ def decompress_bytes(data: bytes, compression: CompressionType) -> bytes:
     if compression is CompressionType.GZIP:
         return gzip.decompress(data)
     if compression is CompressionType.ZSTD:
-        if not _HAVE_ARROW:
-            raise RuntimeError("zstd requires pyarrow")
         return pa.CompressedInputStream(pa.BufferReader(data), "zstd").read()
-    codec = _arrow_codec(compression.value)
-    return codec.decompress(data, decompressed_size=_snappy_uvarint(data), asbytes=True)
+    return pa.Codec(compression.value).decompress(
+        data, decompressed_size=_snappy_uvarint(data), asbytes=True
+    )
 
 
 class _CompressedWriter:
@@ -88,8 +73,6 @@ class _CompressedWriter:
             self._stream = sink
             self._buffer = None
         elif compression is CompressionType.ZSTD:
-            if not _HAVE_ARROW:
-                raise RuntimeError("zstd requires pyarrow")
             self._stream = pa.CompressedOutputStream(sink, "zstd")
             self._buffer = None
         else:

@@ -36,13 +36,3 @@ def record_line_column(
     if config.format_type in (FormatType.JSONL, FormatType.JSON):
         return json_object_column(config, schema)
     raise ValueError(f"{config.format_type} is not a line-rendered format")
-
-
-def assemble_json_array(lines: list[str]) -> list[str]:
-    """Wrap rendered object lines into the reference's JSON-array file shape:
-    '[' line, each element line with a trailing comma except the last, ']' line."""
-    out = ["["]
-    for i, line in enumerate(lines):
-        out.append(line + "," if i < len(lines) - 1 else line)
-    out.append("]")
-    return out

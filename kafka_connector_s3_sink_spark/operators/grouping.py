@@ -25,18 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_connector_s3_sink_spark.config import EngineConfig
-from kafka_connector_s3_sink_spark.template import GrouperType, key_string_column
-
-
-def with_group_key(
-    df: DataFrame, config: EngineConfig, clock: Column | None = None
-) -> DataFrame:
-    """Add the grouping-key columns for the configured template as ``_gk_*``."""
-    cols = config.template.group_key_columns(clock=clock, timezone=config.timestamp_timezone)
-    out = df
-    for i, c in enumerate(cols):
-        out = out.withColumn(f"_gk_{i}", c)
-    return out
+from kafka_connector_s3_sink_spark.template import key_string_column
 
 
 def group_start_offsets(df: DataFrame) -> DataFrame:

@@ -42,13 +42,6 @@ def base64_std(col: Column) -> Column:
     return F.regexp_replace(F.base64(col), "[\\r\\n]", "")
 
 
-def select_output_fields(df: DataFrame, config: EngineConfig) -> DataFrame:
-    """Ordered subset of {key,value,offset,timestamp,headers}; order is preserved
-    in the output (golden: value,key,timestamp,offset,headers → headers at index 4,
-    S3SinkTaskTest.java:183,218)."""
-    return df.select(*[F.col(f.value) for f in config.output_fields])
-
-
 def encoded_field(
     field: OutputField, config: EngineConfig, schema: T.StructType | None = None
 ) -> Column:

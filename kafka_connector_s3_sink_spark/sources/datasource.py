@@ -9,33 +9,43 @@ Python call. The trade is explicit: rows materialize in Python (the Data
 Source API's execution model), so per-byte cost is higher than the
 column-expression path; the partition planning is identical in spirit —
 one ``InputPartition`` per object, so a billion-object store fans out to
-exactly as many tasks as objects and each task streams one object through
-the write-side codecs.
+exactly as many tasks as objects.
+
+Decoding is not this module's: each task reads one object and hands it to
+the decoder ``read_sink_objects`` uses too — ``sources.objects``'
+``object_lines`` (write-side codec + JSON-array unframing) or
+``object_records`` (Avro OCF / parquet / ORC), under the same ``on_error``
+policy (``routed``) and with the same envelope types (``envelope_fields``).
+Only the last step differs: rows are parsed here in Python, not in JVM
+Column expressions. The options build one ``EngineConfig``, which validates
+them and supplies the name-parse extension (``filename_extension``).
 
 Options (all strings, per the API):
 - ``path``              — sink destination (any ``pyarrow.fs`` URI)
 - ``format``            — csv | jsonl | json | orc | avro (Avro OCF) |
-  parquet. Container formats (orc/avro/parquet) decode per object through
-  the write-side codecs — ``formats.avro.read_ocf`` / ``pyarrow.orc`` /
-  ``pyarrow.parquet`` — and ignore ``compression``, which is internal to
-  the container. Parquet here buys what the native reader can't give a
-  SQL-first user: per-object corrupt routing (``on_error=route`` turns a
-  truncated/bad-footer object into one ``decode_error`` row instead of a
-  task-killing scan — the posture ``sources.objects.read_sink_objects``
-  already has) and name-derived topic/partition/offset columns. For bulk
-  healthy scans the native ``spark.read.parquet`` remains the fast path.
+  parquet. Container formats (orc/avro/parquet) ignore ``compression``,
+  which is internal to the container. Parquet here buys what the native
+  reader can't give a SQL-first user: per-object corrupt routing
+  (``on_error=route`` turns a truncated/bad-footer object into one
+  ``decode_error`` row instead of a task-killing scan — the posture
+  ``sources.objects.read_sink_objects`` already has) and name-derived
+  topic/partition/offset columns. For bulk healthy scans the native
+  ``spark.read.parquet`` remains the fast path.
 - ``compression``       — none | gzip | snappy | zstd (text formats)
 - ``fields``            — comma-joined output fields, default ``value``
 - ``encoding``          — base64 | none (CSV payload encoding)
 - ``binary_payloads``   — true | false: decode key/value to BinaryType
   (default: true for csv+base64, false for jsonl/json — i.e. each format's
-  faithful read-back; set true on JSON formats to recover original bytes,
-  matching ``read_sink_objects(binary_payloads=True)``)
+  faithful read-back, and true for the container formats; set true on
+  JSON formats to recover original bytes, matching
+  ``read_sink_objects(binary_payloads=True)``)
 - ``on_error``          — fail (default) | route: with ``route``, a corrupt
   object (or unparseable line) yields one row with the exception in an
   appended ``decode_error`` column instead of failing the task — the
   format-API form of the fast path's poison-object routing
 - ``template``/``prefix`` — filename template for name parsing
+- ``envelope``          — true (default) | false: JSON objects written
+  without the field envelope (single-field only)
 
 Registration: ``spark.dataSource.register(SinkObjectsDataSource)`` (the
 engine does not auto-register — Python data sources are per-session).
@@ -46,7 +56,7 @@ from __future__ import annotations
 import base64
 import json
 import re
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -56,59 +66,64 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
+from kafka_connector_s3_sink_spark.config import (
+    CompressionType,
+    EngineConfig,
+    FieldEncoding,
+    FormatType,
+    OutputField,
+    _enum_from_prop,
+)
+from kafka_connector_s3_sink_spark.sources.objects import (
+    check_on_error,
+    envelope_fields,
+    object_lines,
+    object_records,
+    routed,
+)
+
+_CONTAINERS = (FormatType.AVRO, FormatType.ORC, FormatType.PARQUET)
+
 
 class _ObjectPartition(InputPartition):
     def __init__(self, name: str):
         self.name = name
 
 
-def _resolve_binary(fmt: str, encoding: str, option: str | None) -> bool:
-    """Whether key/value columns decode to BinaryType. Default preserves the
-    sink's serialization faithfully per format (csv+base64 → bytes, JSON
-    formats → the b64 strings as written, container formats → the binary
-    envelope the sink wrote); an explicit ``binary_payloads`` option
-    overrides, so the SAME store reads back with the SAME types from this
-    DataSource and from ``read_sink_objects(binary_payloads=True)``."""
-    if option is not None:
-        return option.lower() == "true"
-    return fmt in ("orc", "avro", "parquet") or (
-        fmt == "csv" and encoding == "base64"
+def _read_options(options) -> tuple[EngineConfig, bool, str]:
+    """(config, binary_payloads, on_error) from the reader options (see the
+    module docstring), validated by ``EngineConfig`` and its enums."""
+    fields = [f.strip() for f in options.get("fields", "value").split(",")]
+    config = EngineConfig(
+        prefix=options.get("prefix", ""),
+        file_name_template=options.get(
+            "template", "{{topic}}-{{partition}}-{{start_offset}}"
+        ),
+        file_compression=_enum_from_prop(
+            CompressionType, "compression", options.get("compression"), "gzip"
+        ),
+        format_type=_enum_from_prop(
+            FormatType, "format", options.get("format"), "csv"
+        ),
+        output_fields=tuple(
+            _enum_from_prop(OutputField, "fields", f, "value") for f in fields if f
+        ),
+        value_encoding=_enum_from_prop(
+            FieldEncoding, "encoding", options.get("encoding"), "base64"
+        ),
+        envelope=options.get("envelope", "true").lower() == "true",
     )
-
-
-def _schema_for(
-    fields: Sequence[str],
-    fmt: str,
-    encoding: str,
-    binary_payloads: bool,
-    route_errors: bool = False,
-) -> T.StructType:
-    cols = [
-        T.StructField("object_name", T.StringType(), False),
-        T.StructField("topic", T.StringType(), True),
-        T.StructField("partition", T.IntegerType(), True),
-        T.StructField("start_offset", T.LongType(), True),
-    ]
-    for f in fields:
-        if f in ("key", "value"):
-            t = T.BinaryType() if binary_payloads else T.StringType()
-        elif f in ("offset", "timestamp"):
-            t = T.LongType()
-        elif f == "headers":
-            t = T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("key", T.StringType(), True),
-                        T.StructField("value", T.BinaryType(), True),
-                    ]
-                )
-            )
-        else:
-            raise ValueError(f"unknown output field {f!r}")
-        cols.append(T.StructField(f, t, True))
-    if route_errors:
-        cols.append(T.StructField("decode_error", T.StringType(), True))
-    return T.StructType(cols)
+    option = options.get("binary_payloads")
+    if option is not None:
+        binary_payloads = option.lower() == "true"
+    else:
+        binary_payloads = config.format_type in _CONTAINERS or (
+            config.format_type is FormatType.CSV
+            and config.value_encoding is FieldEncoding.BASE64
+        )
+    on_error = options.get("on_error", "fail").lower()
+    check_on_error(on_error)
+    return config, binary_payloads, on_error
 
 
 class SinkObjectsDataSource(DataSource):
@@ -120,20 +135,17 @@ class SinkObjectsDataSource(DataSource):
         return "sink_objects"
 
     def schema(self) -> T.StructType:
-        fields = [
-            f.strip()
-            for f in self.options.get("fields", "value").split(",")
-            if f.strip()
+        config, binary_payloads, on_error = _read_options(self.options)
+        cols = [
+            T.StructField("object_name", T.StringType(), False),
+            T.StructField("topic", T.StringType(), True),
+            T.StructField("partition", T.IntegerType(), True),
+            T.StructField("start_offset", T.LongType(), True),
+            *envelope_fields(config.output_fields, binary_payloads),
         ]
-        fmt = self.options.get("format", "csv")
-        enc = self.options.get("encoding", "base64")
-        return _schema_for(
-            fields,
-            fmt,
-            enc,
-            _resolve_binary(fmt, enc, self.options.get("binary_payloads")),
-            route_errors=self.options.get("on_error", "fail").lower() == "route",
-        )
+        if on_error == "route":
+            cols.append(T.StructField("decode_error", T.StringType(), True))
+        return T.StructType(cols)
 
     def reader(self, schema: T.StructType) -> "_SinkObjectsReader":
         # pushdown is an OPT-IN subclass: Spark refuses to initialize any
@@ -151,30 +163,13 @@ class SinkObjectsDataSource(DataSource):
 class _SinkObjectsReader(DataSourceReader):
     def __init__(self, options, schema):
         self.path = options["path"]
-        self.fmt = options.get("format", "csv")
-        self.compression = options.get("compression", "gzip")
-        self.fields = [
-            f.strip() for f in options.get("fields", "value").split(",") if f.strip()
-        ]
-        self.encoding = options.get("encoding", "base64")
-        self.binary_payloads = _resolve_binary(
-            self.fmt, self.encoding, options.get("binary_payloads")
+        self.config, self.binary_payloads, self.on_error = _read_options(options)
+        self.fields = [f.value for f in self.config.output_fields]
+        self.text = self.config.format_type not in _CONTAINERS
+        pattern, self.groups = self.config.template.parse_pattern(
+            prefix=self.config.prefix, extension=self.config.filename_extension
         )
-        self.template = options.get(
-            "template", "{{topic}}-{{partition}}-{{start_offset}}"
-        )
-        self.prefix = options.get("prefix", "")
-        self.envelope = options.get("envelope", "true").lower() == "true"
-        self.on_error = options.get("on_error", "fail").lower()
-        if self.on_error not in ("fail", "route"):
-            raise ValueError(
-                f"on_error must be 'fail' or 'route', got {self.on_error!r}"
-            )
-        if self.fmt not in ("csv", "jsonl", "json", "orc", "avro", "parquet"):
-            raise ValueError(
-                "sink_objects reads csv/jsonl/json/orc/avro/parquet "
-                f"(got {self.fmt!r})"
-            )
+        self.name_rx = re.compile(pattern)
 
     # -- planning (driver): one partition per object --------------------
     def partitions(self):
@@ -204,183 +199,55 @@ class _SinkObjectsReader(DataSourceReader):
     def _parse_name(self, name: str) -> tuple:
         """(topic, partition, start_offset) recovered from one object name
         via the template regex inverse; (None, None, None) when unparseable."""
-        from kafka_connector_s3_sink_spark.config import CompressionType
-        from kafka_connector_s3_sink_spark.template import FilenameTemplate
-
-        tpl = FilenameTemplate(self.template)
-        # container formats never carry a compression suffix (compression is
-        # internal — config.filename_extension's rule, mirrored here)
-        ext = (
-            ""
-            if self.compression == "none"
-            or self.fmt in ("orc", "avro", "parquet")
-            else CompressionType(self.compression).extension
-        )
-        pattern, groups = tpl.parse_pattern(prefix=self.prefix, extension=ext)
-        m = re.match(pattern, name)
-        topic = m.group(groups["topic"]) if m and "topic" in groups else None
-        part = (
-            int(m.group(groups["partition"]))
-            if m and "partition" in groups
-            else None
-        )
+        m = self.name_rx.match(name)
+        g = self.groups
+        topic = m.group(g["topic"]) if m and "topic" in g else None
+        part = int(m.group(g["partition"])) if m and "partition" in g else None
         start = (
-            int(m.group(groups["start_offset"]))
-            if m and "start_offset" in groups
-            else None
+            int(m.group(g["start_offset"])) if m and "start_offset" in g else None
         )
         return topic, part, start
 
     def read_object(self, name: str) -> Iterator[tuple]:
-        from kafka_connector_s3_sink_spark.config import CompressionType
-        from kafka_connector_s3_sink_spark.formats.compression import (
-            decompress_bytes,
-        )
+        """One object's rows: ``object_lines`` / ``object_records`` (the
+        shared decoder), then the per-row Python parse. Under
+        ``on_error="route"`` a corrupt object (or an unparseable line)
+        yields one row with the payload columns null and the exception in
+        ``decode_error``."""
+        head = (name, *self._parse_name(name))
+        items, error = routed(self._decode, name, self.on_error)
+        if error is not None:
+            yield self._row(head, None, error)
+            return
+        for item in items:
+            yield self._row(head, *routed(self._parse, item, self.on_error))
+
+    def _row(self, head: tuple, values, error) -> tuple:
+        row = head + tuple(values or (None,) * len(self.fields))
+        return row + (error,) if self.on_error == "route" else row
+
+    def _decode(self, name: str) -> list:
         from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
 
-        topic, part, start = self._parse_name(name)
-        route = self.on_error == "route"
-        nulls = (None,) * len(self.fields)
-        if self.fmt in ("orc", "avro", "parquet"):
-            yield from self._read_container(name, topic, part, start)
-            return
-        try:
-            data = decompress_bytes(
-                ObjectStorage(self.path).read_bytes(name),
-                CompressionType(self.compression),
-            )
-            lines = data.decode("utf-8").splitlines()
-        except Exception as e:  # noqa: BLE001 — routed per option
-            if not route:
-                raise
-            # poison OBJECT: one row, payload columns null, error text rides
-            yield (name, topic, part, start, *nulls, f"{type(e).__name__}: {e}")
-            return
-        if self.fmt == "json":
-            lines = [l.rstrip(",") for l in lines[1:-1]]
-        for line in lines:
-            try:
-                parsed = self._parse(line)
-            except Exception as e:  # noqa: BLE001 — routed per option
-                if not route:
-                    raise
-                yield (name, topic, part, start, *nulls,
-                       f"{type(e).__name__}: {e}")
-                continue
-            if route:
-                yield (name, topic, part, start, *parsed, None)
-            else:
-                yield (name, topic, part, start, *parsed)
+        data = ObjectStorage(self.path).read_bytes(name)
+        if self.text:
+            return object_lines(data, self.config)
+        return object_records(data, self.config)
 
-    def _read_container(
-        self, name: str, topic, part, start
-    ) -> Iterator[tuple]:
-        """One ORC, Avro OCF, or parquet object → envelope rows. All three
-        containers compress internally, so the raw bytes stream straight
-        into the write-side decoder (``formats.avro.read_ocf`` — pure
-        Python, every block sync verified — or ``pyarrow.orc`` /
-        ``pyarrow.parquet``, whose footer parse IS the integrity gate
-        ``sources.objects._validate_parquet_objects`` uses).
-        ``on_error="route"`` turns a corrupt object (bad magic/sync/footer)
-        into one ``decode_error`` row, same contract as the text formats."""
-        from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
-
-        route = self.on_error == "route"
-        nulls = (None,) * len(self.fields)
-        try:
-            data = ObjectStorage(self.path).read_bytes(name)
-            if self.fmt == "avro":
-                from kafka_connector_s3_sink_spark.formats.avro import read_ocf
-
-                _, records = read_ocf(bytes(data))
-            elif self.fmt == "parquet":
-                import io
-
-                import pyarrow.parquet as pq
-
-                pf = pq.ParquetFile(io.BytesIO(data))
-                pf.metadata.num_rows  # force the full footer parse
-                records = pf.read().to_pylist()
-            else:
-                import io
-
-                import pyarrow.orc as pa_orc
-
-                records = pa_orc.ORCFile(io.BytesIO(data)).read().to_pylist()
-        except Exception as e:  # noqa: BLE001 — routed per option
-            if not route:
-                raise
-            yield (name, topic, part, start, *nulls, f"{type(e).__name__}: {e}")
-            return
-        for rec in records:
-            vals = []
-            for f in self.fields:
-                v = rec.get(f)
-                if f == "headers" and v is not None:
-                    # array<struct> envelopes decode as a list of
-                    # {'key':…,'value':…} dicts; an Avro MAP of headers
-                    # (headers_as_map schemas read back via read_ocf)
-                    # decodes as one python dict — normalize both to
-                    # (key, value) tuples. Iterating a bare dict would
-                    # yield key strings (and tuple(h) character tuples),
-                    # so the map shape is handled before the loop.
-                    if isinstance(v, dict):
-                        v = list(v.items())
-                    else:
-                        v = [
-                            (h["key"], h["value"])
-                            if isinstance(h, dict)
-                            else tuple(h)
-                            for h in v
-                        ]
-                elif f in ("key", "value") and v is not None:
-                    # coerce to the DECLARED payload type so one option
-                    # (binary_payloads) governs the schema regardless of
-                    # whether the sink's envelope stored bytes or strings
-                    if self.binary_payloads and isinstance(v, str):
-                        v = v.encode("utf-8")
-                    elif not self.binary_payloads and isinstance(
-                        v, (bytes, bytearray)
-                    ):
-                        v = bytes(v).decode("utf-8")
-                vals.append(v)
-            if route:
-                yield (name, topic, part, start, *vals, None)
-            else:
-                yield (name, topic, part, start, *vals)
-
-    def _parse(self, line: str) -> list:
-        if self.fmt == "csv":
-            cells = line.split(",")
-            out = []
-            for i, f in enumerate(self.fields):
-                cell = cells[i] if i < len(cells) else ""
-                if cell == "":
-                    out.append(None)
-                elif f in ("key", "value"):
-                    out.append(
-                        base64.b64decode(cell)
-                        if self.encoding == "base64" and self.binary_payloads
-                        else cell
-                    )
-                elif f in ("offset", "timestamp"):
-                    out.append(int(cell))
-                elif f == "headers":
-                    out.append(
-                        [
-                            (
-                                base64.b64decode(k).decode("utf-8"),
-                                base64.b64decode(v),
-                            )
-                            for k, v in (p.split(":", 1) for p in cell.split(";"))
-                        ]
-                    )
-            return out
-        if not self.envelope and len(self.fields) == 1:
+    def _parse(self, item) -> list:
+        if not self.text:
+            return [self._payload(f, item.get(f)) for f in self.fields]
+        if self.config.format_type is FormatType.CSV:
+            cells = item.split(",")
+            return [
+                self._csv_cell(f, cells[i] if i < len(cells) else "")
+                for i, f in enumerate(self.fields)
+            ]
+        if not self.config.envelope and len(self.fields) == 1:
             # unwrapped single-field objects: the line IS the field's value
-            obj = {self.fields[0]: json.loads(line)}
+            obj = {self.fields[0]: json.loads(item)}
         else:
-            obj = json.loads(line)
+            obj = json.loads(item)
         out = []
         for f in self.fields:
             v = obj.get(f)
@@ -401,6 +268,38 @@ class _SinkObjectsReader(DataSourceReader):
                 v = base64.b64decode(v)
             out.append(v)
         return out
+
+    def _csv_cell(self, f: str, cell: str):
+        if cell == "":
+            return None
+        if f in ("key", "value"):
+            if not self.binary_payloads:
+                return cell
+            if self.config.value_encoding is FieldEncoding.BASE64:
+                return base64.b64decode(cell)
+            return cell.encode("utf-8")  # encoding=none: the payload's text
+        if f == "headers":
+            return [
+                (base64.b64decode(k).decode("utf-8"), base64.b64decode(v))
+                for k, v in (p.split(":", 1) for p in cell.split(";"))
+            ]
+        return int(cell)  # offset / timestamp
+
+    def _payload(self, f: str, v):
+        """A container record's field as the declared column type: headers
+        as (key, value) tuples, key/value coerced to bytes or str so one
+        option (``binary_payloads``) governs the schema whichever the
+        sink's envelope stored."""
+        if v is None:
+            return None
+        if f == "headers":
+            return [(h["key"], h["value"]) for h in v]
+        if f in ("key", "value"):
+            if self.binary_payloads and isinstance(v, str):
+                return v.encode("utf-8")
+            if not self.binary_payloads and isinstance(v, (bytes, bytearray)):
+                return bytes(v).decode("utf-8")
+        return v
 
 
 class _SinkObjectsPushdownReader(_SinkObjectsReader):

@@ -8,13 +8,19 @@ that read path IS an analytics job, so this module re-exposes it Spark-first:
 - **listing/scan** — ``binaryFile`` datasource (distributed, works on
   ``file:``/``s3a:``/``hdfs:``; hidden ``_``/``.`` prefixed paths such as the
   ``_manifest`` sidecars are excluded by Spark's own file index);
-- **decompress + line split** — one Arrow-batched ``mapInPandas`` step
-  (gzip/zstd/snappy via the same codecs the writer streams through);
-  per-task memory is O(one decompressed object), the same bound the writer's
-  ``file.max.records`` knob already enforces on the write side;
+- **object decode** — the one decoder both read-back APIs share:
+  ``object_lines`` (text object → record lines, through the write-side
+  codecs) and ``object_records`` (Avro OCF / parquet / ORC object → record
+  dicts), the ``on_error`` policy (``check_on_error``, ``routed``) and the
+  envelope type of each field (``envelope_fields``). Here they run in one
+  Arrow-batched ``mapInPandas`` step (``_object_rows``); the
+  ``sink_objects`` Python Data Source (``sources.datasource``) calls the
+  same functions once per object. Per-task memory is O(one decoded
+  object), the bound the writer's ``file.max.records`` sets;
 - **typed field parsing** — pure JVM Column expressions (``split`` /
   ``get_json_object`` / ``try_to_binary`` / ``from_json``), so the hot path
-  stays in whole-stage codegen;
+  stays in whole-stage codegen; parquet/ORC skip the decoder for Spark's
+  native scan;
 - **name parsing** — the filename template's regex inverse
   (``FilenameTemplate.parse_pattern``) recovers the grouping variables
   (topic, partition, start_offset | key) that the reference encodes ONLY in
@@ -29,8 +35,7 @@ were inlined JSON documents read back as their compact JSON text.
 
 from __future__ import annotations
 
-import posixpath
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,14 +51,102 @@ from kafka_connector_s3_sink_spark.config import (
 from kafka_connector_s3_sink_spark.sinks.storage import _split_uri
 from kafka_connector_s3_sink_spark.template import GrouperType
 
-_LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("object_name", T.StringType(), False),
-        T.StructField("line_no", T.LongType(), False),
-        T.StructField("line", T.StringType(), True),
-        T.StructField("decode_error", T.StringType(), True),
-    ]
+_HEADERS_TYPE = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("key", T.StringType(), True),
+            T.StructField("value", T.BinaryType(), True),
+        ]
+    )
 )
+
+
+def envelope_fields(
+    fields: tuple[OutputField, ...],
+    binary_payloads: bool,
+    value_type: T.DataType | None = None,
+) -> list[T.StructField]:
+    """The read-back type of each output field: key/value binary or string
+    per ``binary_payloads`` (``value_type`` overrides value, e.g. a parquet
+    value struct), offset/timestamp long, headers
+    array<struct<key string, value binary>>."""
+    payload = T.BinaryType() if binary_payloads else T.StringType()
+    types = {
+        OutputField.KEY: payload,
+        OutputField.VALUE: value_type or payload,
+        OutputField.OFFSET: T.LongType(),
+        OutputField.TIMESTAMP: T.LongType(),
+        OutputField.HEADERS: _HEADERS_TYPE,
+    }
+    return [T.StructField(f.value, types[f], True) for f in fields]
+
+
+def check_on_error(on_error: str) -> None:
+    """The poison-object policy (the read-side analog of
+    ``errors.tolerance``): ``fail`` propagates a corrupt object's exception;
+    ``route`` turns it into one row carrying ``decode_error``."""
+    if on_error not in ("fail", "route"):
+        raise ValueError(f"on_error must be 'fail' or 'route', got {on_error!r}")
+
+
+def routed(decode: Callable, arg, on_error: str) -> tuple:
+    """``(decode(arg), None)``; under ``on_error="route"`` a raised exception
+    becomes ``(None, "<type>: <message>")`` instead."""
+    try:
+        return decode(arg), None
+    except Exception as e:  # noqa: BLE001 — routed per policy
+        if on_error == "fail":
+            raise
+        return None, f"{type(e).__name__}: {e}"
+
+
+def object_lines(data: bytes, config: EngineConfig) -> list[str]:
+    """One text object (CSV / JSONL / JSON array) → its record lines:
+    decompressed with the write-side codec and, for the JSON-array format,
+    stripped of the frame ``sinks.writer._text_encoder`` writes (a ``[``
+    line, element lines with a trailing comma on all but the last, a ``]``
+    line)."""
+    from kafka_connector_s3_sink_spark.formats.compression import decompress_bytes
+
+    lines = (
+        decompress_bytes(bytes(data), config.file_compression)
+        .decode("utf-8")
+        .splitlines()
+    )
+    if config.format_type is FormatType.JSON:
+        lines = [line.rstrip(",") for line in lines[1:-1]]
+    return lines
+
+
+def object_records(data: bytes, config: EngineConfig) -> list[dict]:
+    """One container object (Avro OCF / parquet / ORC) → its records as
+    dicts, through the write-side decoders. The container compresses
+    internally, so ``config.file_compression`` plays no part. Each decode
+    is also the integrity check: ``read_ocf`` verifies every block sync,
+    and the parquet/ORC footer parse fails on a truncated or foreign
+    object. Headers stored as an Avro map decode to the same list of
+    ``{"key", "value"}`` records as the default array shape."""
+    import io
+
+    if config.format_type is FormatType.AVRO:
+        from kafka_connector_s3_sink_spark.formats.avro import read_ocf
+
+        records = read_ocf(bytes(data))[1]
+    elif config.format_type is FormatType.PARQUET:
+        import pyarrow.parquet as pq
+
+        records = pq.ParquetFile(io.BytesIO(data)).read().to_pylist()
+    else:
+        import pyarrow.orc as pa_orc
+
+        records = pa_orc.ORCFile(io.BytesIO(data)).read().to_pylist()
+    for rec in records:
+        if isinstance(rec.get("headers"), dict):
+            rec["headers"] = [
+                {"key": k, "value": v} for k, v in rec["headers"].items()
+            ]
+    return records
+
 
 def _relative_name(dest_dir: str) -> Column:
     """Object name relative to the sink root, from binaryFile's ``path``.
@@ -77,70 +170,47 @@ def _relative_name(dest_dir: str) -> Column:
     return F.regexp_replace(F.col("path"), prefix, "").alias("object_name")
 
 
-def sink_object_lines(
+def _object_rows(
     spark: SparkSession,
     dest_dir: str,
-    config: EngineConfig,
-    on_error: str = "fail",
+    columns: list[T.StructField],
+    decode: Callable[[bytes], list[list]],
+    on_error: str,
 ) -> DataFrame:
-    """(object_name, line_no, line, decode_error) for every record line of
-    every text-format object under ``dest_dir`` — decompressed with the
-    write-side codecs and, for the JSON-array format, stripped of the
-    ``[`` / ``]`` frame and element commas, so one output row is one record.
+    """(object_name, line_no, *columns, decode_error) for every object under
+    ``dest_dir``: a ``binaryFile`` scan, then one Arrow-batched
+    ``mapInPandas`` step in which ``decode(content)`` turns one object into
+    its column lists (one value per record, ``line_no`` its position).
+    Per-task memory is O(one decoded object). Under ``on_error="route"`` a
+    corrupt object contributes one row, ``line_no`` -1 and every column
+    null."""
+    schema = T.StructType(
+        [
+            T.StructField("object_name", T.StringType(), False),
+            T.StructField("line_no", T.LongType(), False),
+            *columns,
+            T.StructField("decode_error", T.StringType(), True),
+        ]
+    )
+    names = [c.name for c in columns]
 
-    ``on_error`` is the poison-object policy (the read-side analog of
-    ``errors.tolerance``): ``"fail"`` propagates a corrupt object's exception
-    and kills the task; ``"route"`` survives it — the object contributes one
-    row with ``line`` null and ``decode_error`` carrying the exception, so a
-    crawl-scale audit keeps going and the dead objects are one filter away."""
-    if on_error not in ("fail", "route"):
-        raise ValueError(f"on_error must be 'fail' or 'route', got {on_error!r}")
-    compression = config.file_compression
-    is_json_array = config.format_type is FormatType.JSON
-
-    def decode(batches) -> Iterator:
+    def run(batches) -> Iterator:
         import pandas as pd
 
-        from kafka_connector_s3_sink_spark.formats.compression import (
-            decompress_bytes,
-        )
-
         for pdf in batches:
-            names: list[str] = []
-            line_nos: list[int] = []
-            lines: list[str | None] = []
-            errors: list[str | None] = []
+            out: dict[str, list] = {f: [] for f in schema.fieldNames()}
             for name, content in zip(pdf["object_name"], pdf["content"]):
-                try:
-                    text = decompress_bytes(bytes(content), compression).decode(
-                        "utf-8"
-                    )
-                except Exception as e:  # noqa: BLE001 — routed per policy
-                    if on_error == "fail":
-                        raise
-                    names.append(name)
-                    line_nos.append(-1)
-                    lines.append(None)
-                    errors.append(f"{type(e).__name__}: {e}")
-                    continue
-                rows = text.splitlines()
-                if is_json_array:
-                    # '[' opener, one element per line with a trailing comma
-                    # on all but the last, ']' closer (render.assemble_json_array)
-                    rows = [r.rstrip(",") for r in rows[1:-1]]
-                for i, row in enumerate(rows):
-                    names.append(name)
-                    line_nos.append(i)
-                    lines.append(row)
-                    errors.append(None)
-            yield pd.DataFrame(
-                {
-                    "object_name": names,
-                    "line_no": line_nos,
-                    "line": lines,
-                    "decode_error": errors,
-                }
-            )
+                cols, error = routed(decode, content, on_error)
+                if error is None:
+                    line_nos = range(len(cols[0]))
+                else:
+                    cols, line_nos = [[None]] * len(names), [-1]
+                out["object_name"] += [name] * len(line_nos)
+                out["line_no"] += line_nos
+                for col, values in zip(names, cols):
+                    out[col] += values
+                out["decode_error"] += [error] * len(line_nos)
+            yield pd.DataFrame(out)
 
     raw = (
         spark.read.format("binaryFile")
@@ -148,7 +218,29 @@ def sink_object_lines(
         .load(dest_dir)
         .select(_relative_name(dest_dir), "content")
     )
-    return raw.mapInPandas(decode, _LINES_SCHEMA)
+    return raw.mapInPandas(run, schema)
+
+
+def sink_object_lines(
+    spark: SparkSession,
+    dest_dir: str,
+    config: EngineConfig,
+    on_error: str = "fail",
+) -> DataFrame:
+    """(object_name, line_no, line, decode_error) for every record line of
+    every text-format object under ``dest_dir`` (``object_lines``), so one
+    output row is one record. ``on_error="route"`` survives a corrupt
+    object: it contributes one row with ``line`` null and ``decode_error``
+    carrying the exception, so a crawl-scale audit keeps going and the dead
+    objects are one filter away (see ``check_on_error``)."""
+    check_on_error(on_error)
+    return _object_rows(
+        spark,
+        dest_dir,
+        [T.StructField("line", T.StringType(), True)],
+        lambda data: [object_lines(data, config)],
+        on_error,
+    )
 
 
 def _csv_headers(el: Column) -> Column:
@@ -245,28 +337,23 @@ def _validate_parquet_objects(
     if not names:
         return [], []
 
-    def validate(batches) -> Iterator:
-        import pandas as pd
+    def footer_rows(name: str) -> int:
         import pyarrow.orc as pa_orc
         import pyarrow.parquet as pq
 
+        # a seekable handle → pyarrow reads ONLY the footer (tail magic +
+        # metadata), O(footer bytes) per object even for multi-GB objects;
+        # touching the row count makes a lazily-parsed footer materialize
+        with storage.open_input_file(name) as f:
+            if fmt == "orc":
+                return pa_orc.ORCFile(f).nrows
+            return pq.ParquetFile(f).metadata.num_rows
+
+    def validate(batches) -> Iterator:
+        import pandas as pd
+
         for pdf in batches:
-            errs = []
-            for n in pdf["object_name"]:
-                try:
-                    # metadata parse validates magic + footer; touch the row
-                    # count so a lazily-parsed footer fully materializes.
-                    # Seekable handle → pyarrow reads ONLY the footer (tail
-                    # magic + metadata), keeping this O(footer bytes) per
-                    # object even when the store holds multi-GB objects.
-                    with storage.open_input_file(n) as f:
-                        if fmt == "orc":
-                            pa_orc.ORCFile(f).nrows
-                        else:
-                            pq.ParquetFile(f).metadata.num_rows
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001 — routed per contract
-                    errs.append(f"{type(e).__name__}: {e}")
+            errs = [routed(footer_rows, n, "route")[1] for n in pdf["object_name"]]
             yield pd.DataFrame(
                 {"object_name": pdf["object_name"], "decode_error": errs}
             )
@@ -284,136 +371,6 @@ def _validate_parquet_objects(
         if r["decode_error"] is not None
     )
     return good, bad
-
-
-def _parquet_envelope_schema(config: EngineConfig) -> T.StructType:
-    """Envelope schema for the degenerate every-object-corrupt route case —
-    no healthy footer exists to type the columns, so key/value fall back to
-    binary (the sink's BYTES-converter shape)."""
-    value_t: T.DataType = (
-        T.StructType.fromDDL(config.parquet_value_schema)
-        if config.parquet_value_schema
-        else T.BinaryType()
-    )
-    types: dict[str, T.DataType] = {
-        "key": T.BinaryType(),
-        "value": value_t,
-        "offset": T.LongType(),
-        "timestamp": T.LongType(),
-        "headers": T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("key", T.StringType(), True),
-                    T.StructField("value", T.BinaryType(), True),
-                ]
-            )
-        ),
-    }
-    return T.StructType(
-        [T.StructField("object_name", T.StringType(), False)]
-        + [
-            T.StructField(f.value, types[f.value], True)
-            for f in config.output_fields
-        ]
-    )
-
-
-def _avro_envelope_schema(
-    config: EngineConfig, binary_payloads: bool
-) -> T.StructType:
-    """Declared read-back schema for Avro OCF objects: key/value binary or
-    string per ``binary_payloads`` (mirroring the record frame the sink
-    consumed — the OCF writer schema preserves the Spark types verbatim),
-    offset/timestamp long, headers array<struct<key string, value binary>>."""
-    payload_t: T.DataType = T.BinaryType() if binary_payloads else T.StringType()
-    types: dict[str, T.DataType] = {
-        "key": payload_t,
-        "value": payload_t,
-        "offset": T.LongType(),
-        "timestamp": T.LongType(),
-        "headers": T.ArrayType(
-            T.StructType(
-                [
-                    T.StructField("key", T.StringType(), True),
-                    T.StructField("value", T.BinaryType(), True),
-                ]
-            )
-        ),
-    }
-    return T.StructType(
-        [
-            T.StructField("object_name", T.StringType(), False),
-            T.StructField("line_no", T.LongType(), False),
-        ]
-        + [
-            T.StructField(f.value, types[f.value], True)
-            for f in config.output_fields
-        ]
-        + [T.StructField("decode_error", T.StringType(), True)]
-    )
-
-
-def _read_avro_objects(
-    spark: SparkSession,
-    dest_dir: str,
-    config: EngineConfig,
-    parse_names: bool,
-    binary_payloads: bool,
-    on_error: str,
-) -> DataFrame:
-    """Re-ingest Avro OCF objects: binaryFile scan → Arrow-batched OCF decode
-    in executor tasks (``formats.avro.read_ocf`` — pure Python, no avro jar),
-    one output row per record with ``line_no`` its position in the object.
-    ``on_error="route"`` converts a corrupt object (bad magic, sync-marker
-    mismatch, truncated block, CRC failure) into one ``decode_error`` row —
-    OCF sync markers make corruption detection structural, so a poison object
-    can never silently yield short rows."""
-    if on_error not in ("fail", "route"):
-        raise ValueError(f"on_error must be 'fail' or 'route', got {on_error!r}")
-    field_names = [f.value for f in config.output_fields]
-    out_schema = _avro_envelope_schema(config, binary_payloads)
-
-    def decode(batches) -> Iterator:
-        import pandas as pd
-
-        from kafka_connector_s3_sink_spark.formats.avro import read_ocf
-
-        for pdf in batches:
-            out: dict[str, list] = {f.name: [] for f in out_schema.fields}
-            for name, content in zip(pdf["object_name"], pdf["content"]):
-                try:
-                    _, records = read_ocf(bytes(content))
-                except Exception as e:  # noqa: BLE001 — routed per policy
-                    if on_error == "fail":
-                        raise
-                    out["object_name"].append(name)
-                    out["line_no"].append(-1)
-                    for fn in field_names:
-                        out[fn].append(None)
-                    out["decode_error"].append(f"{type(e).__name__}: {e}")
-                    continue
-                for i, rec in enumerate(records):
-                    out["object_name"].append(name)
-                    out["line_no"].append(i)
-                    for fn in field_names:
-                        out[fn].append(rec.get(fn))
-                    out["decode_error"].append(None)
-            yield pd.DataFrame(out)
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(dest_dir)
-        .select(_relative_name(dest_dir), "content")
-    )
-    rows = raw.mapInPandas(decode, out_schema)
-    out_cols: list[Column] = [F.col("object_name"), F.col("line_no")]
-    if parse_names:
-        out_cols += _name_columns(config)
-    out_cols += [F.col(fn) for fn in field_names]
-    if on_error == "route":
-        out_cols += [F.col("decode_error")]
-    return rows.select(*out_cols)
 
 
 def _name_columns(config: EngineConfig) -> list[Column]:
@@ -489,6 +446,10 @@ def stream_sink_objects(
     return lines.select(*(out_cols + fields))
 
 
+def _columns(records: list[dict], names: list[str]) -> list[list]:
+    return [[rec.get(n) for rec in records] for n in names]
+
+
 def read_sink_objects(
     spark: SparkSession,
     dest_dir: str,
@@ -511,78 +472,101 @@ def read_sink_objects(
     their row carries a ``decode_error`` column (appended to the output) with
     every field null — ``fail`` (default) propagates the task error.
 
-    Parquet objects skip the line path entirely: they re-read with the native
-    parquet scan (typed envelope columns, internal compression), plus the
-    same name parsing. ``on_error="route"`` for parquet (r6) pre-validates
-    every object's FOOTER in executor tasks (pyarrow metadata read through
-    the same ``ObjectStorage`` client) — a corrupt-footer object would
-    otherwise kill the whole native scan at planning; validated-bad objects
-    surface as one ``decode_error`` row each and the scan reads only the
-    healthy set.
+    Parquet/ORC objects take Spark's native scan (``_read_native``); Avro
+    and the text formats decode through ``object_records`` /
+    ``object_lines`` in one ``mapInPandas`` step, then parse in JVM
+    Column expressions.
     """
+    check_on_error(on_error)
     if config.format_type in (FormatType.PARQUET, FormatType.ORC):
-        if on_error not in ("fail", "route"):
-            raise ValueError(
-                f"on_error must be 'fail' or 'route', got {on_error!r}"
-            )
-        fmt_name = config.format_type.value
-        reader = spark.read.option("recursiveFileLookup", "true")
-        if config.parquet_schema_rotation or config.parquet_value_schema:
-            # schema-rotated sinks write objects with DIFFERENT value structs
-            # per run; a plain read resolves to one file's schema and silently
-            # nulls the rest — merge the per-object footers instead (fields
-            # absent from an object read back null, Spark's evolution rule)
-            reader = reader.option("mergeSchema", "true")
-        bad: list[tuple[str, str]] = []
-        source: str | list[str] = dest_dir
-        if on_error == "route":
-            good, bad = _validate_parquet_objects(spark, dest_dir, fmt_name)
-            source = [f"{dest_dir.rstrip('/')}/{n}" for n in good]
-        df = (
-            reader.format(fmt_name).load(source)  # str or healthy-name list
-            .withColumn("path", F.col("_metadata.file_path"))
-            .withColumn("object_name", _relative_name(dest_dir))
-            .drop("path")
-        ) if source else None
-        out_cols: list[Column] = [F.col("object_name")]
-        if parse_names:
-            out_cols += _name_columns(config)
-        out_cols += [F.col(f.value) for f in config.output_fields]
-        if on_error != "route":
-            return df.select(*out_cols)
-        if df is None:
-            # every object failed validation: synthesize the envelope types
-            # so the error rows still carry the documented columns
-            df = spark.createDataFrame([], _parquet_envelope_schema(config))
-        good_df = df.select(*out_cols, F.lit(None).cast("string").alias("decode_error"))
-        if not bad:
-            return good_df
-        bad_df = spark.createDataFrame(
-            bad, "object_name string, decode_error string"
-        )
-        null_fields = [
-            F.lit(None).cast(good_df.schema[f.value].dataType).alias(f.value)
-            for f in config.output_fields
-        ]
-        bad_cols: list[Column] = [F.col("object_name")]
-        if parse_names:
-            bad_cols += _name_columns(config)
-        return good_df.unionByName(
-            bad_df.select(*bad_cols, *null_fields, F.col("decode_error"))
-        )
-
+        return _read_native(spark, dest_dir, config, parse_names, on_error)
     if config.format_type is FormatType.AVRO:
-        return _read_avro_objects(
-            spark, dest_dir, config, parse_names, binary_payloads, on_error
+        names = [f.value for f in config.output_fields]
+        rows = _object_rows(
+            spark,
+            dest_dir,
+            envelope_fields(config.output_fields, binary_payloads),
+            lambda data: _columns(object_records(data, config), names),
+            on_error,
         )
-    lines = sink_object_lines(spark, dest_dir, config, on_error=on_error)
-    if config.format_type is FormatType.CSV:
-        fields = _csv_fields(config)
+        fields = [F.col(n) for n in names]
     else:
-        fields = _json_fields(config, binary_payloads)
+        rows = sink_object_lines(spark, dest_dir, config, on_error=on_error)
+        if config.format_type is FormatType.CSV:
+            fields = _csv_fields(config)
+        else:
+            fields = _json_fields(config, binary_payloads)
     out_cols = [F.col("object_name"), F.col("line_no")]
     if parse_names:
         out_cols += _name_columns(config)
     if on_error == "route":
         fields = fields + [F.col("decode_error")]
-    return lines.select(*(out_cols + fields))
+    return rows.select(*(out_cols + fields))
+
+
+def _read_native(
+    spark: SparkSession,
+    dest_dir: str,
+    config: EngineConfig,
+    parse_names: bool,
+    on_error: str,
+) -> DataFrame:
+    """Parquet / ORC objects through Spark's native scan (typed envelope
+    columns, internal compression, column pruning) plus the same name
+    parsing. ``on_error="route"`` first validates every object's footer in
+    executor tasks (``_validate_parquet_objects``) — a corrupt footer would
+    otherwise kill the whole scan at planning — then scans only the healthy
+    set and appends one ``decode_error`` row per validated-bad object."""
+    fmt_name = config.format_type.value
+    reader = spark.read.option("recursiveFileLookup", "true")
+    if config.parquet_schema_rotation or config.parquet_value_schema:
+        # schema-rotated sinks write objects with DIFFERENT value structs
+        # per run; a plain read resolves to one file's schema and silently
+        # nulls the rest — merge the per-object footers instead (fields
+        # absent from an object read back null, Spark's evolution rule)
+        reader = reader.option("mergeSchema", "true")
+    name_cols: list[Column] = [F.col("object_name")]
+    if parse_names:
+        name_cols += _name_columns(config)
+    field_names = [f.value for f in config.output_fields]
+    bad: list[tuple[str, str]] = []
+    source: str | list[str] = dest_dir
+    if on_error == "route":
+        good, bad = _validate_parquet_objects(spark, dest_dir, fmt_name)
+        source = [f"{dest_dir.rstrip('/')}/{n}" for n in good]
+    if source:
+        df = (
+            reader.format(fmt_name).load(source)  # str or healthy-name list
+            .withColumn("path", F.col("_metadata.file_path"))
+            .withColumn("object_name", _relative_name(dest_dir))
+            .drop("path")
+        )
+    else:
+        # every object failed validation: no healthy footer types the
+        # columns, so key/value fall back to binary (the sink's
+        # BYTES-converter shape)
+        value_type = (
+            T.StructType.fromDDL(config.parquet_value_schema)
+            if config.parquet_value_schema
+            else None
+        )
+        df = spark.createDataFrame(
+            [],
+            T.StructType(
+                [T.StructField("object_name", T.StringType(), False)]
+                + envelope_fields(config.output_fields, True, value_type)
+            ),
+        )
+    out = df.select(*name_cols, *field_names)
+    if on_error != "route":
+        return out
+    out = out.withColumn("decode_error", F.lit(None).cast("string"))
+    if not bad:
+        return out
+    bad_df = spark.createDataFrame(bad, "object_name string, decode_error string")
+    null_fields = [
+        F.lit(None).cast(out.schema[n].dataType).alias(n) for n in field_names
+    ]
+    return out.unionByName(
+        bad_df.select(*name_cols, *null_fields, F.col("decode_error"))
+    )

@@ -132,26 +132,6 @@ class FilenameTemplate:
         return [p.value for p in self.parts if p.variable == "timestamp"]
 
     # -- Spark-side rendering --------------------------------------------
-    def group_key_columns(
-        self,
-        clock: Column | None = None,
-        timezone: str = "UTC",
-    ) -> list[Column]:
-        """Columns whose distinct values define one output object (pre-aggregation).
-
-        TOPIC_PARTITION          → [topic, partition]
-        TOPIC_PARTITION_TIMESTAMP→ [topic, partition, each rendered timestamp unit]
-        KEY                      → [stringified key]
-        """
-        if self.grouper_type is GrouperType.KEY:
-            return [key_string_column().alias("_group_key")]
-        cols = [F.col("topic"), F.col("partition")]
-        if self.grouper_type is GrouperType.TOPIC_PARTITION_TIMESTAMP:
-            ts = clock if clock is not None else F.current_timestamp()
-            for unit in dict.fromkeys(self.timestamp_units):  # dedupe, keep order
-                cols.append(_format_ts(ts, unit, timezone).alias(f"_ts_{unit}"))
-        return cols
-
     def filename_column(
         self,
         start_offset: Column | None = None,

@@ -8,6 +8,7 @@ from pyspark.sql import Row
 from kafka_connector_s3_sink_spark.config import (
     CompressionType,
     EngineConfig,
+    FieldEncoding,
     FormatType,
     OutputField,
 )
@@ -536,3 +537,113 @@ def test_format_read_avro_headers_map_shape(registered, spark, tmp_path):
     assert rows[101]["headers"] is None
     assert bytes(rows[100]["value"]) == b"v0"
     assert (rows[100]["topic"], rows[100]["partition"]) == ("t", 0)
+
+
+def test_csv_encoding_none_binary_payloads(registered, spark, tmp_path):
+    """format=csv, encoding=none, binary_payloads=true declares BinaryType
+    key/value, so the cells (the payloads' text) read back as their UTF-8
+    bytes instead of str values the declared schema rejects."""
+    cfg = EngineConfig(
+        output_fields=(OutputField.OFFSET, OutputField.KEY, OutputField.VALUE),
+        value_encoding=FieldEncoding.NONE,
+        file_compression=CompressionType.NONE,
+    )
+    write_batch(records_df(spark, _rows(4)), cfg, str(tmp_path))
+    df = (
+        spark.read.format("sink_objects")
+        .option("path", str(tmp_path))
+        .option("compression", "none")
+        .option("encoding", "none")
+        .option("fields", "offset,key,value")
+        .option("binary_payloads", "true")
+        .load()
+    )
+    got = {r["offset"]: (bytes(r["key"]), bytes(r["value"])) for r in df.collect()}
+    assert got == {100 + i: (f"k{i}".encode(), f"v{i}".encode()) for i in range(4)}
+
+
+_PARITY_CASES = [
+    # (format, compression, encoding, binary_payloads)
+    ("csv", "gzip", "base64", True),
+    ("csv", "none", "none", False),
+    ("jsonl", "zstd", "base64", False),
+    ("json", "snappy", "base64", False),
+    ("avro", "zstd", "base64", True),
+    ("avro", "none", "base64", False),
+    ("orc", "none", "base64", False),
+    ("parquet", "gzip", "base64", False),
+]
+
+
+@pytest.mark.parametrize(
+    "fmt,compression,encoding,binary", _PARITY_CASES,
+    ids=["-".join(map(str, c)) for c in _PARITY_CASES],
+)
+def test_format_api_parity_with_fast_path(
+    registered, spark, tmp_path, fmt, compression, encoding, binary
+):
+    """Both read-back APIs decode through one decoder, so on the same store
+    read_sink_objects and format('sink_objects') return the same
+    (object_name, topic, partition, start_offset, *fields) rows — values
+    and types — for every format, with the same binary_payloads choice."""
+    from kafka_connector_s3_sink_spark.records import KAFKA_RECORD_SCHEMA_BINARY
+    from kafka_connector_s3_sink_spark.sources.objects import read_sink_objects
+
+    fields = ("offset", "key", "value", "timestamp", "headers")
+    cfg = EngineConfig(
+        format_type=FormatType(fmt),
+        file_compression=CompressionType(compression),
+        value_encoding=FieldEncoding(encoding),
+        output_fields=tuple(OutputField(f) for f in fields),
+        file_max_records=2,
+    )
+
+    def payload(s):
+        # binary cases carry bytes that are not valid UTF-8
+        return None if s is None else (s.encode() + b"\xff" if binary else s)
+
+    rows = [
+        Row(topic="p-q", partition=i % 2, offset=100 + i,
+            key=payload(f"k{i}" if i != 2 else None),
+            value=payload(f"v{i}" if i != 3 else None),
+            timestamp=1000 + i if i != 4 else None,
+            headers=[Row(key="h", value=bytearray(b"x"))] if i == 1 else None)
+        for i in range(6)
+    ]
+    schema = KAFKA_RECORD_SCHEMA_BINARY if binary else KAFKA_RECORD_SCHEMA
+    store = str(tmp_path / "store")
+    write_batch(spark.createDataFrame(rows, schema), cfg, store)
+
+    cols = ["object_name", "topic", "partition", "start_offset", *fields]
+    api = (
+        spark.read.format("sink_objects")
+        .option("path", store)
+        .option("format", fmt)
+        .option("compression", compression)
+        .option("encoding", encoding)
+        .option("fields", ",".join(fields))
+        .option("binary_payloads", str(binary).lower())
+        .load()
+        .select(*cols)
+    )
+    fast = read_sink_objects(spark, store, cfg, binary_payloads=binary).select(*cols)
+
+    def plain(v):
+        if isinstance(v, bytearray):
+            return bytes(v)
+        if isinstance(v, (list, tuple)):
+            return tuple(plain(x) for x in v)
+        return v
+
+    def norm(df):
+        return sorted(
+            (tuple(plain(v) for v in r) for r in df.collect()),
+            key=lambda t: (t[0], t[4]),
+        )
+
+    assert [f.dataType.simpleString() for f in api.schema.fields] == [
+        f.dataType.simpleString() for f in fast.schema.fields
+    ]
+    got = norm(api)
+    assert len(got) == 6
+    assert got == norm(fast)

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Capture `.explain('formatted')` for every registered query into
-plans/r16/<query>_<tag>.txt — the optimization round's before/after evidence
-(the judge checks plan claims against these files).
+plans/<round>/<query>_<tag>.txt — an optimization round's before/after
+evidence (plan claims are checked against these files).
 
-Usage: python tools/capture_plans_r16.py <tag> [query ...]
+Usage: python tools/capture_plans.py <round> <tag> [query ...]
+  round: output directory under plans/, e.g. 'r16';
   tag: 'before' or 'after'; with no query names, captures all 50.
 
 Bench-equivalent session config (local[$SPARK_GRAFT_CPUS], AQE on) so the
@@ -26,17 +27,17 @@ def main() -> None:
 
     import __spark_entry__ as entrymod
 
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r16",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("plan-capture-r16")
+        .appName(f"plan-capture-{rnd}")
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
