@@ -41,7 +41,14 @@ import io
 import json
 import struct as _struct
 import uuid as _uuid
+import zlib
 from typing import Any
+
+from kafka_connector_s3_sink_spark.config import CompressionType
+from kafka_connector_s3_sink_spark.formats.compression import (
+    compress_bytes,
+    decompress_bytes,
+)
 
 _PRIMITIVES = {"null", "boolean", "int", "long", "float", "double", "bytes", "string"}
 
@@ -948,60 +955,42 @@ OCF_MAGIC = b"Obj\x01"
 # optional). deflate is a RAW DEFLATE stream (zlib wbits=-15 — the zlib/gzip
 # wrappers are absent per spec); snappy is raw-format snappy followed by a
 # 4-byte big-endian CRC32 of the UNCOMPRESSED data; zstandard is a plain
-# zstd frame. snappy/zstd ride pyarrow's codecs like formats/compression.py.
+# zstd frame. null/snappy/zstandard bodies are formats/compression.py's.
 _OCF_CODECS = ("null", "deflate", "snappy", "zstandard")
+_OCF_BODY_CODECS = {
+    "null": CompressionType.NONE,
+    "snappy": CompressionType.SNAPPY,
+    "zstandard": CompressionType.ZSTD,
+}
+
+
+def _snappy_crc(data: bytes) -> bytes:
+    return _struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
+
+
+def _body_codec(codec: str) -> CompressionType:
+    if codec not in _OCF_BODY_CODECS:
+        raise AvroError(f"unsupported OCF codec {codec!r} (have {_OCF_CODECS})")
+    return _OCF_BODY_CODECS[codec]
 
 
 def _ocf_compress(data: bytes, codec: str) -> bytes:
-    if codec == "null":
-        return data
     if codec == "deflate":
-        import zlib
-
         c = zlib.compressobj(9, zlib.DEFLATED, -15)
         return c.compress(data) + c.flush()
-    if codec == "snappy":
-        import zlib
-
-        import pyarrow as pa
-
-        body = pa.Codec("snappy").compress(data, asbytes=True)
-        return body + _struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF)
-    if codec == "zstandard":
-        import pyarrow as pa
-
-        return pa.Codec("zstd").compress(data, asbytes=True)
-    raise AvroError(f"unsupported OCF codec {codec!r} (have {_OCF_CODECS})")
+    body = compress_bytes(data, _body_codec(codec))
+    return body + _snappy_crc(data) if codec == "snappy" else body
 
 
 def _ocf_decompress(data: bytes, codec: str) -> bytes:
-    if codec == "null":
-        return data
     if codec == "deflate":
-        import zlib
-
         return zlib.decompress(data, -15)
     if codec == "snappy":
-        import zlib
-
-        import pyarrow as pa
-
-        body, crc = data[:-4], data[-4:]
-        from kafka_connector_s3_sink_spark.formats.compression import (
-            _snappy_uvarint,
-        )
-
-        out = pa.Codec("snappy").decompress(
-            body, decompressed_size=_snappy_uvarint(body), asbytes=True
-        )
-        if _struct.pack(">I", zlib.crc32(out) & 0xFFFFFFFF) != crc:
+        out = decompress_bytes(data[:-4], CompressionType.SNAPPY)
+        if _snappy_crc(out) != data[-4:]:
             raise AvroError("snappy block CRC mismatch")
         return out
-    if codec == "zstandard":
-        import pyarrow as pa
-
-        return pa.CompressedInputStream(pa.BufferReader(data), "zstd").read()
-    raise AvroError(f"unsupported OCF codec {codec!r} (have {_OCF_CODECS})")
+    return decompress_bytes(data, _body_codec(codec))
 
 
 class OCFWriter:

@@ -272,20 +272,6 @@ def ngram_jaccard_dupes(
 # -- MinHash + LSH --------------------------------------------------------
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, k: int = 3) -> Column:
-    """MinHash signature: for seed j, min over shingles of md5(j || ':' || shingle)
-    (lexicographic min over hex — a valid min-wise hash family; identical in
-    DuckDB for the oracle). Returns array<string> of length num_hashes."""
-    sh = shingles(text, k)
-    seeds = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.transform(
-        seeds,
-        lambda j: F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(j.cast("string"), F.lit(":"), s)))
-        ),
-    )
-
-
 def minhash_bands(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -861,29 +847,6 @@ def dedup_cascade(
 
 
 # -- SimHash --------------------------------------------------------------
-
-
-def simhash16(text: Column) -> Column:
-    """16-bit SimHash over whitespace tokens: bit i of md5's leading 16 bits,
-    majority-voted across tokens. conv(hex,16,10) parses the hex prefix."""
-    toks = tokens_column(normalized_text(text))
-    tok_hash = F.transform(toks, lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long"))
-
-    def vote_fn(i: int):
-        # closure factory: a default-arg lambda would change the lambda's arity
-        # and break PySpark's higher-order-function binding
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bits = []
-    for i in range(16):
-        vote = F.aggregate(tok_hash, F.lit(0), vote_fn(i))
-        bits.append(F.when(vote > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
 
 
 def simhash_table(

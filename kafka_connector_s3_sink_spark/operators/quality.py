@@ -442,15 +442,6 @@ def _trigram_triples_from_tokens(tk: DataFrame) -> DataFrame:
     )
 
 
-def _trigram_triples(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, w1, w2, w3) — one row per adjacent lowercased-token triple.
-    Pure JVM array ops (three slices zipped, exploded); a doc with < 3
-    tokens emits nothing."""
-    return _trigram_triples_from_tokens(_tokens_frame(df, id_col, text_col))
-
-
 def trigram_perplexity(
     docs: DataFrame,
     model_docs: DataFrame | None = None,

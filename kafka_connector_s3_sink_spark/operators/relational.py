@@ -260,20 +260,6 @@ def top_users_by_value(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFra
 # -- set operations -------------------------------------------------------
 
 
-def customers_without_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-op surface (EXCEPT): customers who placed orders but have no event
-    activity, phrased as distinct + left_anti join — the scalable phrasing (an
-    EXCEPT would distinct-shuffle whole rows on both sides; the anti join
-    reduces each side to its key first, and AQE broadcasts the distinct user
-    set when it is actually small — no forced hint, the user universe scales
-    with the data)."""
-    orders = _t(spark, sf_dir, "orders")
-    ev = _t(spark, sf_dir, "events")
-    order_custs = orders.select(F.col("o_custkey").alias("custkey")).distinct()
-    event_users = ev.select(F.col("user_id").alias("custkey")).distinct()
-    return order_custs.join(event_users, "custkey", "left_anti").orderBy("custkey")
-
-
 def parts_with_orders_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join surface: parts that appear in at least one lineitem.
     left_semi keeps only the probe side's columns — no duplication, and the
@@ -305,22 +291,6 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def user_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead surface: per user, seconds since the previous event and until
-    the next one — single shuffle on user_id, one in-partition sort serves
-    both window functions."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    prev_ts = F.lag("ts").over(w)
-    next_ts = F.lead("ts").over(w)
-    return ev.select(
-        "user_id",
-        "event_id",
-        (F.unix_millis(F.col("ts")) - F.unix_millis(prev_ts)).alias("ms_since_prev"),
-        (F.unix_millis(next_ts) - F.unix_millis(F.col("ts"))).alias("ms_until_next"),
-    )
-
-
 def distinct_users_per_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact COUNT(DISTINCT) per group — Spark plans expand + two-phase agg;
     the companion approx (HLL) variant is `approx_distinct_users` (rows-only
@@ -346,17 +316,6 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.approx_count_distinct("user_id", 0.01).alias("approx_users"))
         .orderBy("event_type")
     )
-
-
-def active_customers_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-op surface (INTERSECT): customers that placed orders AND have event
-    activity — phrased as distinct + left_semi join (each side reduces to its
-    key before the shuffle; INTERSECT would shuffle whole rows)."""
-    orders = _t(spark, sf_dir, "orders")
-    ev = _t(spark, sf_dir, "events")
-    order_custs = orders.select(F.col("o_custkey").alias("custkey")).distinct()
-    event_users = ev.select(F.col("user_id").alias("custkey")).distinct()
-    return order_custs.join(event_users, "custkey", "left_semi").orderBy("custkey")
 
 
 def customer_activity_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,23 +431,6 @@ def order_rank_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def string_function_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String-function surface over customer: regexp extraction, padding,
-    translate/replace, split, trim variants, instr — pure map stage."""
-    cust = _t(spark, sf_dir, "customer")
-    return cust.select(
-        "c_custkey",
-        F.regexp_extract(F.col("c_name"), r"(\d+)$", 1).alias("name_digits"),
-        F.lpad(F.col("c_custkey").cast("string"), 9, "0").alias("key_padded"),
-        F.translate(F.col("c_mktsegment"), "AEIOU", "aeiou").alias("seg_translated"),
-        F.replace(F.col("c_name"), F.lit("Customer"), F.lit("Cust")).alias("name_short"),
-        F.split(F.col("c_name"), "#")[0].alias("name_prefix"),
-        F.instr(F.col("c_name"), "#").alias("hash_pos"),
-        F.reverse(F.col("c_mktsegment")).alias("seg_reversed"),
-        F.initcap(F.lower(F.col("c_mktsegment"))).alias("seg_initcap"),
-    )
-
-
 def json_function_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-function surface over the events props payload: path extraction,
     typed extraction, key listing, validity probe."""
@@ -527,31 +469,6 @@ def value_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:
             stable_round(F.max("value"), 2).alias("value_max"),
         )
         .orderBy("event_type")
-    )
-
-
-def scalar_function_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """String/math/datetime/conditional scalar-function surface in one
-    projection (no shuffle; pure map stage, whole-stage codegen end to end)."""
-    orders = _t(spark, sf_dir, "orders")
-    return orders.select(
-        "o_orderkey",
-        F.upper(F.col("o_orderpriority")).alias("prio_upper"),
-        F.substring(F.col("o_orderpriority"), 1, 1).alias("prio_code"),
-        F.length(F.col("o_orderpriority")).alias("prio_len"),
-        F.concat_ws("#", F.col("o_orderstatus"), F.col("o_orderpriority")).alias(
-            "status_prio"
-        ),
-        F.abs(F.col("o_totalprice") - F.lit(100000.0)).alias("price_dev"),
-        stable_round(F.sqrt(F.col("o_totalprice")), 4).alias("price_sqrt"),
-        (F.col("o_orderkey") % 7).alias("key_mod7"),
-        F.year(F.col("o_orderdate")).alias("o_year"),
-        F.month(F.col("o_orderdate")).alias("o_month"),
-        F.dayofmonth(F.col("o_orderdate")).alias("o_day"),
-        F.when(F.col("o_totalprice") > 200000, F.lit("high"))
-        .when(F.col("o_totalprice") > 50000, F.lit("mid"))
-        .otherwise(F.lit("low"))
-        .alias("price_band"),
     )
 
 

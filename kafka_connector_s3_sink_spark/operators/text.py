@@ -101,12 +101,6 @@ def quality_score(text: Column) -> Column:
     return stable_round(0.5 * len_score + 0.3 * stop_score + 0.2 * (1.0 - punct_penalty), 4)
 
 
-def language_id(text: Column) -> Column:
-    """Stopword-ratio language heuristic: 'en' when common-English-stopword ratio
-    clears a threshold, else 'und' (undetermined)."""
-    return F.when(stopword_ratio(text) >= 0.08, F.lit("en")).otherwise(F.lit("und"))
-
-
 # Per-language function-word profiles (high-frequency closed-class words,
 # public linguistic knowledge). Deliberately DISJOINT: shared forms ('in',
 # 'a', 'die', 'je', 'tak'…) are kept only under their most distinctive
@@ -429,18 +423,6 @@ def html_main_content(html: Column) -> Column:
 def fingerprint(text: Column) -> Column:
     """md5 of the normalized text (exact-dup key)."""
     return F.md5(normalized_text(text))
-
-
-def shingle_fingerprint(text: Column, k: int = 3) -> Column:
-    """Order-insensitive rolling fingerprint: md5 of the lexicographic min/max
-    word-k-gram hashes — robust to local edits, used as a cheap near-dup key."""
-    toks = tokens_column(normalized_text(text))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingles = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, k)))
-    )
-    return F.md5(F.concat(F.array_min(shingles), F.array_max(shingles)))
 
 
 def nonempty_lines(text: Column) -> Column:

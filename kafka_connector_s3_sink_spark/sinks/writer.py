@@ -27,7 +27,8 @@ bytes into ``raw``. Text (CSV/JSONL/JSON) joins each slice with one C-level
 columnar (parquet/ORC) buffers the group's Arrow slices and writes one table;
 Avro encodes each slice column by column (numpy over the Arrow buffers) and
 frames the encoded rows into OCF blocks. No value round-trips through pickled
-Rows.
+Rows. ``sources.warc.write_warc`` writes its crawl archives through the same
+loop: one archive per partition, with a WARC record encoder.
 Object I/O goes through ``sinks.storage.ObjectStorage`` (pyarrow.fs), so
 ``dest_dir`` may be a local path, ``file://``, ``s3://``, ``gs://`` or
 ``hdfs://`` URI; every object commit is atomic (temp+rename, or direct PUT on

@@ -20,32 +20,45 @@ This module is the missing first stage in front of the existing pipeline
   vectorized batches). Per-RECORD corruption is routed, not fatal: per-member
   gzip framing means a damaged member resynchronizes at the next member, so
   one flipped byte costs one record, and the ``parse_error`` column says why.
+- ``WarcDataSource`` (``spark.read``/``readStream.format("warc")``): the same
+  records, one partition per archive, each task streaming its archive in
+  1 MiB storage reads (O(chunk) memory instead of O(archive)).
 - ``warc_documents``: ``response``/``conversion`` records → the ``documents``
   shape the rest of the engine consumes (``url``, ``fetched_at``, ``text``
   via ``html_to_text`` for HTML responses, payload text for WET).
-- ``write_warc``: the inverse, one archive per partition streamed through
-  ``sinks.storage.ObjectStorage`` (same abort-on-error commit discipline as
-  the sink writer) — spec-compliant output (wget/warcio-compatible framing),
-  used both as an export sink and as the distributed fixture generator for
-  the correctness gate's byte-losslessness proof.
+- ``write_warc``: the inverse, one archive per partition written by the
+  sink's object-write loop (``sinks.writer._write_objects`` — the same open /
+  abort-on-error / commit as every sink format) — spec-compliant output
+  (wget/warcio-compatible framing), used both as an export sink and as the
+  distributed fixture generator for the correctness gate's
+  byte-losslessness proof.
+
+Both readers run one decoder: ``_archive_triples`` (gzip sniff →
+``_gunzip_members`` → ``_parse_records_streaming``) → ``_record_rows``, fed
+the archive in 1 MiB chunks — ``read_warc`` slices the whole archive
+binaryFile handed the task, the DataSource reads them from storage — so the
+same archives yield the same rows, damaged ones included.
 
 Scale notes: binaryFile materializes one whole archive per task row —
 bounded by archive size (CommonCrawl caps segments at ~1 GB), not corpus
 size; at 100 TB that is ~100k independent tasks with no shuffle anywhere in
-the scan→parse→extract chain. Parsing is pure Python per batch but runs once
-per corpus byte at ingest, emitting columnar Arrow batches whose payloads
-downstream JVM expressions (html_to_text, urls) process without re-crossing
-the Python boundary.
+the scan→parse→extract chain (the DataSource drops even that bound).
+Parsing is pure Python per batch but runs once per corpus byte at ingest,
+emitting columnar Arrow batches whose payloads downstream JVM expressions
+(html_to_text, urls) process without re-crossing the Python boundary.
 """
 
 from __future__ import annotations
 
+import itertools
 import zlib
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kafka_connector_s3_sink_spark.sources.objects import check_on_error
 
 WARC_RECORD_SCHEMA = T.StructType(
     [
@@ -65,35 +78,56 @@ WARC_RECORD_SCHEMA = T.StructType(
 )
 
 _GZIP_MAGIC = b"\x1f\x8b"
+_CHUNK = 1 << 20  # bytes per decoder feed (and per DataSource storage read)
 
 
 # ---------------------------------------------------------------------------
 # pure-Python record codec (runs inside tasks; no Spark imports at module use)
 
 
-def _iter_gzip_members(data: bytes) -> Iterator[tuple[bytes | None, str | None]]:
-    """Decompress a multi-member gzip stream member by member, yielding
-    (member_bytes, None) or (None, error) — a corrupt member is reported and
-    iteration RESUMES at the next gzip magic, so damage is contained to the
-    records inside one member (the splittability property crawl WARCs are
-    compressed per-record to provide)."""
-    pos = 0
-    while pos < len(data):
-        d = zlib.decompressobj(wbits=31)
-        try:
-            member = d.decompress(data[pos:])
-            if not d.eof:
-                yield None, "truncated gzip member"
-                return
-            consumed = len(data) - pos - len(d.unused_data)
-            pos += max(consumed, 1)
-            yield member, None
-        except zlib.error as e:
-            nxt = data.find(_GZIP_MAGIC, pos + 2)
-            yield None, f"corrupt gzip member: {e}"
-            if nxt == -1:
-                return
-            pos = nxt
+def _gunzip_members(chunks: Iterable[bytes]) -> Iterator[bytes | str | None]:
+    """Multi-member gzip → decompressed byte pieces, incrementally: each
+    compressed chunk is fed to the current member's decompressor and its
+    output yielded at once, so memory is O(chunk), never O(archive) — one task
+    streams a 1 GB CommonCrawl segment without holding it.
+
+    ``None`` marks the end of each member. A corrupt member yields one
+    ``"corrupt gzip member: …"`` string and decoding RESUMES at the next gzip
+    magic, so damage is contained to the records inside one member (the
+    splittability property crawl WARCs are compressed per-record to provide);
+    input ending inside a member yields ``"truncated gzip member"``."""
+    d = None  # the in-flight member's decompressor
+    seeking = False  # after a corrupt member: looking for the next magic
+    carry = b""  # a trailing magic byte that may pair with the next chunk
+    for chunk in chunks:
+        data, carry = carry + chunk, b""
+        while data:
+            if seeking:
+                at = data.find(_GZIP_MAGIC)
+                if at == -1:
+                    carry = data[-1:] if data[-1:] == _GZIP_MAGIC[:1] else b""
+                    break
+                data, seeking = data[at:], False
+            fresh = d is None
+            if fresh:
+                d = zlib.decompressobj(wbits=31)
+            try:
+                out = d.decompress(data)
+            except zlib.error as e:
+                yield f"corrupt gzip member: {e}"
+                d, seeking = None, True
+                if fresh:  # the member starts here: seek past its own magic
+                    data = data[1:]
+                continue
+            if out:
+                yield out
+            if d.eof:
+                yield None
+                data, d = d.unused_data, None
+            else:
+                data = b""
+    if d is not None:
+        yield "truncated gzip member"
 
 
 def _find_header_end(data, start: int = 0) -> tuple[int, int]:
@@ -141,43 +175,91 @@ def _parse_header_block(block: bytes) -> dict[str, str]:
     return headers
 
 
+def _frame_record(buf: bytearray, pos: int) -> tuple[tuple, int] | None:
+    """The record starting at ``buf[pos:]`` (after inter-record CRLFs) as
+    ``((headers, block, error), end)``, or ``None`` while it is incomplete.
+
+    Framing per ISO 28500: version line, header lines, blank line, exactly
+    ``Content-Length`` payload bytes, ``CRLF CRLF``."""
+    while pos < len(buf) and buf[pos] in b"\r\n":
+        pos += 1
+    if len(buf) - pos < 5:
+        return None
+    if buf[pos : pos + 5] != b"WARC/":
+        return (None, None, "missing WARC/ version line"), len(buf)
+    head_end, sep = _find_header_end(buf, pos)
+    if head_end == -1:
+        return None  # header still incomplete
+    headers = _parse_header_block(bytes(buf[pos:head_end]))
+    try:
+        length = int(headers["content-length"])
+    except (KeyError, ValueError):
+        length = -1
+    if length < 0:
+        return (headers, None, "missing/invalid Content-Length"), len(buf)
+    body_start = head_end + sep
+    if len(buf) < body_start + length:
+        return None  # body incomplete
+    end = body_start + length
+    return (headers, bytes(buf[body_start:end]), None), end
+
+
+def _parse_records_streaming(
+    pieces: Iterable[bytes | str | None],
+) -> Iterator[tuple[dict[str, str] | None, bytes | None, str | None]]:
+    """The one WARC framer: decompressed byte pieces (``_gunzip_members``'
+    output, or a plain archive's bytes) → (headers, block, error) triples.
+
+    It buffers only until one record is complete (bounded by the largest
+    record), emits it and discards it. ``None`` (a gzip member ended) and an
+    error string (a member was corrupt or truncated — emitted as its own
+    triple) drop whatever is buffered; at a member end or the end of input an
+    incomplete record surfaces as ``payload truncated``. Content-Length is the
+    only record delimiter, so a framing error loses the rest of its own
+    member — in a plain archive, the rest of the stream."""
+    buf = bytearray()
+    pos = 0  # start of the unparsed bytes in buf
+    lost = False  # framing lost: skip to the next member
+    for piece in itertools.chain(pieces, [None]):
+        if isinstance(piece, str):
+            yield None, None, piece
+        elif piece is None:
+            if not lost and buf[pos:].strip(b"\r\n"):
+                yield None, None, "payload truncated"
+        else:
+            if not lost:
+                del buf[:pos]
+                buf += piece
+                pos = 0
+                while (got := _frame_record(buf, pos)) is not None:
+                    triple, pos = got
+                    yield triple
+                    if triple[2] is not None:
+                        lost = True
+                        break
+            continue
+        buf, pos, lost = bytearray(), 0, False
+
+
 def iter_warc_records(
     stream: bytes,
 ) -> Iterator[tuple[dict[str, str] | None, bytes | None, str | None]]:
-    """Parse UNCOMPRESSED WARC bytes into (headers, block, error) triples.
+    """Parse UNCOMPRESSED WARC bytes into (headers, block, error) triples —
+    ``_parse_records_streaming`` over one piece, so a framing error ends the
+    stream (which is precisely why per-member gzip exists)."""
+    return _parse_records_streaming([stream])
 
-    Framing per ISO 28500: version line, header lines, blank line, exactly
-    ``Content-Length`` payload bytes, ``CRLF CRLF``. A framing error ends the
-    stream (Content-Length is the only record delimiter, so a bad length
-    loses the remainder — which is precisely why per-member gzip exists and
-    why ``read_warc`` works member-at-a-time)."""
-    pos = 0
-    n = len(stream)
-    while pos < n:
-        # skip inter-record CRLFs
-        while pos < n and stream[pos : pos + 1] in (b"\r", b"\n"):
-            pos += 1
-        if pos >= n:
-            return
-        if not stream[pos : pos + 5] == b"WARC/":
-            yield None, None, "missing WARC/ version line"
-            return
-        head_end, sep = _find_header_end(stream, pos)
-        if head_end == -1:
-            yield None, None, "unterminated WARC header block"
-            return
-        headers = _parse_header_block(stream[pos:head_end])
-        try:
-            length = int(headers["content-length"])
-        except (KeyError, ValueError):
-            yield headers, None, "missing/invalid Content-Length"
-            return
-        body_start = head_end + sep
-        if body_start + length > n:
-            yield headers, None, "payload truncated"
-            return
-        yield headers, stream[body_start : body_start + length], None
-        pos = body_start + length
+
+def _archive_triples(chunks: Iterable[bytes]) -> Iterator[tuple]:
+    """One archive's raw bytes, in chunks → (headers, block, error) triples:
+    a per-member gzip archive (sniffed by its magic) goes through
+    ``_gunzip_members``, a plain one straight to the framer."""
+    chunks = iter(chunks)
+    first = next(chunks, b"")
+    pieces = itertools.chain([first], chunks)
+    if first[:2] == _GZIP_MAGIC:
+        pieces = _gunzip_members(pieces)
+    return _parse_records_streaming(pieces)
 
 
 def _split_http_payload(block: bytes) -> tuple[int | None, str | None, bytes]:
@@ -198,6 +280,39 @@ def _split_http_payload(block: bytes) -> tuple[int | None, str | None, bytes]:
         status = None
     http_headers = _parse_header_block(head.split(b"\n", 1)[1] if b"\n" in head else b"")
     return status, http_headers.get("content-type"), block[head_end + sep :]
+
+
+def _record_rows(
+    fpath: str,
+    triples: Iterator[tuple],
+    on_error: str,
+) -> Iterator[tuple]:
+    """(headers, block, err) triples → WARC_RECORD_SCHEMA rows; an error
+    triple routes as a row carrying ``parse_error`` or, with
+    ``on_error="fail"``, raises."""
+    no = 0
+    for headers, block, err in triples:
+        if err is not None:
+            if on_error == "fail":
+                raise ValueError(f"{fpath}: {err}")
+            yield (fpath, no, None, None, None, None, None, None, None,
+                   None, None, err)
+            no += 1
+            continue
+        wtype = headers.get("warc-type")
+        status, http_ct, body = (None, None, block)
+        if wtype == "response":
+            status, http_ct, body = _split_http_payload(block)
+        yield (
+            fpath, no, wtype,
+            headers.get("warc-record-id"),
+            headers.get("warc-target-uri"),
+            headers.get("warc-date"),
+            headers.get("content-type"),
+            int(headers["content-length"]),
+            status, http_ct, body, None,
+        )
+        no += 1
 
 
 def build_record(
@@ -279,76 +394,27 @@ def read_warc(
     ``"fail"`` raises. Output batches are bounded by ``batch_records`` rows /
     ``batch_bytes`` payload bytes so a task's Arrow batches stay small even
     when one archive holds millions of records."""
-    if on_error not in ("fail", "route"):
-        raise ValueError(f"on_error must be 'fail' or 'route', got {on_error!r}")
+    check_on_error(on_error)
+    columns = [f.name for f in WARC_RECORD_SCHEMA.fields]
 
     def decode(batches) -> Iterator:
         import pandas as pd
 
         rows: list[tuple] = []
         held = 0
-
-        def flush():
-            nonlocal rows, held
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in WARC_RECORD_SCHEMA.fields]
-                )
-                rows, held = [], 0
-
-        def emit(row):
-            nonlocal held
-            rows.append(row)
-            held += len(row[10] or b"")
-
         for pdf in batches:
             for fpath, content in zip(pdf["path"], pdf["content"]):
-                data = bytes(content)
-                no = 0
-                if data[:2] == _GZIP_MAGIC:
-                    chunks = _iter_gzip_members(data)
-                else:
-                    chunks = iter([(data, None)])
-                for member, gz_err in chunks:
-                    if gz_err is not None:
-                        if on_error == "fail":
-                            raise ValueError(f"{fpath}: {gz_err}")
-                        emit((fpath, no, None, None, None, None, None, None,
-                              None, None, None, gz_err))
-                        no += 1
-                        continue
-                    for headers, block, err in iter_warc_records(member):
-                        if err is not None:
-                            if on_error == "fail":
-                                raise ValueError(f"{fpath}: {err}")
-                            emit((fpath, no, None, None, None, None, None,
-                                  None, None, None, None, err))
-                            no += 1
-                            continue
-                        wtype = headers.get("warc-type")
-                        status, http_ct, body = (None, None, block)
-                        if wtype == "response":
-                            status, http_ct, body = _split_http_payload(block)
-                        emit(
-                            (
-                                fpath,
-                                no,
-                                wtype,
-                                headers.get("warc-record-id"),
-                                headers.get("warc-target-uri"),
-                                headers.get("warc-date"),
-                                headers.get("content-type"),
-                                int(headers["content-length"]),
-                                status,
-                                http_ct,
-                                body,
-                                None,
-                            )
-                        )
-                        no += 1
-                        if len(rows) >= batch_records or held >= batch_bytes:
-                            yield from flush()
-            yield from flush()
+                view = memoryview(content)
+                chunks = (view[i : i + _CHUNK] for i in range(0, len(view), _CHUNK))
+                triples = _archive_triples(chunks)
+                for row in _record_rows(fpath, triples, on_error):
+                    rows.append(row)
+                    held += len(row[10] or b"")
+                    if len(rows) >= batch_records or held >= batch_bytes:
+                        yield pd.DataFrame(rows, columns=columns)
+                        rows, held = [], 0
+        if rows:
+            yield pd.DataFrame(rows, columns=columns)
 
     raw = (
         spark.read.format("binaryFile")
@@ -455,88 +521,96 @@ def write_warc(
     """Write ``(target_uri, payload [, warc_date, http_status,
     http_content_type])`` rows as spec-framed WARC archives, one
     ``<prefix>-<partitionId>.warc[.gz]`` per partition, per-record gzip
-    members (splittable), streamed through ``ObjectStorage`` with the sink's
-    abort-on-error commit (a failed task leaves no partial archive; a retry
-    reproduces identical bytes — record ids are content-derived). Returns the
-    object names written. Rows with null payload are skipped.
+    members (splittable), written by the sink's ``_write_objects`` loop with
+    its abort-on-error commit (a failed task leaves no partial archive; a
+    retry reproduces identical bytes — record ids are content-derived).
+    Returns the object names written. Rows with null payload are skipped.
 
     ``record_type="response"`` (default) wraps each payload in an HTTP
     response (a crawl archive); ``"conversion"`` writes the payload verbatim
     as ``text/plain`` conversion records — the WET shape (see ``write_wet``
     for the documents-DataFrame convenience form)."""
     from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
+    from kafka_connector_s3_sink_spark.sinks.writer import _write_objects
 
     if record_type not in ("response", "conversion"):
         raise ValueError(f"record_type must be response|conversion, got {record_type!r}")
-    storage = ObjectStorage(dest_dir)
     cols = set(df.columns)
-    sel = [
-        F.col("target_uri"),
-        F.col("payload"),
-        (F.col("warc_date") if "warc_date" in cols
-         else F.lit("2024-01-01T00:00:00Z")).alias("warc_date"),
-        (F.col("http_status") if "http_status" in cols else F.lit(200))
-        .alias("http_status"),
-        (F.col("http_content_type") if "http_content_type" in cols
-         else F.lit("text/html; charset=utf-8")).alias("http_content_type"),
-    ]
     wet = record_type == "conversion"
     ext = (".warc.wet" if wet else ".warc") + (".gz" if compress else "")
+    name = F.concat(
+        F.lit(f"{file_prefix}-"),
+        F.format_string("%05d", F.spark_partition_id()),
+        F.lit(ext),
+    )
+    rows = (
+        df.select(
+            name.alias("_file"),
+            F.col("target_uri"),
+            F.col("payload"),
+            (F.col("warc_date") if "warc_date" in cols
+             else F.lit("2024-01-01T00:00:00Z")).alias("warc_date"),
+            (F.col("http_status") if "http_status" in cols else F.lit(200))
+            .alias("http_status"),
+            (F.col("http_content_type") if "http_content_type" in cols
+             else F.lit("text/html; charset=utf-8")).alias("http_content_type"),
+        )
+        # filter AFTER the projection: spark_partition_id() makes it
+        # nondeterministic, so Catalyst cannot push the filter below a
+        # caller's repartition and move rows between archives
+        .filter(F.col("payload").isNotNull())
+        .mapInArrow(
+            _write_objects(ObjectStorage(dest_dir), _warc_encoder(compress, warcinfo, wet)),
+            "object string, records long",
+        )
+        .collect()
+    )
+    return sorted(r[0] for r in rows)
 
-    def write_partition(rows: Iterator) -> Iterator[str]:
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        name = f"{file_prefix}-{pid:05d}{ext}"
-        first = True
-        wrote = False
-        with storage.open_output(name) as out:
-            def put(record: bytes):
-                out.write(_gzip_member(record) if compress else record)
+def _warc_encoder(compress: bool, warcinfo: str | None, wet: bool):
+    """``_write_objects`` encoder for one archive: the ``warcinfo`` record
+    (dated like the archive's first row) and then one record per row, each
+    its own gzip member when ``compress``."""
 
-            for row in rows:
-                if row["payload"] is None:
-                    continue
-                if first and warcinfo is not None:
-                    put(build_record("warcinfo", warcinfo.encode("utf-8"),
-                                     warc_date=row["warc_date"]))
-                first = False
-                wrote = True
-                if wet:
-                    put(
-                        build_record(
-                            "conversion",
-                            bytes(row["payload"]),
-                            target_uri=row["target_uri"],
-                            warc_date=row["warc_date"],
-                            content_type="text/plain",
-                        )
-                    )
-                    continue
-                http = build_http_response_payload(
-                    bytes(row["payload"]),
-                    status=row["http_status"],
-                    content_type=row["http_content_type"],
-                )
-                put(
-                    build_record(
-                        "response",
-                        http,
-                        target_uri=row["target_uri"],
-                        warc_date=row["warc_date"],
-                    )
-                )
-            if not wrote:
-                raise _EmptyPartition()  # abort: no empty archives
-        yield name
+    def record(row: dict) -> bytes:
+        if wet:
+            return build_record(
+                "conversion",
+                row["payload"],
+                target_uri=row["target_uri"],
+                warc_date=row["warc_date"],
+                content_type="text/plain",
+            )
+        http = build_http_response_payload(
+            row["payload"],
+            status=row["http_status"],
+            content_type=row["http_content_type"],
+        )
+        return build_record(
+            "response", http, target_uri=row["target_uri"], warc_date=row["warc_date"]
+        )
 
-    def safe(rows: Iterator) -> Iterator[str]:
-        try:
-            yield from write_partition(rows)
-        except _EmptyPartition:
-            return
+    def encoder(raw, name):
+        info = warcinfo
 
-    return sorted(df.select(*sel).rdd.mapPartitions(safe).collect())
+        def append(rows):
+            nonlocal info
+            records = []
+            for row in rows.to_pylist():
+                if info is not None:
+                    records.append(build_record(
+                        "warcinfo", info.encode("utf-8"), warc_date=row["warc_date"]
+                    ))
+                    info = None
+                records.append(record(row))
+            if compress:
+                records = map(_gzip_member, records)
+            raw.write(b"".join(records))
+
+        return append, lambda: None
+
+    return encoder
 
 
 def write_wet(
@@ -565,10 +639,6 @@ def write_wet(
         warcinfo=warcinfo,
         record_type="conversion",
     )
-
-
-class _EmptyPartition(Exception):
-    """Control-flow: a partition with no payload rows writes no archive."""
 
 
 def compact_warc_store(
@@ -648,124 +718,12 @@ def compact_warc_store(
 
 
 # ---------------------------------------------------------------------------
-# constant-memory streaming decode + the registrable "warc" Data Source
+# the registrable "warc" Data Source
 
 
-def _decompress_members_streaming(chunks: Iterator[bytes]) -> Iterator[bytes]:
-    """Multi-member gzip → decompressed byte pieces, incrementally: each
-    compressed chunk is fed to the current member's decompressor and any
-    output yielded immediately; at member end the leftover bytes seed the
-    next member. Memory is O(chunk), never O(archive) — the property that
-    lets one task stream a 1 GB CommonCrawl segment without holding it."""
-    d = zlib.decompressobj(wbits=31)
-    for chunk in chunks:
-        while chunk:
-            out = d.decompress(chunk)
-            if out:
-                yield out
-            if d.eof:
-                chunk = d.unused_data
-                d = zlib.decompressobj(wbits=31)
-            else:
-                chunk = b""
-
-
-def _parse_records_streaming(
-    pieces: Iterator[bytes],
-) -> Iterator[tuple[dict[str, str] | None, bytes | None, str | None]]:
-    """Incremental WARC framing over a byte stream: buffers only until one
-    record is complete (bounded by max record size), emits, and discards.
-    A trailing partial record surfaces as one error triple."""
-    buf = bytearray()
-
-    def try_one() -> tuple | None:
-        # skip inter-record CRLFs
-        start = 0
-        while start < len(buf) and buf[start : start + 1] in (b"\r", b"\n"):
-            start += 1
-        if len(buf) - start < 5:
-            return None
-        if bytes(buf[start : start + 5]) != b"WARC/":
-            return (None, None, "missing WARC/ version line"), len(buf)
-        head_end, sep = _find_header_end(buf, start)
-        if head_end == -1:
-            return None  # header still incomplete
-        headers = _parse_header_block(bytes(buf[start:head_end]))
-        try:
-            length = int(headers["content-length"])
-        except (KeyError, ValueError):
-            return (headers, None, "missing/invalid Content-Length"), len(buf)
-        body_start = head_end + sep
-        if len(buf) < body_start + length:
-            return None  # body incomplete
-        body = bytes(buf[body_start : body_start + length])
-        return (headers, body, None), body_start + length
-
-    for piece in pieces:
-        buf += piece
-        while True:
-            got = try_one()
-            if got is None:
-                break
-            triple, consumed = got
-            yield triple
-            del buf[:consumed]
-            if triple[2] is not None:
-                # framing lost: Content-Length is the only record delimiter,
-                # so the remainder is unparseable — stop (the binaryFile
-                # route's per-member resync is read_warc's job)
-                return
-    if bytes(buf).strip(b"\r\n"):
-        yield None, None, "payload truncated"
-
-
-def _record_rows(
-    fpath: str,
-    triples: Iterator[tuple],
-    on_error: str,
-) -> Iterator[tuple]:
-    """(headers, block, err) triples → WARC_RECORD_SCHEMA rows."""
-    no = 0
-    for headers, block, err in triples:
-        if err is not None:
-            if on_error == "fail":
-                raise ValueError(f"{fpath}: {err}")
-            yield (fpath, no, None, None, None, None, None, None, None,
-                   None, None, err)
-            no += 1
-            continue
-        wtype = (headers or {}).get("warc-type")
-        status, http_ct, body = (None, None, block)
-        if wtype == "response":
-            status, http_ct, body = _split_http_payload(block)
-        yield (
-            fpath, no, wtype,
-            headers.get("warc-record-id"),
-            headers.get("warc-target-uri"),
-            headers.get("warc-date"),
-            headers.get("content-type"),
-            int(headers["content-length"]),
-            status, http_ct, body, None,
-        )
-        no += 1
-
-
-def _open_archive_chunks(
-    storage, name: str, chunk_bytes: int = 1 << 20
-) -> Iterator[bytes]:
+def _open_archive_chunks(storage, name: str) -> Iterator[bytes]:
     with storage.open_input(name) as f:
-        head = f.read(2)
-        compressed = head == _GZIP_MAGIC
-        pieces = iter(lambda: f.read(chunk_bytes), b"")
-
-        def all_chunks() -> Iterator[bytes]:
-            yield head
-            yield from pieces
-
-        if compressed:
-            yield from _decompress_members_streaming(all_chunks())
-        else:
-            yield from all_chunks()
+        yield from iter(lambda: f.read(_CHUNK), b"")
 
 
 from pyspark.sql.datasource import (  # noqa: E402 — grouped with their users
@@ -782,9 +740,10 @@ class WarcDataSource(DataSource):
 
     This is the SCALE path next to ``read_warc``: the binaryFile route hands
     each task the whole archive as one row, so peak task memory is
-    O(archive); here each task STREAMS its archive through the incremental
-    gzip-member decoder (O(chunk) memory) — the difference between "works on
-    fixtures" and "works on 1 GB CommonCrawl segments". Planning is one
+    O(archive); here each task STREAMS its archive in 1 MiB reads through the
+    same decoder (O(chunk) memory) — the difference between "works on
+    fixtures" and "works on 1 GB CommonCrawl segments". Rows are
+    ``read_warc``'s, damaged archives included. Planning is one
     ``InputPartition`` per archive (driver lists names only); the streaming
     form's offset is the seen-archive set (crawl drops are immutable and
     append-only, the same listing-delta contract as ``sink_objects``), and
@@ -812,10 +771,7 @@ class _WarcReaderCore:
     def __init__(self, options):
         self._path = options["path"]
         self._on_error = options.get("on_error", "route")
-        if self._on_error not in ("fail", "route"):
-            raise ValueError(
-                f"on_error must be 'fail' or 'route', got {self._on_error!r}"
-            )
+        check_on_error(self._on_error)
 
     def _storage(self):
         from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
@@ -827,24 +783,9 @@ class _WarcReaderCore:
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
         # executor-side: stream one archive through the incremental decoder
-        storage = self._storage()
         name = partition.value
-
-        def triples() -> Iterator[tuple]:
-            # a gzip-stream error (corrupt member) aborts THIS archive's
-            # remainder but routes as one error row instead of failing the
-            # task — the batch binaryFile route (read_warc) additionally
-            # resyncs at member boundaries when forensics matter
-            try:
-                yield from _parse_records_streaming(
-                    _open_archive_chunks(storage, name)
-                )
-            except Exception as e:  # noqa: BLE001 — routed per policy
-                if self._on_error == "fail":
-                    raise
-                yield None, None, f"{type(e).__name__}: {e}"
-
-        return _record_rows(name, triples(), self._on_error)
+        chunks = _open_archive_chunks(self._storage(), name)
+        return _record_rows(name, _archive_triples(chunks), self._on_error)
 
 
 class _WarcBatchReader(_WarcReaderCore, DataSourceReader):

@@ -489,3 +489,94 @@ def test_compact_warc_store_mixed_types_sized_per_subset(spark, tmp_path):
     back = read_warc(spark, dest)
     assert back.filter(F.col("warc_type") == "response").count() == 10
     assert back.filter(F.col("warc_type") == "conversion").count() == 2
+
+
+def _members(n=5):
+    return [gzip.compress(build_record(
+        "response", build_http_response_payload(b"<p>%d</p>" % i),
+        target_uri=f"https://ex.com/{i}"), mtime=0) for i in range(n)]
+
+
+def _stomp(member):
+    bad = bytearray(member)
+    for i in range(12, 30):  # past the 10-byte gzip header: the magic survives
+        bad[i] ^= 0xFF
+    return bytes(bad)
+
+
+def _bad_length(member):
+    record = gzip.decompress(member)
+    return gzip.compress(
+        record.replace(b"Content-Length: ", b"Content-Length: x", 1), mtime=0
+    )
+
+
+_DAMAGED = {
+    "corrupt_first": lambda m: _stomp(m[0]) + b"".join(m[1:]),
+    "corrupt_middle": lambda m: b"".join(m[:2]) + _stomp(m[2]) + b"".join(m[3:]),
+    "corrupt_last": lambda m: b"".join(m[:4]) + _stomp(m[4]),
+    "garbage_between": lambda m: b"".join(m[:2]) + b"not gzip" + b"".join(m[2:]),
+    "framing_error": lambda m: b"".join(m[:2]) + _bad_length(m[2]) + b"".join(m[3:]),
+    "truncated_tail": lambda m: b"".join(m[:4]) + m[4][: len(m[4]) // 2],
+}
+
+
+@pytest.mark.parametrize("damage", sorted(_DAMAGED))
+def test_warc_datasource_matches_read_warc_on_damaged_archives(
+    warc_registered, spark, tmp_path, damage
+):
+    """Both readers share one decoder, so a damaged archive yields the same
+    rows through spark.read.format("warc") as through read_warc: the damage
+    costs its own member and both resume at the next one."""
+    (tmp_path / "d.warc.gz").write_bytes(_DAMAGED[damage](_members()))
+
+    def key(df):
+        return sorted(
+            (r["record_no"], r["warc_type"], r["target_uri"],
+             bytes(r["payload"]) if r["payload"] is not None else None,
+             r["http_status"], r["parse_error"])
+            for r in df.collect()
+        )
+
+    via_bf = key(read_warc(spark, str(tmp_path)))
+    via_ds = key(spark.read.format("warc").option("path", str(tmp_path)).load())
+    assert via_ds == via_bf
+    assert sum(r[5] is not None for r in via_bf) == 1
+    assert sum(r[5] is None for r in via_bf) == (5 if damage == "garbage_between" else 4)
+
+
+def test_write_warc_aborts_failed_archive(spark, tmp_path):
+    """A record that cannot be built fails the task, and the archive it was
+    streaming into is aborted: no archive and no in-progress temp remain."""
+    import os
+
+    rows = [
+        Row(target_uri=f"https://a/{i}", payload=b"<p>%d</p>" % i,
+            http_content_type=ctype)
+        for i, ctype in enumerate(
+            ["text/html", "text/html; charset=Ω", "text/html"]
+        )
+    ]
+    df = spark.createDataFrame(
+        rows, "target_uri string, payload binary, http_content_type string"
+    ).coalesce(1)
+    dest = tmp_path / "out"
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # the first record is written before the failure
+    try:
+        with pytest.raises(Exception, match="latin-1"):
+            write_warc(df, str(dest))
+    finally:
+        spark.conf.set(key, old)
+    assert not dest.exists() or os.listdir(dest) == []
+
+
+def test_negative_content_length_is_a_framing_error():
+    """A negative Content-Length is invalid, not a zero-length body that
+    would send the framer back into the header it just read."""
+    rec = build_record("resource", b"abc").replace(
+        b"Content-Length: 3", b"Content-Length: -3"
+    )
+    got = list(iter_warc_records(rec + build_record("metadata", b"after")))
+    assert [e for *_, e in got] == ["missing/invalid Content-Length"]
