@@ -82,74 +82,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def url_dedup(
-    df: DataFrame,
-    url_col: str = "url",
-    order_col: str | None = None,
-) -> DataFrame:
-    """URL-level dedup: one row per CANONICAL url (``urls.strip_tracking``
-    — the same page arrives under millions of utm_* variants). The kept row
-    is the max by ``order_col`` (latest fetch wins) or, with no order
-    column, a deterministic row-hash pick. Runs BEFORE content extraction
-    in a crawl pipeline (dedup by address is free; dedup by content costs
-    a parse), one ``max_by`` hash shuffle on the canonical key, all other
-    columns carried on the kept row."""
-    from kafka_connector_s3_sink_spark.operators.urls import strip_tracking
-
-    canonical = strip_tracking(F.col(url_col)).alias("canonical_url")
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    ordering = (
-        F.col(order_col)
-        if order_col is not None
-        # md5 over the whole row's JSON: deterministic, order-free
-        else F.md5(F.to_json(payload))
-    )
-    kept = (
-        df.select(canonical, payload.alias("_row"), ordering.alias("_ord"))
-        .groupBy("canonical_url")
-        .agg(
-            F.max_by(F.col("_row"), F.col("_ord")).alias("_kept"),
-            F.count(F.lit(1)).alias("n_variants"),
-        )
-    )
-    return kept.select(
-        "canonical_url",
-        "n_variants",
-        *[F.col(f"_kept.{c}").alias(c) for c in df.columns],
-    )
-
-
-def streaming_exact_dedup(
-    df: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    text_col: str = "text",
-) -> DataFrame:
-    """Watermark-bounded streaming exact dedup: the first record of each
-    normalized-content hash passes through; duplicates arriving within the
-    event-time watermark horizon are dropped
-    (``dropDuplicatesWithinWatermark`` — the state store holds ONE compact
-    entry per distinct hash inside the horizon and the watermark evicts it,
-    so state is bounded by distinct-content rate × horizon, not by stream
-    length). The horizon IS the guarantee: duplicates farther apart than the
-    watermark can pass — catching those is the persisted index's job
-    (``operators/incremental.py``), which this operator complements as the
-    cheap first line inside a crawl window.
-
-    Works identically on a batch frame (watermark is a no-op there) — one
-    code path, like everything in the sink surface."""
-    out = df.withColumn(
-        "_content_hash", F.md5(normalized_text(F.col(text_col)))
-    )
-    if out.isStreaming:
-        out = out.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            ["_content_hash"]
-        )
-    else:
-        out = out.dropDuplicates(["_content_hash"])
-    return out.drop("_content_hash")
-
-
 # -- shingles -------------------------------------------------------------
 
 
@@ -366,11 +298,11 @@ def minhash_lsh_pairs(
     docstring below names the same failure mode). Default ``None`` keeps
     exact LSH semantics; when no band's frequency exceeds the cap the
     capped and uncapped outputs are identical. Probe-backed sizing
-    (``tools/probe_r11.py`` hotband, SCALING.md r11 section): organic band
-    frequencies are single-digit at test scale while boilerplate families
-    are corpus-fraction-sized — ``max_band_df=64`` left genuine near-dup
-    recall identical to uncapped while cutting a planted 10%-boilerplate
-    corpus's candidate volume 4,700×.
+    (SCALING.md r11 section): organic band frequencies are single-digit at
+    test scale while boilerplate families are corpus-fraction-sized —
+    ``max_band_df=64`` left genuine near-dup recall identical to uncapped
+    while cutting a planted 10%-boilerplate corpus's candidate volume
+    4,700×.
 
     ``unpersist_registry`` collects the persisted bands frame (it feeds
     both self-join sides and, under the cap, the df count) for caller
@@ -1089,9 +1021,11 @@ def embedding_cosine_dupes(
     the r15-rejected shape (that unroll kept the array and paid 64
     ``element_at`` accesses per pair); flat columns bind directly to the
     join row. Addition order is identical to the fold (((d0)+d1)+…), so
-    values are bit-exact; an out-of-range index yields NULL which drops the
-    pair exactly like the fold's NULL propagation. ``dim=None`` keeps the
-    dimension-agnostic HOF form."""
+    values are bit-exact. A non-null vector whose size is not ``dim`` fails
+    the query with an error naming ``dim`` and the size — a longer one would
+    otherwise drop its tail from the dot but not from the norm (a wrong
+    cosine), a shorter one would hit a bare index error. ``dim=None`` keeps
+    the dimension-agnostic HOF form."""
     v = df.select(
         F.col(id_col).alias("vec_id"),
         F.col(block_col).alias("block"),
@@ -1105,11 +1039,22 @@ def embedding_cosine_dupes(
         F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x)),
     )
     if dim is not None:
+        vec = F.col("vec")
+        checked = F.when(vec.isNull() | (F.size(vec) == dim), vec).otherwise(
+            F.raise_error(
+                F.format_string(
+                    f"embedding_cosine_dupes: dim={dim} but vector %s has "
+                    "size %d",
+                    F.col("vec_id").cast("string"),
+                    F.size(vec),
+                )
+            )
+        )
         v = v.select(
             "vec_id",
             "block",
             "norm",
-            *[F.col("vec")[i].alias(f"_d{i}") for i in range(dim)],
+            *[checked[i].alias(f"_d{i}") for i in range(dim)],
         )
         a, b = v.alias("a"), v.alias("b")
         dot = F.col("a._d0") * F.col("b._d0")

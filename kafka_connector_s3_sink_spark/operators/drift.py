@@ -231,49 +231,3 @@ def drift_vs_baseline(
         )
         .orderBy("feature")
     )
-
-
-def corpus_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Snapshot-to-snapshot corpus diff: one row per document id seen in
-    either snapshot, with ``status`` ∈ {added, removed, changed, unchanged}
-    and both content fingerprints (``text.fingerprint`` — md5 of normalized
-    text, the exact-dedup key, so whitespace-only edits read as unchanged).
-
-    The dataset-governance primitive between crawl versions: what entered,
-    what left, what was edited — feeding incremental reprocessing (only
-    added/changed docs re-enter the pipeline) and audit trails.
-
-    Distributed shape: fingerprints are narrow row-local projections; the
-    diff is ONE full outer equi-join on the id (both sides hash-partition on
-    ``id_col``; AQE handles skew). Nothing is all-pairs, nothing collects.
-    """
-    from kafka_connector_s3_sink_spark.operators.text import fingerprint
-
-    o = old.select(
-        F.col(id_col).alias("doc_id"),
-        fingerprint(F.col(text_col)).alias("old_fp"),
-    )
-    n = new.select(
-        F.col(id_col).alias("doc_id"),
-        fingerprint(F.col(text_col)).alias("new_fp"),
-    )
-    status = (
-        F.when(F.col("old_fp").isNull(), F.lit("added"))
-        .when(F.col("new_fp").isNull(), F.lit("removed"))
-        .when(F.col("old_fp") == F.col("new_fp"), F.lit("unchanged"))
-        .otherwise(F.lit("changed"))
-    )
-    return o.join(n, "doc_id", "full_outer").select(
-        "doc_id", "old_fp", "new_fp", status.alias("status")
-    )
-
-
-def corpus_diff_summary(diff: DataFrame) -> DataFrame:
-    """(status, n_docs) rollup of ``corpus_diff`` — the one-line health
-    signal a scheduled re-crawl publishes next to its drift report."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n_docs"))

@@ -1,28 +1,15 @@
-"""Data layout for scan pruning — Z-order clustering + file-level zonemaps.
+"""Data layout for scan pruning — the Z-order clustering key.
 
 At 100 TB the fastest scan is the one that never happens: if files are
 written so that each one covers a narrow range of the filter columns, a
 point/range query touches a handful of files instead of the whole table.
-Two pieces (the same design as Delta/Iceberg `OPTIMIZE ZORDER BY` and
-ClickHouse/ORC min-max indexes, built here from public Spark + pyarrow
-primitives):
-
-- **Z-order clustering**: interleave the bits of per-column range buckets
-  into one clustering key; `repartitionByRange` + in-partition sort on it
-  writes files that are simultaneously tight on EVERY clustered column
-  (a lexicographic sort would be tight only on the first). The bucket
-  bounds are CONSTANTS supplied by the caller (no data-dependent sampling
-  — deterministic, and append batches cluster consistently with history).
-- **Zonemaps**: per-file min/max of the clustered columns, read from
-  parquet FOOTERS (O(footer bytes) per file, O(files) total — metadata
-  scale, not data scale); `prune_files` intersects a predicate with the
-  zonemap and returns only the files that can match.
-
-Spark's parquet reader already skips ROW GROUPS via pushed filters; the
-zonemap works a level above — at 1000 executors the win is not reading
-(or even listing into the scan) the files at all. The pruned read still
-applies the real filter, so pruning is a pure optimization: results are
-identical by construction (tested against the full scan).
+Z-order clustering (the same design as Delta/Iceberg `OPTIMIZE ZORDER BY`)
+interleaves the bits of per-column range buckets into one clustering key;
+`repartitionByRange` + in-partition sort on it writes files that are
+simultaneously tight on EVERY clustered column (a lexicographic sort would
+be tight only on the first). The bucket bounds are CONSTANTS supplied by the
+caller (no data-dependent sampling — deterministic, and append batches
+cluster consistently with history).
 """
 
 from __future__ import annotations
@@ -30,7 +17,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -72,108 +59,3 @@ def zorder_key(cols: Sequence[ZColumn], bits: int = 8) -> Column:
             bit = F.shiftright(bucket, b).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, b * len(cols) + c))
     return z
-
-
-def cluster_write(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[ZColumn],
-    n_files: int = 16,
-    bits: int = 8,
-) -> None:
-    """Write ``df`` as ``n_files`` Z-clustered parquet files: ONE range
-    shuffle on the z-key (contiguous key ranges → contiguous files) plus an
-    in-partition sort so row groups inside each file are tight too. The
-    z-key itself is not persisted — it is derivable from the data."""
-    zcol = zorder_key(cols, bits)
-    (
-        df.withColumn("_z", zcol)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def file_zonemaps(path: str, cols: Sequence[str]) -> list[dict]:
-    """Per-file min/max of ``cols`` from parquet footers. One footer read
-    per file (pyarrow random-access — never the data pages); O(files) rows
-    out. At 100 TB run this once per written batch and persist the result
-    next to the data — it IS the poor man's table-format manifest."""
-    import pyarrow.parquet as pq
-
-    from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
-
-    storage = ObjectStorage(path)
-    out = []
-    for obj in storage.listing():
-        if not obj.endswith(".parquet"):
-            continue
-        with storage.open_input_file(obj) as f:
-            md = pq.ParquetFile(f).metadata
-            mins: dict[str, object] = {}
-            maxs: dict[str, object] = {}
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    name = col.path_in_schema
-                    if name not in cols or col.statistics is None:
-                        continue
-                    st = col.statistics
-                    if not st.has_min_max:
-                        continue
-                    if name not in mins or st.min < mins[name]:
-                        mins[name] = st.min
-                    if name not in maxs or st.max > maxs[name]:
-                        maxs[name] = st.max
-        row = {"file": storage.full_path(obj), "n_rows": md.num_rows}
-        for c in cols:
-            row[f"{c}_min"] = mins.get(c)
-            row[f"{c}_max"] = maxs.get(c)
-        out.append(row)
-    return out
-
-
-def prune_files(
-    zonemaps: list[dict], predicates: dict[str, tuple[float, float]]
-) -> list[str]:
-    """Files whose [min, max] envelope intersects EVERY predicate interval
-    (inclusive bounds). A file with no stats for a predicated column is
-    conservatively kept — pruning must never drop a possible match."""
-    keep = []
-    for zm in zonemaps:
-        ok = True
-        for col, (lo, hi) in predicates.items():
-            cmin, cmax = zm.get(f"{col}_min"), zm.get(f"{col}_max")
-            if cmin is None or cmax is None:
-                continue
-            if cmax < lo or cmin > hi:
-                ok = False
-                break
-        if ok:
-            keep.append(zm["file"])
-    return keep
-
-
-def read_pruned(
-    spark: SparkSession,
-    path: str,
-    zonemaps: list[dict],
-    predicates: dict[str, tuple[float, float]],
-) -> DataFrame:
-    """Scan only the zonemap-surviving files, then apply the REAL filter —
-    pruning is an optimization, never a semantic: results equal the full
-    scan by construction. Returns an empty frame (correct schema) when
-    everything prunes."""
-    files = prune_files(zonemaps, predicates)
-    cond = None
-    for col, (lo, hi) in predicates.items():
-        c = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-        cond = c if cond is None else (cond & c)
-    if not files:
-        full = spark.read.parquet(path)
-        return full.filter(F.lit(False)) if cond is None else full.filter(cond).filter(F.lit(False))
-    df = spark.read.parquet(*files)
-    return df if cond is None else df.filter(cond)

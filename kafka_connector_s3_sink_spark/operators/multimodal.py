@@ -152,17 +152,6 @@ def _decode_wav(payload: bytes) -> dict:
     }
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("resize_error", T.StringType(), True),
-    ]
-)
-
-
 def _resize_bmp(payload: bytes, target_w: int, target_h: int) -> bytes:
     """Nearest-neighbor resize of an uncompressed 24/32-bit BMP, fully
     vectorized (numpy fancy indexing — no per-pixel Python), re-encoded as a
@@ -246,115 +235,6 @@ def _resample_wav(payload: bytes, target_rate: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def resample_audio(
-    media: DataFrame, target_rate: int, on_error: str = "capture"
-) -> DataFrame:
-    """Distributed audio resample: PCM WAV payloads → PCM WAV at
-    ``target_rate`` — the audio preprocessing twin of ``resize_images``
-    (speech models consume one fixed rate). Same execution shape and error
-    policy; output ``width`` = frames per channel at the new rate,
-    ``height`` = the new rate, matching ``_decode_wav``'s int-pair."""
-    if on_error not in ("raise", "capture"):
-        raise ValueError(f"on_error must be 'raise' or 'capture', got {on_error!r}")
-    capture = on_error == "capture"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, errors = [], []
-            for p in pdf["payload"]:
-                try:
-                    raw = bytes(p)
-                    if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                        raise NotImplementedError(
-                            "only PCM WAV resamples without an external codec "
-                            "library"
-                        )
-                    payloads.append(_resample_wav(raw, target_rate))
-                    errors.append(None)
-                except Exception as e:  # noqa: BLE001 — routed per policy
-                    if not capture:
-                        raise
-                    payloads.append(None)
-                    errors.append(f"{type(e).__name__}: {e}")
-            decoded = [
-                _decode_wav(b) if b is not None else {"width": None, "height": None}
-                for b in payloads
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "payload": payloads,
-                    "width": [d["width"] for d in decoded],
-                    "height": [d["height"] for d in decoded],
-                    "resize_error": errors,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, RESIZE_SCHEMA)
-
-
-def resize_images(
-    media: DataFrame,
-    target_w: int,
-    target_h: int,
-    on_error: str = "capture",
-) -> DataFrame:
-    """Distributed image resize: BMP payloads → BMP payloads at
-    (target_w, target_h), the preprocessing step a vision-training pipeline
-    runs before feature extraction/packing. Same execution shape as
-    ``extract_features`` — payloads never leave their partition, Arrow moves
-    each batch once, the per-image work is vectorized numpy. ``on_error``
-    mirrors the decoder: ``"capture"`` (default — crawl posture) keeps the
-    row with a ``resize_error``; ``"raise"`` fails the task. Entropy-coded
-    inputs raise the same honest ``NotImplementedError`` as
-    ``real_decoder``; production plugs a codec library into ``_resize_bmp``'s
-    slot."""
-    if on_error not in ("raise", "capture"):
-        raise ValueError(f"on_error must be 'raise' or 'capture', got {on_error!r}")
-    capture = on_error == "capture"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, errors = [], []
-            for p in pdf["payload"]:
-                try:
-                    if bytes(p[:2]) != b"BM":
-                        raise NotImplementedError(
-                            "only uncompressed BMP resizes without an external "
-                            "codec library"
-                        )
-                    payloads.append(_resize_bmp(bytes(p), target_w, target_h))
-                    errors.append(None)
-                except Exception as e:  # noqa: BLE001 — routed per policy
-                    if not capture:
-                        raise
-                    payloads.append(None)
-                    errors.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].to_numpy(),
-                    "payload": payloads,
-                    "width": [target_w if e is None else None for e in errors],
-                    "height": [target_h if e is None else None for e in errors],
-                    "resize_error": errors,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(run, RESIZE_SCHEMA)
-
-
-FRAME_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_no", T.IntegerType(), True),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("decode_error", T.StringType(), True),
-    ]
-)
-
-
 def _y4m_frames(payload: bytes):
     """Parse an uncompressed YUV4MPEG2 stream (pure public spec — text
     stream header, per-frame ``FRAME`` markers, raw 4:2:0 planes) and yield
@@ -387,58 +267,6 @@ def _y4m_frames(payload: bytes):
         yield frame_no, width, height, y
         pos = fnl + 1 + frame_bytes
         frame_no += 1
-
-
-def extract_frame_features(
-    media: DataFrame, every_n: int = 10, on_error: str = "capture"
-) -> DataFrame:
-    """Execute the frame-sampling plan: decode video payloads, keep every
-    ``every_n``-th frame, and emit an 8-bin luma histogram per sampled frame
-    — one output row per (media_id, frame_no). ``frame_sample_plan`` is the
-    JVM-side cost/row-count plan for this operator; this is the Python
-    boundary that runs it (same Arrow batching and error posture as the
-    image/audio ops). Frame fan-out happens INSIDE the task — a 10k-frame
-    video emits its sampled rows from one payload read, no shuffle."""
-    if on_error not in ("raise", "capture"):
-        raise ValueError(f"on_error must be 'raise' or 'capture', got {on_error!r}")
-    capture = on_error == "capture"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("media_id", "frame_no", "feature", "width", "height",
-                    "decode_error")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    for fno, w, h, y in _y4m_frames(bytes(p)):
-                        if fno % every_n:
-                            continue
-                        luma = np.frombuffer(y, dtype=np.uint8)
-                        hist = np.bincount(luma >> 5, minlength=8)[:8]
-                        out["media_id"].append(mid)
-                        out["frame_no"].append(fno)
-                        out["feature"].append(
-                            (hist / max(luma.size, 1)).astype(float).tolist()
-                        )
-                        out["width"].append(w)
-                        out["height"].append(h)
-                        out["decode_error"].append(None)
-                except Exception as e:  # noqa: BLE001 — routed per policy
-                    if not capture:
-                        raise
-                    out["media_id"].append(mid)
-                    out["frame_no"].append(None)
-                    out["feature"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["decode_error"].append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, FRAME_FEATURE_SCHEMA
-    )
 
 
 def fake_decoder(payload: bytes, media_type: str) -> dict:
@@ -721,16 +549,6 @@ def perceptual_hash(payload: bytes, media_type: str) -> int:
     )
 
 
-def fake_perceptual_hash(payload: bytes, media_type: str) -> int:
-    """Deterministic opaque-payload stand-in (mirrors ``fake_decoder``): 8
-    bytes of md5 as the 'hash' — exact dupes collide, nothing else does."""
-    import hashlib
-
-    return _to_signed64(
-        int.from_bytes(hashlib.md5(payload).digest()[:8], "big")
-    )
-
-
 def perceptual_hashes(
     media: DataFrame,
     hasher: Callable[[bytes, str], int] = perceptual_hash,
@@ -895,172 +713,3 @@ def dedup_media_hashes(hashes: DataFrame, max_hamming: int = 6) -> DataFrame:
 # `operators/incremental.py` architecture (bucketed table, batch_id
 # partition idempotence, broadcast-batch join with no Exchange below the
 # index scan).
-
-
-def _media_index_table(prefix: str, database: str | None) -> str:
-    name = f"{prefix}_phash_blocks"
-    return f"{database}.{name}" if database else name
-
-
-def _media_index_rows(
-    media: DataFrame,
-    max_hamming: int,
-    hasher: Callable[[bytes, str], int],
-) -> DataFrame:
-    hashes = perceptual_hashes(media, hasher=hasher).filter(
-        F.col("phash").isNotNull()
-    )
-    return hashes.select(
-        "media_id",
-        "media_type",
-        "phash",
-        F.explode(F.array(*_phash_block_exprs(max_hamming))).alias("_b"),
-    ).select(
-        "media_id",
-        "media_type",
-        "phash",
-        F.col("_b.block_id").alias("block_id"),
-        F.col("_b.block_bits").alias("block_bits"),
-    )
-
-
-def build_media_index(
-    media: DataFrame,
-    prefix: str,
-    location: str,
-    max_hamming: int = 6,
-    num_buckets: int = 8,
-    batch_id: str = "base",
-    database: str | None = None,
-    hasher: Callable[[bytes, str], int] = perceptual_hash,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize the perceptual-hash block index for an accepted media
-    corpus. ``max_hamming`` and ``num_buckets`` are LIFETIME parameters of
-    the index (the block slicing and bucket spec can't change without a
-    rewrite) — size them for the end-state corpus."""
-    rows = _media_index_rows(media, max_hamming, hasher).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    (
-        rows.write.mode(mode)
-        .option("path", f"{location}/{prefix}_phash_blocks")
-        .partitionBy("batch_id")
-        .bucketBy(num_buckets, "block_bits")
-        .sortBy("block_bits")
-        .saveAsTable(_media_index_table(prefix, database))
-    )
-
-
-def append_media_to_index(
-    media: DataFrame,
-    prefix: str,
-    location: str,
-    batch_id: str,
-    max_hamming: int = 6,
-    num_buckets: int = 8,
-    database: str | None = None,
-    hasher: Callable[[bytes, str], int] = perceptual_hash,
-) -> None:
-    """Append a batch's accepted media to the index — IDEMPOTENT per
-    ``batch_id`` (partition-pruned presence probe, same contract as
-    ``incremental.append_to_index``): replaying a batch after a failure
-    cannot double-insert."""
-    spark = media.sparkSession
-    table = _media_index_table(prefix, database)
-    present = (
-        spark.table(table).filter(F.col("batch_id") == batch_id).limit(1).count()
-        > 0
-    )
-    if present:
-        return
-    rows = _media_index_rows(media, max_hamming, hasher).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    (
-        rows.write.mode("append")
-        .option("path", f"{location}/{prefix}_phash_blocks")
-        .partitionBy("batch_id")
-        .bucketBy(num_buckets, "block_bits")
-        .sortBy("block_bits")
-        .saveAsTable(table)
-    )
-
-
-def drop_media_index(spark, prefix: str, database: str | None = None) -> None:
-    """Drop the catalog table (files at ``location`` are external and removed
-    by the caller) — mirrors ``incremental.drop_dedup_index``."""
-    spark.sql(f"DROP TABLE IF EXISTS {_media_index_table(prefix, database)}")
-
-
-def incremental_media_dedup(
-    batch: DataFrame,
-    prefix: str,
-    max_hamming: int = 6,
-    database: str | None = None,
-    hasher: Callable[[bytes, str], int] = perceptual_hash,
-) -> DataFrame:
-    """Classify a new media batch against the persisted index WITHOUT
-    rescanning history: (media_id, media_type, phash, phash_error,
-    is_duplicate, match_id, best_hamming) — match_id is the closest index
-    member within the radius (ties to the lowest id, deterministic).
-
-    ``max_hamming`` must equal the index's build-time value (the block
-    slicing is a lifetime parameter). The batch side is explicitly
-    broadcast: AQE's late SMJ→BHJ conversion would still shuffle-write the
-    multi-TB index first (r5b lesson), so the bounded side is pinned and
-    the index scan stays Exchange-free. Undecodable payloads classify as
-    non-duplicates with ``phash_error`` set."""
-    spark = batch.sparkSession
-    index = spark.table(_media_index_table(prefix, database))
-    hashes = perceptual_hashes(batch, hasher=hasher)
-    bb = (
-        hashes.filter(F.col("phash").isNotNull())
-        .select(
-            F.col("media_id").alias("b_id"),
-            F.col("media_type").alias("b_type"),
-            F.col("phash").alias("b_phash"),
-            F.explode(F.array(*_phash_block_exprs(max_hamming))).alias("_b"),
-        )
-        .select(
-            "b_id",
-            "b_type",
-            "b_phash",
-            F.col("_b.block_id").alias("block_id"),
-            F.col("_b.block_bits").alias("block_bits"),
-        )
-    )
-    matches = (
-        index.join(
-            F.broadcast(bb),
-            ["block_id", "block_bits"],
-        )
-        .filter(F.col("media_type") == F.col("b_type"))
-        .select(
-            "b_id",
-            F.col("media_id").alias("hist_id"),
-            F.bit_count(F.col("phash").bitwiseXOR(F.col("b_phash"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-        .groupBy("b_id")
-        .agg(
-            F.min(F.struct("hamming", "hist_id")).alias("_best"),
-        )
-        .select(
-            F.col("b_id").alias("media_id"),
-            F.col("_best.hist_id").alias("match_id"),
-            F.col("_best.hamming").alias("best_hamming"),
-        )
-    )
-    return hashes.join(matches, "media_id", "left").select(
-        "media_id",
-        "media_type",
-        "phash",
-        "phash_error",
-        F.col("match_id").isNotNull().alias("is_duplicate"),
-        "match_id",
-        "best_hamming",
-    )

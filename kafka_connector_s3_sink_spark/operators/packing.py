@@ -132,77 +132,6 @@ def pack_sequences(
     )
 
 
-def chunk_documents(
-    df: DataFrame,
-    max_tokens: int,
-    overlap: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Sliding-window chunking of long documents: one row per window of at
-    most ``max_tokens`` whitespace tokens, consecutive windows sharing
-    ``overlap`` tokens — the per-document complement of ``pack_sequences``
-    (which concatenates SHORT docs; a real pipeline runs both: chunk the
-    tail of long docs, pack the shorts).
-
-    Output: ``(id_col, chunk_no, n_chunks, chunk_text, n_chunk_tokens)``.
-    Chunking is row-local (tokens array → ``sequence`` of window starts →
-    ``explode`` → ``slice``): zero shuffles, whole-stage codegen, and the
-    window starts are a closed-form function of the token count so the
-    result is deterministic and an external oracle can reproduce it
-    exactly. Empty/whitespace-only docs yield one empty chunk (kept — drop
-    policy belongs to the caller). The last window is the only one shorter
-    than ``max_tokens``; a doc with ≤ ``max_tokens`` tokens is exactly its
-    own single chunk."""
-    if max_tokens <= 0:
-        raise ValueError("max_tokens must be positive")
-    if not 0 <= overlap < max_tokens:
-        raise ValueError("overlap must satisfy 0 <= overlap < max_tokens")
-    step = max_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    n = F.size(toks)
-    # number of windows: 1 + ceil(max(n - max_tokens, 0) / step)
-    n_chunks = (
-        F.lit(1)
-        + F.ceil(F.greatest(n - max_tokens, F.lit(0)) / F.lit(step))
-    ).cast("int")
-    return (
-        df.select(
-            F.col(id_col),
-            toks.alias("_toks"),
-            n_chunks.alias("n_chunks"),
-        )
-        .select(
-            id_col,
-            "n_chunks",
-            F.explode(
-                F.sequence(F.lit(0), F.col("n_chunks") - 1)
-            ).alias("chunk_no"),
-            F.col("_toks"),
-        )
-        .select(
-            id_col,
-            "chunk_no",
-            "n_chunks",
-            F.concat_ws(
-                " ",
-                F.slice(
-                    F.col("_toks"),
-                    F.col("chunk_no") * step + 1,
-                    max_tokens,
-                ),
-            ).alias("chunk_text"),
-            F.size(
-                F.slice(
-                    F.col("_toks"),
-                    F.col("chunk_no") * step + 1,
-                    max_tokens,
-                )
-            ).alias("n_chunk_tokens"),
-        )
-    )
-
-
 def pack_stats(packed: DataFrame, ctx_len: int) -> DataFrame:
     """Per-pack rollup of a ``pack_sequences`` result: document count, packed
     tokens, and fill ratio (only the final pack may be partial — everything

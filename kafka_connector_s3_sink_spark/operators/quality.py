@@ -14,8 +14,9 @@ execution model or adding a serving dependency:
   unlike Spark's Murmur3). Everything is JVM Column arithmetic.
 - **Training** (``fit_quality_classifier``): logistic regression by IRLS —
   each iteration aggregates the D×D normal-equation terms (X'WX, X'Wz) with
-  one Arrow-batched ``mapInPandas`` pass (numpy partials per partition, one
-  tiny row each), solves the D×D system on the driver, and broadcasts the
+  one Arrow-batched ``mapInPandas`` pass (fixed-order partials per
+  partition, one tiny row each), solves the D×D system on the driver by
+  Gaussian elimination, and broadcasts the
   new weights into the next pass. D = n_buckets + 5 (~21): per-iteration
   driver work is O(D²) rows × partitions — scale-invariant; the corpus is
   only ever scanned, never collected.
@@ -28,6 +29,7 @@ execution model or adding a serving dependency:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -46,7 +48,8 @@ N_DENSE = 5  # bias + 4 signals
 
 # Reference model: trained by ``fit_quality_classifier`` on PINNED_CORPUS
 # (below). Training is bit-deterministic (zero init, closed-form IRLS
-# steps), so refitting the corpus reproduces these weights EXACTLY —
+# steps, fixed-order arithmetic that no CPU dispatch changes), so refitting
+# the corpus reproduces these weights EXACTLY on any host —
 # ``tests/test_quality.py`` pins that. The correctness gate scores the
 # documents table with this model (``text_corpus_stats`` ``quality_clf``
 # branch) against a DuckDB oracle running the identical arithmetic.
@@ -72,27 +75,27 @@ PINNED_CORPUS: tuple[tuple[str, int], ...] = (
 )
 
 PINNED_WEIGHTS_V1: tuple[float, ...] = (
-    -3.618904674784998,
-    10.386635016917065,
-    12.678851078760806,
-    -3.8378613442878358,
-    3.819888778121184,
-    0.5995421700836313,
-    -0.44598586661764666,
-    -3.321249137507838,
-    1.5722498923417474,
-    4.766589553509029,
-    2.403025180338034,
-    -1.8440579828998223,
-    -1.5568889232651335,
-    -0.19865556772055212,
-    2.443801939249954,
-    0.5287297952986143,
-    -0.6553756533544723,
-    -3.6550837612605096,
-    -4.318311367537571,
-    -1.186789618940438,
-    1.249554673498027,
+    -3.618904674785011,
+    10.386635016917069,
+    12.678851078760797,
+    -3.837861344287825,
+    3.8198887781211797,
+    0.5995421700836379,
+    -0.44598586661763173,
+    -3.321249137507825,
+    1.5722498923417572,
+    4.7665895535090606,
+    2.4030251803380485,
+    -1.8440579828998176,
+    -1.5568889232651195,
+    -0.1986555677205355,
+    2.443801939249958,
+    0.5287297952986195,
+    -0.6553756533544635,
+    -3.6550837612605007,
+    -4.3183113675375555,
+    -1.1867896189404237,
+    1.249554673498045,
 )
 
 
@@ -235,7 +238,9 @@ def fit_quality_classifier(
     weights start at zero and every step is a closed-form solve), so
     repeated fits — and task retries inside a fit — produce identical
     models. ``reg`` is the ridge term that keeps the solve stable when a
-    hash bucket is empty.
+    hash bucket is empty. The arithmetic is ``irls_partial`` per partition
+    and ``irls_solve`` on the driver — the same kernel ``fit_irls`` runs on
+    plain rows, bit-identical on any CPU (see ``irls_partial``).
 
     The feature frame is built on the same Generate-barrier shape as
     ``classifier_score_rows`` (r16, VERDICT r15 item 8): the Column form
@@ -243,8 +248,6 @@ def fit_quality_classifier(
     ``iterations`` IRLS scans paid it again. Values are bit-identical —
     same expressions over the same rows in the same partition layout — so
     the pinned-weight reproducibility contract holds."""
-    import numpy as np
-
     dim = n_buckets + N_DENSE
     t = F.col(text_col)
     barr, qh = _hashed_barrier(
@@ -256,28 +259,18 @@ def fit_quality_classifier(
         ).alias("f"),
         F.col(label_col).cast("double").alias("y"),
     )
-    w = np.zeros(dim)
+    w = [0.0] * dim
     for _ in range(iterations):
-        w_list = [float(x) for x in w]
 
-        def partial(batches) -> Iterator:
+        def partial(batches, w=w) -> Iterator:
             import numpy as np
             import pandas as pd
 
-            ww = np.array(w_list)
-            xtx = np.zeros((dim, dim))
-            xtz = np.zeros(dim)
+            xtx, xtz = np.zeros((dim, dim)), np.zeros(dim)
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.array(pdf["f"].tolist(), dtype=float)
-                y = pdf["y"].to_numpy(dtype=float)
-                eta = X @ ww
-                p = 1.0 / (1.0 + np.exp(-eta))
-                wgt = np.clip(p * (1.0 - p), 1e-6, None)
-                z = eta + (y - p) / wgt
-                xtx += (X * wgt[:, None]).T @ X
-                xtz += X.T @ (wgt * z)
+                irls_partial(
+                    pdf["f"].tolist(), pdf["y"].tolist(), w, xtx, xtz
+                )
             yield pd.DataFrame(
                 {"xtx": [xtx.ravel().tolist()], "xtz": [xtz.tolist()]}
             )
@@ -285,18 +278,87 @@ def fit_quality_classifier(
         parts = feats.mapInPandas(
             partial, "xtx array<double>, xtz array<double>"
         ).collect()  # O(n_partitions) tiny rows — the reduce step
-        xtx = sum(
-            (np.array(r["xtx"]).reshape(dim, dim) for r in parts),
-            np.zeros((dim, dim)),
+        w = irls_solve([(r["xtx"], r["xtz"]) for r in parts], reg)
+    return w
+
+
+def irls_partial(features, labels, w, xtx, xtz) -> None:
+    """Add one batch's IRLS normal-equation terms (X'WX into ``xtx``, X'Wz
+    into ``xtz``, both numpy arrays updated in place) at weights ``w``.
+
+    Every operation has a fixed order, so the result is bit-identical on
+    any CPU: the per-row ``eta`` is an exactly rounded ``math.fsum``, the
+    sigmoid uses libm's ``math.exp`` (``np.exp`` has AVX-512 variants), and
+    X'WX is a running sum of per-row rank-1 elementwise products — no BLAS
+    matmul, whose kernel (and summation order) OpenBLAS picks per CPU.
+    Row order is the only order that matters: a partition's result does not
+    depend on how it was cut into Arrow batches."""
+    import numpy as np
+
+    ww = np.asarray(w, dtype=float)
+    for f, y in zip(features, labels):
+        x = np.asarray(f, dtype=float)
+        eta = math.fsum((x * ww).tolist())
+        p = 1.0 / (1.0 + math.exp(min(-eta, 700.0)))
+        wgt = max(p * (1.0 - p), 1e-6)
+        z = eta + (float(y) - p) / wgt
+        wx = x * wgt
+        xtx += np.multiply.outer(wx, x)
+        xtz += wx * z
+
+
+def irls_solve(parts, reg: float) -> list[float]:
+    """One IRLS step's new weights from per-partition ``(xtx, xtz)`` terms
+    (flat lists or arrays, summed in the given order): solve
+    ``(X'WX + reg·I) w = X'Wz`` by Gaussian elimination with partial
+    pivoting in plain Python floats — LAPACK's solve runs on the same
+    per-CPU BLAS dispatch ``irls_partial`` avoids."""
+    import numpy as np
+
+    xtz = np.zeros(len(parts[0][1]) if parts else 0)
+    dim = len(xtz)
+    xtx = np.zeros((dim, dim))
+    for pxtx, pxtz in parts:
+        xtx += np.asarray(pxtx, dtype=float).reshape(dim, dim)
+        xtz += np.asarray(pxtz, dtype=float)
+    if not xtx.any():
+        raise ValueError(
+            "fit_quality_classifier needs a non-empty labeled corpus"
         )
-        xtz = sum((np.array(r["xtz"]) for r in parts), np.zeros(dim))
-        if not xtx.any():
-            raise ValueError(
-                "fit_quality_classifier needs a non-empty labeled corpus"
-            )
-        xtx += reg * np.eye(dim)
-        w = np.linalg.solve(xtx, xtz)
-    return [float(x) for x in w]
+    a = [row + [b] for row, b in zip(xtx.tolist(), xtz.tolist())]
+    for i in range(dim):
+        a[i][i] += reg
+    for k in range(dim):
+        piv = max(range(k, dim), key=lambda r: abs(a[r][k]))
+        a[k], a[piv] = a[piv], a[k]
+        for r in range(k + 1, dim):
+            f = a[r][k] / a[k][k]
+            if f:
+                a[r] = [v - f * u for v, u in zip(a[r], a[k])]
+    w = [0.0] * dim
+    for i in range(dim - 1, -1, -1):
+        s = a[i][dim]
+        for j in range(i + 1, dim):
+            s -= a[i][j] * w[j]
+        w[i] = s / a[i][i]
+    return w
+
+
+def fit_irls(
+    features, labels, iterations: int = 4, reg: float = 1e-3
+) -> list[float]:
+    """``fit_quality_classifier``'s numeric kernel on plain feature rows,
+    no Spark: the weights it returns equal a fit over one partition holding
+    the same rows in the same order, bit for bit."""
+    import numpy as np
+
+    dim = len(features[0]) if features else 0
+    w = [0.0] * dim
+    for _ in range(iterations):
+        xtx, xtz = np.zeros((dim, dim)), np.zeros(dim)
+        irls_partial(features, labels, w, xtx, xtz)
+        w = irls_solve([(xtx, xtz)], reg)
+    return w
 
 
 def classifier_score(

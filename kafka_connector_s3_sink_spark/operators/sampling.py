@@ -18,7 +18,7 @@ plans; nothing collects to the driver.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -57,20 +57,6 @@ def shuffle_key(id_col: Column, seed: str) -> Column:
     (Exchange rangepartitioning), which scales: Spark samples partition bounds
     and sorts each range independently — no single-task funnel."""
     return F.md5(F.concat(F.lit(f"{seed}:"), id_col.cast("string")))
-
-
-def bernoulli_sample(
-    df: DataFrame, fraction: float, id_col: str = "doc_id", seed: str = "sample"
-) -> DataFrame:
-    """Deterministic Bernoulli sample: keep rows whose hash bucket falls below
-    ``fraction`` of the hash space. A pure narrow filter — pushed into the
-    scan when ``id_col`` is a parquet column, zero shuffles, and re-runs
-    select the identical row set (unlike ``df.sample``, whose output depends
-    on partitioning)."""
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    threshold = int(fraction * HASH_SPACE)
-    return df.filter(hash_bucket(F.col(id_col), seed) < threshold)
 
 
 def hash_split(
@@ -180,43 +166,6 @@ def mixture_sample(
         .withColumn(epoch_col, F.explode(F.sequence(F.lit(0), n_slots - 1)))
         .filter(keep)
     )
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_cols: Sequence[str],
-    n_per_stratum: int,
-    id_col: str = "doc_id",
-    seed: str = "strata",
-) -> DataFrame:
-    """Exact-quota stratified sample: the ``n_per_stratum`` rows with the
-    smallest (hash, id) per stratum — e.g. a language- or source-balanced
-    evaluation set drawn from a skewed corpus.
-
-    One hash shuffle on the strata key. The per-stratum ``row_number`` sort is
-    bounded by stratum size; for pathological single-strata skew the same
-    two-phase trick as top-k applies (partition-local bounded top-n first),
-    but strata here are (lang, source)-grain — thousands of groups, not one."""
-    w = (
-        Window.partitionBy(*strata_cols)
-        .orderBy(hash_bucket(F.col(id_col), seed).asc(), F.col(id_col).asc())
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= n_per_stratum)
-        .drop("_rn")
-    )
-
-
-def deterministic_shuffle(
-    df: DataFrame, id_col: str = "doc_id", seed: str = "shuffle"
-) -> DataFrame:
-    """Global deterministic reshuffle for training order: sort by the md5
-    shuffle key. Plans Exchange rangepartitioning + per-partition sort — the
-    scalable global sort (no single reducer). Downstream sequential readers
-    (sequence packing, epoch serving) see a reproducible pseudo-random
-    document order governed only by ``seed``."""
-    return df.orderBy(shuffle_key(F.col(id_col), seed).asc(), F.col(id_col).asc())
 
 
 def cap_per_domain(

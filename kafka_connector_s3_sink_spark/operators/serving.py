@@ -5,9 +5,10 @@ WHICH tokens land in which fixed-``ctx_len`` window; this module fixes the
 ORDER a trainer visits those windows, per epoch, deterministically, with a
 resume point that survives restarts. It is the last step of the trainer
 handoff the r14/r15 work made destination-complete: the windows and the
-tokenizer already travel with the corpus, and with a persisted serving plan
-the *schedule* does too — a trainer resuming at global step S on a different
-cluster reads exactly the windows the crashed run would have read next.
+tokenizer already travel with the corpus, and the *schedule* is a pure
+function of (seed, epoch, n_shards) — a trainer resuming at global step S on
+a different cluster reads exactly the windows the crashed run would have
+read next.
 
 Design (the standard two-level shuffle, expressed Spark-first):
 
@@ -26,10 +27,8 @@ Design (the standard two-level shuffle, expressed Spark-first):
 
 Scale shape at 100 TB (~10^10 packs): the per-shard window bounds every
 task's sort to ``n_packs / n_shards`` rows (size ``n_shards`` for the
-cluster, thousands are fine — the offset aggregate stays tiny); the manifest
-is ``n_shards`` rows; resume is a filter on ``global_step`` that prunes
-whole shards via the manifest's ``[shard_offset, shard_offset + n_packs)``
-span before any data file is opened.
+cluster, thousands are fine — the offset aggregate stays tiny); resume is
+a filter on ``global_step``.
 
 Every expression is the md5 idiom shared with ``sampling`` (DuckDB-identical,
 hash-gated in the ``pipeline_pack_split`` ``order`` branch).
@@ -42,8 +41,6 @@ identifies exactly the remaining work, on any cluster, with no RNG state.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -135,134 +132,3 @@ def packs_of_layout(
     return layout.groupBy(pack_id_col).agg(
         F.sum(seg_tokens_col).cast("long").alias("pack_tokens")
     )
-
-
-def shard_manifest(plan: DataFrame) -> DataFrame:
-    """Per-shard resume index for one epoch's serving plan: ``shard_id,
-    epoch, n_packs, n_tokens, step_lo, step_hi`` (inclusive global-step
-    span — contiguous by construction, so a resume point prunes whole
-    shards by span intersection before opening any data file).
-
-    ``n_shards`` rows out; one map-side-combined aggregation in."""
-    return plan.groupBy("shard_id", "epoch").agg(
-        F.count("*").alias("n_packs"),
-        F.sum("pack_tokens").cast("long").alias("n_tokens"),
-        F.min("global_step").alias("step_lo"),
-        F.max("global_step").alias("step_hi"),
-    )
-
-
-def resume_filter(
-    plan: DataFrame, from_step: int, manifest: DataFrame | None = None
-) -> DataFrame:
-    """The remaining work after a checkpoint at ``from_step`` (exclusive of
-    steps already served: keeps ``global_step >= from_step``). With a
-    ``manifest``, whole shards whose span ends before the resume point are
-    pruned by a broadcast semi-join on ``shard_id`` — at scale that skips
-    their files entirely; the residual row filter handles the one
-    straddling shard."""
-    kept = plan.filter(F.col("global_step") >= from_step)
-    if manifest is not None:
-        live = manifest.filter(F.col("step_hi") >= from_step).select(
-            "shard_id", "epoch"
-        )
-        kept = kept.join(F.broadcast(live), ["shard_id", "epoch"], "left_semi")
-    return kept
-
-
-def write_serving_plan(
-    layout: DataFrame,
-    dest_dir: str,
-    n_shards: int,
-    epochs: int = 1,
-    seed: str = "serve",
-    pack_id_col: str = "pack_id",
-    seg_tokens_col: str = "seg_tokens",
-    subdir: str = "serving",
-) -> DataFrame:
-    """Persist the serving schedule beside a packed corpus:
-    ``<dest>/serving/plan`` (pack grain, partitioned by epoch, one file
-    per shard, rows sorted by visit order inside each file) and
-    ``<dest>/serving/manifest`` (the per-shard resume index) plus
-    ``<dest>/serving/serving.json`` (the knobs — seed, n_shards, epochs —
-    so a reader needs no out-of-band configuration; same contract as the
-    tokenizer artifacts at ``<dest>/tokenizer``).
-
-    Returns the manifest (``epochs × n_shards`` rows). The plan is
-    metadata-sized (a few columns per pack, no text), so persisting every
-    epoch's permutation up front is cheap relative to the corpus —
-    ~10^10 packs × ~40 bytes ≈ 400 GB/epoch at the 100 TB point, written
-    once, shard-parallel.
-
-    ``subdir`` scopes the plan inside the destination (the ladder wrappers
-    use ``serving/<split>`` so per-split schedules coexist)."""
-    packs = packs_of_layout(
-        layout, pack_id_col=pack_id_col, seg_tokens_col=seg_tokens_col
-    )
-    plans = None
-    for e in range(epochs):
-        p = serving_order(
-            packs, n_shards=n_shards, epoch=e, seed=seed,
-            pack_id_col=pack_id_col,
-        )
-        plans = p if plans is None else plans.unionByName(p)
-    base = f"{dest_dir}/{subdir}"
-    (
-        plans.repartition(n_shards, "shard_id")
-        .sortWithinPartitions("epoch", "shard_id", "shard_pos")
-        .write.mode("overwrite")
-        .partitionBy("epoch")
-        .parquet(f"{base}/plan")
-    )
-    manifest = shard_manifest(
-        plans.sparkSession.read.parquet(f"{base}/plan")
-    )
-    manifest.coalesce(1).write.mode("overwrite").parquet(
-        f"{base}/manifest"
-    )
-    spark = layout.sparkSession
-    conf_json = json.dumps(
-        {"seed": seed, "n_shards": n_shards, "epochs": epochs},
-        sort_keys=True,
-    )
-    # tiny config sidecar via the JVM-side text writer (one row)
-    spark.createDataFrame([(conf_json,)], "value string").coalesce(
-        1
-    ).write.mode("overwrite").text(f"{base}/serving.json")
-    return manifest
-
-
-def read_serving_plan(
-    spark, dest_dir: str, epoch: int, from_step: int = 0,
-    subdir: str = "serving",
-) -> DataFrame:
-    """Read one epoch's remaining schedule from a persisted plan. Epoch
-    partition-prunes at the scan; ``from_step`` prunes shards through the
-    manifest before the row filter. Raises a named ValueError when the
-    destination has no serving plan (mirrors the missing-merges refusal in
-    ``ingest.read_ingest_windows``)."""
-    base = f"{dest_dir}/{subdir}"
-    try:
-        conf_rows = (
-            spark.read.text(f"{base}/serving.json").limit(1).collect()
-        )
-    except Exception as exc:
-        raise ValueError(
-            f"{dest_dir} has no serving plan ({base}/serving.json "
-            "missing) — write one with write_serving_plan"
-        ) from exc
-    conf = json.loads(conf_rows[0]["value"])
-    if epoch >= conf["epochs"]:
-        raise ValueError(
-            f"epoch {epoch} not in the persisted plan (epochs="
-            f"{conf['epochs']}) — re-run write_serving_plan with more epochs"
-        )
-    plan = spark.read.parquet(f"{base}/plan").filter(
-        F.col("epoch") == epoch
-    )
-    if from_step <= 0:
-        return plan
-    manifest = spark.read.parquet(f"{base}/manifest").filter(
-        F.col("epoch") == epoch
-    )
-    return resume_filter(plan, from_step, manifest=manifest)

@@ -632,49 +632,6 @@ def append_to_ivf_index(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def rebuild_ivf_index(
-    spark,
-    index_dir: str,
-    dest_dir: str,
-    n_centroids: int | None = None,
-    fit_sample_cap: int | None = 256,
-    assignment: str = "auto",
-    batch_id: str = "rebuilt",
-) -> list[tuple[int, list[float]]]:
-    """REFIT the coarse quantizer over the index's CURRENT contents and write
-    a fresh index to ``dest_dir`` — the last step of the IVF lifecycle
-    (build → append-under-frozen-quantizer → ``ivf_index_stats`` drift watch
-    → rebuild when bucket skew says the frozen quantizer no longer matches
-    the distribution).
-
-    Deliberately writes to a NEW location instead of rewriting in place: the
-    old index stays fully queryable during the rebuild (it is one atomic
-    "switch the path" away from retirement — the same staged-swap discipline
-    as ``incremental.compact_dedup_index``), and a failed rebuild leaves
-    nothing half-assigned. Vectors are read from the index itself (the
-    stored ``vec`` column), so no second pass over source tables; history
-    batch lineage is intentionally folded into one ``batch_id`` — a rebuild
-    IS a compaction (drop the old location's per-epoch rollback in exchange
-    for freshly balanced buckets and one file set per bucket).
-
-    ``n_centroids`` defaults to the old quantizer's k. Returns the new
-    centroids (also persisted to ``<dest>/_centroids.json``)."""
-    old_k = len(read_ivf_centroids(index_dir))
-    vectors = spark.read.parquet(index_dir).select(
-        "vec_id", F.col("vec").alias("embedding")
-    )
-    return write_ivf_index(
-        vectors,
-        dest_dir,
-        n_centroids=n_centroids or old_k,
-        id_col="vec_id",
-        vec_col="embedding",
-        fit_sample_cap=fit_sample_cap,
-        assignment=assignment,
-        batch_id=batch_id,
-    )
-
-
 def ivf_index_stats(spark, index_dir: str) -> DataFrame:
     """Bucket-occupancy rollup of a persisted IVF index: rows per
     (centroid_id, batch_id). This is the drift/skew monitor for the frozen
@@ -1360,8 +1317,7 @@ def ivfpq_topk(
     # Lloyd step) and the encode/score path two more — without a lineage
     # cut each action re-executes normalize+assign over the corpus
     # (measured 27.7s -> 3.4s on the 1x probe). localCheckpoint once, same
-    # as the linkgraph iteration frames; the persisted-index variant
-    # (ivfpq_topk_indexed) has no such recomputation by construction.
+    # as the linkgraph iteration frames.
     assigned = assigned.localCheckpoint()
     if residual:
         # faiss-IVFPQ residual encoding: quantize (vec − cell centroid) —
@@ -1515,257 +1471,4 @@ def _with_residual(
             F.zip_with(F.col(vec_col), F.col("_cent"), lambda x, y: x - y),
         )
         .drop("_cent")
-    )
-
-
-# -- persisted IVF-PQ layer ------------------------------------------------
-
-
-def add_pq_to_ivf_index(
-    spark,
-    index_dir: str,
-    m: int = 8,
-    k_codes: int = 16,
-    fit_sample_cap: int | None = 256,
-    residual: bool = False,
-) -> list[list[tuple[int, list[float]]]]:
-    """Add a PQ code layer to a persisted IVF index (``write_ivf_index``):
-    fit codebooks on the index's unit-normalized vectors (bounded seeded
-    sample), encode EVERY stored batch, and write the codes to
-    ``<index>/_pq_codes`` partitioned by the SAME (centroid_id, batch_id)
-    scheme, with the codebooks in ``_pq_codebooks.json``. The leading
-    underscore keeps the code layer invisible to the main index's parquet
-    discovery — existing IVF probes are untouched. One scan of the index,
-    zero shuffles (the arrow encode is map-only and the partition columns
-    ride through)."""
-    import json
-
-    from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
-
-    nrm = _index_encode_input(spark, index_dir, residual)
-    vec = "rvec" if residual else "nvec"
-    books = pq_codebooks(
-        nrm, m=m, k=k_codes, id_col="vec_id", vec_col=vec,
-        fit_sample_cap=fit_sample_cap,
-    )
-    enc = pq_encode(
-        nrm, books, id_col="vec_id", vec_col=vec,
-        keep_cols=("centroid_id", "batch_id"),
-    )
-    (
-        enc.write.mode("overwrite")
-        .partitionBy("centroid_id", "batch_id")
-        .parquet(f"{index_dir}/_pq_codes")
-    )
-    ObjectStorage(index_dir).write_bytes(
-        "_pq_codebooks.json",
-        json.dumps(
-            {
-                "codebooks": [[[c, v] for c, v in book] for book in books],
-                "residual": residual,
-            }
-        ).encode(),
-    )
-    return books
-
-
-def _index_encode_input(spark, index_dir: str, residual: bool) -> DataFrame:
-    """The index's unit-normalized vectors (plus residuals when the code
-    layer is residual-encoded), batch filterable downstream."""
-    idx = spark.read.parquet(index_dir)
-    nrm = idx.select(
-        "vec_id",
-        "centroid_id",
-        "batch_id",
-        F.transform(F.col("vec"), lambda x: x / F.col("norm")).alias("nvec"),
-    )
-    if not residual:
-        return nrm
-    cents = read_ivf_centroids(index_dir)
-    return _with_residual(nrm, cents, vec_col="nvec", out_col="rvec")
-
-
-def read_pq_codebooks(
-    index_dir: str,
-) -> list[list[tuple[int, list[float]]]]:
-    return _read_pq_sidecar(index_dir)[0]
-
-
-def _read_pq_sidecar(
-    index_dir: str,
-) -> tuple[list[list[tuple[int, list[float]]]], bool]:
-    import json
-
-    from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
-
-    data = json.loads(
-        ObjectStorage(index_dir).read_bytes("_pq_codebooks.json")
-    )
-    books = [
-        [(int(c), [float(x) for x in v]) for c, v in book]
-        for book in data["codebooks"]
-    ]
-    return books, bool(data.get("residual", False))
-
-
-def append_pq_codes(spark, index_dir: str, batch_id: str) -> int:
-    """Encode ONE ingest batch's partitions under the FROZEN codebooks and
-    dynamically overwrite exactly that batch's code partitions — O(batch),
-    replay-idempotent (the same contract as ``append_to_ivf_index``, which
-    should run first to land the vectors). Returns the row count encoded."""
-    books, residual = _read_pq_sidecar(index_dir)
-    nrm = _index_encode_input(spark, index_dir, residual).filter(
-        F.col("batch_id") == batch_id
-    )
-    enc = pq_encode(
-        nrm,
-        books,
-        id_col="vec_id",
-        vec_col="rvec" if residual else "nvec",
-        keep_cols=("centroid_id", "batch_id"),
-    )
-    n = enc.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            enc.write.mode("overwrite")
-            .partitionBy("centroid_id", "batch_id")
-            .parquet(f"{index_dir}/_pq_codes")
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return n
-
-
-def ivfpq_topk_indexed(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
-    k_candidates: int = 50,
-    rescore: bool = True,
-    query_id_col: str = "query_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ retrieval over the persisted index: probe cells resolve
-    driver-side (same rounded-cosine/lowest-id rule as every probe path),
-    the CODE layer is read partition-pruned to exactly those cells (m
-    bytes/vector touched), ADC ranks, and rescoring fetches only the
-    candidates' full vectors — itself a partition-pruned read of the probed
-    cells with an id pushdown. The disk-resident twin of ``ivfpq_topk``
-    (same LUT arithmetic, same rounding) — parity pinned by pytest."""
-    from pyspark.sql import Window
-
-    cents = read_ivf_centroids(index_dir)
-    books, residual = _read_pq_sidecar(index_dir)
-    md = len(books)
-    d = len(books[0][0][1])
-    qn = normalize_vectors(
-        queries.select(F.col(query_id_col), F.col(vec_col)), vec_col
-    )
-    qid_type = dict(
-        (f.name, f.dataType) for f in queries.schema.fields
-    )[query_id_col].simpleString()
-    qrows = qn.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qvec"),
-    ).collect()
-    cnorms = {cid: math.sqrt(_py_fold_dot(c, c)) for cid, c in cents}
-    cent_map = dict(cents)
-    lut_rows = []
-    probe_ids: set[int] = set()
-    for r in qrows:
-        qvec = list(r["_qvec"])
-        qnorm = math.sqrt(_py_fold_dot(qvec, qvec))
-        cells = sorted(
-            (
-                -(math.floor(
-                    _py_fold_dot(qvec, cvec) / (qnorm * cnorms[cid])
-                    * 10000.0 + 0.5
-                ) / 10000.0),
-                cid,
-            )
-            for cid, cvec in cents
-        )[:nprobe]
-        for _, cid in cells:
-            qeff = (
-                [x - y for x, y in zip(qvec, cent_map[cid])]
-                if residual
-                else qvec
-            )
-            lut = [
-                [
-                    _py_sq_dist(qeff[s * d : (s + 1) * d], cvec)
-                    for _, cvec in books[s]
-                ]
-                for s in range(md)
-            ]
-            lut_rows.append((r["query_id"], cid, lut))
-            probe_ids.add(cid)
-    probes = spark.createDataFrame(
-        lut_rows,
-        schema=f"query_id {qid_type}, centroid_id int,"
-        " _lut array<array<double>>",
-    )
-    codes = spark.read.parquet(f"{index_dir}/_pq_codes").filter(
-        F.col("centroid_id").isin(sorted(probe_ids))
-    )
-    pairs = codes.join(F.broadcast(probes), "centroid_id").filter(
-        not_self(F.col("query_id"), F.col("vec_id"))
-    )
-    adc = sum(
-        F.element_at(
-            F.element_at(F.col("_lut"), s + 1),
-            F.element_at(F.col("codes"), s + 1) + 1,
-        )
-        for s in range(md)
-    )
-    scored = pairs.select(
-        "query_id",
-        F.col("vec_id").alias("nbr_id"),
-        stable_round(F.lit(-1.0) * adc, 4).alias("score"),
-    )
-    candidates = scored.mapInPandas(
-        _partition_local_topk(k_candidates, score_col="score"),
-        schema=scored.schema,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc()
-    )
-    cand_k = candidates.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k_candidates
-    )
-    if not rescore:
-        return cand_k.filter(F.col("rank") <= k).select(
-            "query_id", "nbr_id", "score", "rank"
-        )
-    vecs = (
-        spark.read.parquet(index_dir)
-        .filter(F.col("centroid_id").isin(sorted(probe_ids)))
-        .select(F.col("vec_id").alias("nbr_id"), "vec", "norm")
-    )
-    q2 = qn.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qvec"),
-    )
-    resc = (
-        cand_k.select("query_id", "nbr_id")
-        .join(vecs, "nbr_id")
-        .join(F.broadcast(q2), "query_id")
-        .select(
-            "query_id",
-            "nbr_id",
-            stable_round(
-                dot(F.col("_qvec"), F.col("vec"))
-                / (l2norm(F.col("_qvec")) * F.col("norm")),
-                4,
-            ).alias("score"),
-        )
-    )
-    return (
-        resc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "score", "rank")
     )

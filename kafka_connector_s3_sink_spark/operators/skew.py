@@ -68,53 +68,3 @@ def salted_join(
     )
     joined = salted_large.join(exploded_small, [on, "_salt"], how)
     return joined.drop("_salt")
-
-
-def key_skew_report(
-    df: DataFrame,
-    keys: Sequence[str],
-    top_n: int = 10,
-    target_rows_per_task: int = 1_000_000,
-) -> DataFrame:
-    """Pre-shuffle skew diagnosis for a join/agg key: the numbers that
-    decide between "let AQE handle it" and "salt this".
-
-    One map-side-combined count per key plus a bounded top-``top_n``
-    (``TakeOrderedAndProject`` — per-partition heaps, no global sort), then
-    O(top_n + 1) driver rows. Output one row per hot key, each carrying the
-    corpus-level context: total rows, distinct keys, the key's share of
-    all rows, the skew ratio vs a perfectly uniform spread, and
-    ``advised_salts`` = ceil(key_rows / target_rows_per_task) — 1 means
-    the key fits one task and salting buys nothing.
-
-    At 100 TB this is the cheap probe to run BEFORE a repartition/join on
-    an unknown key — the count aggregation is the same shuffle the join
-    would pay, on two columns instead of the full rows."""
-    if not keys:
-        raise ValueError("keys must be non-empty")
-    counts = df.groupBy(*[F.col(k) for k in keys]).agg(
-        F.count(F.lit(1)).alias("key_rows")
-    )
-    totals = counts.agg(
-        F.sum("key_rows").alias("total_rows"),
-        F.count(F.lit(1)).alias("n_keys"),
-    )
-    top = counts.orderBy(F.col("key_rows").desc(), *keys).limit(top_n)
-    return (
-        top.crossJoin(F.broadcast(totals))
-        .select(
-            *keys,
-            "key_rows",
-            "total_rows",
-            "n_keys",
-            (F.col("key_rows") / F.col("total_rows")).alias("row_share"),
-            (
-                F.col("key_rows")
-                / (F.col("total_rows") / F.col("n_keys"))
-            ).alias("skew_ratio"),
-            F.ceil(
-                F.col("key_rows") / F.lit(target_rows_per_task)
-            ).cast("int").alias("advised_salts"),
-        )
-        .orderBy(F.col("key_rows").desc(), *keys)
-    )

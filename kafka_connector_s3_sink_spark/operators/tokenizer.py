@@ -203,24 +203,6 @@ def bpe_decode_column(tokens_col: str = "tokens"):
     return F.trim(F.regexp_replace(joined, END_OF_WORD, " "))
 
 
-def token_length_stats(encoded: DataFrame) -> DataFrame:
-    """Corpus-level tokenizer health: token count distribution + fertility
-    (tokens per whitespace word) — the first thing to look at after a
-    refit. One aggregation."""
-    words = F.size(F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != ""))
-    return (
-        encoded.select(
-            F.col("n_tokens"), words.alias("n_words")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.avg("n_tokens").alias("avg_tokens"),
-            (F.sum("n_tokens") / F.sum("n_words")).alias("fertility"),
-        )
-    )
-
-
 def save_merges(merges: list[tuple[str, str]], path: str) -> None:
     """Persist the merge table (the whole tokenizer — a frozen vocabulary
     is what makes token counts comparable across ingest batches). Written

@@ -69,137 +69,6 @@ def strip_tracking(url: Column) -> Column:
     return F.regexp_replace(u, r"[?&]+$", "")
 
 
-def registrable_domain_psl(
-    df: DataFrame,
-    rules: list[str],
-    url_col: str = "url",
-    out_col: str = "domain",
-) -> DataFrame:
-    """Registrable domain per the REAL Public Suffix List algorithm — the
-    production-grade replacement for the ``registrable_domain`` heuristic
-    (``_TWO_PART_TLDS``), for when correctness on the long tail
-    (``*.ck`` wildcards, ``!www.ck`` exceptions, deep suffixes like
-    ``pvt.k12.ma.us``) matters.
-
-    ``rules`` is the PSL's rule lines (comments/blank lines tolerated).
-    Matching follows publicsuffix.org: a rule matches when it equals a
-    suffix of the host (wildcard ``*`` spans exactly one label); the
-    prevailing rule is the exception rule if any matched, else the longest;
-    the registrable domain is the public suffix plus one label; a host that
-    IS a public suffix yields null. Unlisted TLDs use the implicit ``*``
-    rule (TLD itself is the suffix).
-
-    Plan shape: the host explodes to its ≤``_MAX_SUFFIX`` candidate
-    suffixes (bounded fan-out, not O(host length)), equi-joins the
-    BROADCAST rules table (~240 KB for the full PSL — fixed-cardinality
-    reference data, exactly what the broadcast hint is for), and one
-    key-partitioned max picks the prevailing rule — no shuffle of the
-    corpus beyond the aggregation's own key. All other columns of ``df``
-    pass through.
-    """
-    spark = df.sparkSession
-    parsed = []
-    for line in rules:
-        line = line.strip()
-        if not line or line.startswith("//"):
-            continue
-        is_exc = line.startswith("!")
-        rule = line[1:] if is_exc else line
-        # rule's label count; exception rules prevail via a rank bump
-        parsed.append((rule.lower(), len(rule.split(".")), is_exc))
-    rules_df = F.broadcast(
-        spark.createDataFrame(
-            parsed or [("*", 1, False)],
-            "rule string, rule_labels int, is_exception boolean",
-        )
-    )
-
-    base = df.withColumn("_psl_host", url_host(F.col(url_col)))
-    # match once per DISTINCT host (a crawl has orders of magnitude fewer
-    # hosts than pages), then map the result back with one equi-join — also
-    # avoids a nondeterministic row-id in a self-join
-    hosts = base.select("_psl_host").filter(F.col("_psl_host").isNotNull()).distinct()
-    labels = F.split(F.col("_psl_host"), r"\.")
-    n = F.size(labels)
-    # candidate suffixes: exact last-k join key, plus the wildcarded form
-    # ('*' over the suffix's leftmost label) that matches *.ck-style rules
-    cand = hosts.select(
-        "_psl_host",
-        F.explode(
-            F.filter(
-                F.transform(
-                    F.sequence(F.lit(1), F.least(n, F.lit(_MAX_SUFFIX))),
-                    _suffix_maker(labels, n),
-                ),
-                lambda s: s.isNotNull(),
-            )
-        ).alias("_cand"),
-    ).select(
-        "_psl_host",
-        F.col("_cand.k").alias("_k"),
-        F.explode(F.array(F.col("_cand.exact"), F.col("_cand.wild"))).alias(
-            "_key"
-        ),
-    )
-    matched = (
-        cand.join(rules_df, cand["_key"] == rules_df["rule"], "inner")
-        .groupBy("_psl_host")
-        .agg(
-            # prevailing rule: exceptions beat everything, then longest;
-            # an exception's public suffix is its rule minus one label
-            F.max(
-                F.struct(
-                    F.col("is_exception").cast("int").alias("exc"),
-                    F.col("_k").alias("k"),
-                )
-            ).alias("_best")
-        )
-        .select(
-            "_psl_host",
-            F.when(
-                F.col("_best.exc") == 1, F.col("_best.k") - 1
-            ).otherwise(F.col("_best.k")).alias("_ps_labels"),
-        )
-    )
-    joined = base.join(matched, "_psl_host", "left").withColumn(
-        "_ps_labels",
-        # implicit '*' rule: unlisted TLD is itself the public suffix
-        F.coalesce(F.col("_ps_labels"), F.lit(1)),
-    )
-    labels2 = F.split(F.col("_psl_host"), r"\.")
-    n2 = F.size(labels2)
-    reg = F.when(
-        F.col("_psl_host").isNotNull() & (n2 > F.col("_ps_labels")),
-        F.concat_ws(
-            ".",
-            F.slice(labels2, n2 - F.col("_ps_labels"), F.col("_ps_labels") + 1),
-        ),
-    )
-    return joined.withColumn(out_col, reg).drop("_psl_host", "_ps_labels")
-
-
-_MAX_SUFFIX = 5  # deepest PSL rule family in practice (e.g. pvt.k12.ma.us + 1)
-
-
-def _suffix_maker(labels, n):
-    """Closure factory (exact-arity HOF lambda): k → struct(k, exact last-k
-    suffix, wildcarded form) or null when the host has fewer than k labels."""
-
-    def make(k):
-        exact = F.concat_ws(".", F.slice(labels, n - k + 1, k))
-        # wild = '*.' + last (k-1) labels; for k==1 there is no label to
-        # wildcard (the bare '*' rule is handled by the implicit default)
-        wild = F.when(
-            k >= 2,
-            F.concat(F.lit("*."), F.concat_ws(".", F.slice(labels, n - k + 2, k - 1))),
-        )
-        return F.when(
-            n >= k, F.struct(k.alias("k"), exact.alias("exact"), wild.alias("wild"))
-        )
-
-    return make
-
-
 def domain_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Per-registrable-domain rollup: page count, distinct hosts, distinct
     canonical URLs (post ``strip_tracking``) — the table a crawl scheduler

@@ -77,7 +77,6 @@ from kafka_connector_s3_sink_spark.operators import (
     packing,
     sampling,
     selection,
-    serving,
     tokenizer,
 )
 from kafka_connector_s3_sink_spark.operators import text as text_ops
@@ -108,8 +107,8 @@ class PretrainingConfig:
     # blocking edge and may straddle train/test (boilerplate-heavy
     # near-dups; see dedup_cascade_artifacts). None keeps exact LSH
     # semantics; identical output when no band is hot. Probe-backed sizing
-    # (tools/probe_r11.py hotband, SCALING.md): organic band frequencies
-    # top out at single digits (max 4 at sf0.1) while planted boilerplate
+    # (SCALING.md r11 section): organic band frequencies top out at single
+    # digits (max 4 at sf0.1) while planted boilerplate
     # families reach corpus-fraction sizes, so ~64 leaves clean corpora
     # bit-identical and cuts a 10%-boilerplate corpus's pair volume 4,700x
     # with recall on genuine near-dup pairs IDENTICAL to uncapped.
@@ -445,51 +444,6 @@ def read_packed_corpus(
             key_value=split,
         )
     return df
-
-
-def write_corpus_serving_plan(
-    spark,
-    dest: str,
-    n_shards: int,
-    epochs: int = 1,
-    split: str = "train",
-    seed: str = "serve",
-) -> DataFrame:
-    """Persist a per-epoch serving schedule for one split of a
-    ``write_packed_corpus`` destination (r15: the read ORDER travels with
-    the corpus like the windows and the tokenizer do) — lands under
-    ``<dest>/serving/<split>/`` so per-split schedules coexist and never
-    collide with the packed table's partition directories. See
-    ``operators.serving`` for the order semantics; returns the manifest.
-
-    Straddling packs (``pack_per_split=False``) appear in several splits'
-    layouts; each split schedules its own copy — the loader streams the
-    split's slots via the pack_pos/seg_tokens slot map as usual."""
-    layout = read_packed_corpus(spark, dest, split=split, verify=False)
-    return serving.write_serving_plan(
-        layout,
-        dest,
-        n_shards=n_shards,
-        epochs=epochs,
-        seed=seed,
-        subdir=f"serving/{split}",
-    )
-
-
-def read_corpus_serving_plan(
-    spark,
-    dest: str,
-    epoch: int,
-    split: str = "train",
-    from_step: int = 0,
-) -> DataFrame:
-    """Read one epoch's remaining schedule for a split (see
-    ``serving.read_serving_plan`` — epoch partition-pruned, resume point
-    shard-pruned through the manifest, named refusals when the destination
-    carries no plan for the split)."""
-    return serving.read_serving_plan(
-        spark, dest, epoch, from_step=from_step, subdir=f"serving/{split}"
-    )
 
 
 def assemble_windows(

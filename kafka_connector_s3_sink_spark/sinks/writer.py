@@ -40,9 +40,7 @@ flushes intentionally overwrite (``README.md:158-170``).
 Scale notes: ``repartition(filename)`` hash-distributes groups across executors;
 a skewed group (one huge topic-partition) maps to one task, which is the
 reference's behavior too (one file is inherently one writer) — ``file.max.records``
-is the knob that splits it. For directory-layout output at 100 TB (no exact-name
-requirement) prefer ``write_spark_native``, which keeps everything in the JVM
-(``partitionBy`` + ``maxRecordsPerFile``).
+is the knob that splits it.
 """
 
 from __future__ import annotations
@@ -454,41 +452,3 @@ def _avro_encoder(config: EngineConfig, schema):
         return append, ocf.close
 
     return encoder
-
-
-def write_spark_native(
-    df: DataFrame,
-    config: EngineConfig,
-    dest_dir: str,
-) -> None:
-    """Directory-layout alternative for 100 TB: everything stays in the JVM.
-    ``partitionBy(topic, partition)`` replaces the filename template with a
-    directory scheme; ``maxRecordsPerFile`` replaces ``file.max.records``;
-    the format writer applies compression natively. Use when exact
-    reference-compatible object names are not required."""
-    enforce_csv_schema_types(df.schema, config)
-    writer = (
-        df.write.mode("overwrite")
-        .partitionBy("topic", "partition")
-        .option("compression", config.file_compression.value)
-    )
-    if config.file_max_records > 0:
-        writer = writer.option("maxRecordsPerFile", config.file_max_records)
-    if config.format_type is FormatType.PARQUET:
-        writer.parquet(dest_dir)
-    else:
-        lines = df.select(
-            record_line_column(config, df.schema).alias("value"),
-            "topic",
-            "partition",
-        )
-        text_writer = (
-            lines.write.mode("overwrite")
-            .partitionBy("topic", "partition")
-            .option("compression", config.file_compression.value)
-        )
-        if config.file_max_records > 0:
-            text_writer = text_writer.option(
-                "maxRecordsPerFile", config.file_max_records
-            )
-        text_writer.text(dest_dir)

@@ -641,82 +641,6 @@ def write_wet(
     )
 
 
-def compact_warc_store(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    target_records_per_archive: int = 50_000,
-    file_prefix: str = "compact",
-    main_records_only: bool = True,
-) -> list[str]:
-    """Fold a store of many SMALL archives (the shape a fetcher fleet
-    produces — one archive per fetcher flush) into right-sized ones:
-    re-ingest via ``read_warc``, repartition EACH record type to
-    ``ceil(type_count / target_records_per_archive)`` partitions, re-export
-    with ``write_warc`` — same pattern as ``packing.compact_parquet`` for
-    the parquet side. Response records keep their HTTP framing (status and
-    content-type re-emitted); with ``main_records_only`` (default)
-    warcinfo/request/metadata records drop — compaction is a DATA
-    maintenance op, and each output archive gets its own fresh warcinfo.
-    Record ids and gzip members stay content-derived/deterministic, so
-    re-running compaction is idempotent byte-wise per partition."""
-    import math
-
-    records = read_warc(spark, src_dir).filter(F.col("parse_error").isNull())
-    if main_records_only:
-        records = records.filter(
-            F.col("warc_type").isin("response", "conversion")
-        )
-    # one lightweight job; per-TYPE counts drive the partition counts — a
-    # mixed store sized off the combined count would emit up to 2x the
-    # intended archives, each half-filled
-    counts = {
-        row["warc_type"]: row["count"]
-        for row in records.groupBy("warc_type").count().collect()
-    }
-    resp_n = counts.get("response", 0)
-    conv_n = counts.get("conversion", 0)
-    if resp_n == 0 and conv_n == 0:
-        return []
-    conversions = records.filter(F.col("warc_type") == "conversion")
-    responses = records.filter(F.col("warc_type") == "response")
-    written: list[str] = []
-    if resp_n:
-        n_out = max(1, math.ceil(resp_n / target_records_per_archive))
-        written += write_warc(
-            responses.select(
-                "target_uri",
-                "payload",
-                F.coalesce(
-                    "warc_date", F.lit("2024-01-01T00:00:00Z")
-                ).alias("warc_date"),
-                F.coalesce("http_status", F.lit(200)).alias("http_status"),
-                F.coalesce(
-                    "http_content_type", F.lit("text/html; charset=utf-8")
-                ).alias("http_content_type"),
-            ).repartition(n_out),
-            dest_dir,
-            file_prefix=file_prefix,
-            warcinfo="operation: compaction\r\n",
-        )
-    if conv_n:
-        n_out = max(1, math.ceil(conv_n / target_records_per_archive))
-        written += write_warc(
-            conversions.select(
-                "target_uri",
-                "payload",
-                F.coalesce(
-                    "warc_date", F.lit("2024-01-01T00:00:00Z")
-                ).alias("warc_date"),
-            ).repartition(n_out),
-            dest_dir,
-            file_prefix=f"{file_prefix}-wet",
-            warcinfo="operation: compaction\r\n",
-            record_type="conversion",
-        )
-    return sorted(written)
-
-
 # ---------------------------------------------------------------------------
 # the registrable "warc" Data Source
 

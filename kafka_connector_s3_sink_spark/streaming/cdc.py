@@ -34,9 +34,6 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Debezium op codes: c=create, u=update, d=delete, r=snapshot read
-_VALID_OPS = ("c", "u", "d", "r")
-
 
 def unwrap_cdc_envelope(
     df: DataFrame,
@@ -111,19 +108,6 @@ def cdc_snapshot(
     )
     return latest.filter(~F.coalesce(F.col("deleted"), F.lit(False))).drop(
         "deleted"
-    )
-
-
-def cdc_op_counts(changes: DataFrame) -> DataFrame:
-    """Per-op audit counts (c/u/d/r + unknown) — the one-line health check a
-    CDC pipeline dashboards. One partial-aggregated shuffle."""
-    return (
-        changes.groupBy(
-            F.when(F.col("op").isin(*_VALID_OPS), F.col("op"))
-            .otherwise(F.lit("unknown"))
-            .alias("op")
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
     )
 
 

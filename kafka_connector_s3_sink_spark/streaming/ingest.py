@@ -139,7 +139,7 @@ class IngestConfig:
     # hot-band guard for the history classification (incremental_dedup's
     # max_band_df) AND the intra-batch cascade: bounds any band's join
     # fan-out on boilerplate-heavy crawls. Probe-backed sizing: ~64 — see
-    # PretrainingConfig.max_band_df / SCALING.md (tools/probe_r11.py).
+    # PretrainingConfig.max_band_df / SCALING.md r11 section.
     max_band_df: Optional[int] = None
     # redact PII from the sink-bound documents and packs (text.
     # redact_pii_columns) AFTER the index appends — fingerprints stay
@@ -802,54 +802,6 @@ def read_ingest_packs(
     return df
 
 
-def write_ingest_serving_plan(
-    spark: SparkSession,
-    dest_dir: str,
-    n_shards: int,
-    epochs: int = 1,
-    seed: str = "serve",
-) -> DataFrame:
-    """Persist a per-epoch serving schedule over EVERY completed ingest
-    epoch's packs (r15: the read order travels with the corpus — the
-    streaming ladder's twin of ``pretraining.write_corpus_serving_plan``).
-    Pack identity is the composite ``'<batch_id>#<pack_id>'`` (pack ids
-    restart per epoch, so the bare id is not unique corpus-wide); the plan
-    lands under ``<dest>/serving/`` and interleaves all ingested epochs
-    into one schedule per TRAINING epoch. Re-run after new crawl batches
-    land to extend the schedule (deterministic: unchanged packs keep their
-    shard, the fresh permutation re-mixes the visit order)."""
-    from kafka_connector_s3_sink_spark.operators import serving
-
-    layout = read_ingest_packs(spark, dest_dir, verify=False).withColumn(
-        "pack_key",
-        F.concat_ws(
-            "#", F.col("batch_id"), F.col("pack_id").cast("string")
-        ),
-    )
-    return serving.write_serving_plan(
-        layout,
-        dest_dir,
-        n_shards=n_shards,
-        epochs=epochs,
-        seed=seed,
-        pack_id_col="pack_key",
-    )
-
-
-def read_ingest_serving_plan(
-    spark: SparkSession, dest_dir: str, epoch: int, from_step: int = 0
-) -> DataFrame:
-    """Read one training epoch's remaining schedule from an ingest
-    destination (``serving.read_serving_plan`` with the ingest's composite
-    ``pack_key`` column — split it on ``'#'`` to join back to
-    ``read_ingest_packs``/``read_ingest_windows`` keys)."""
-    from kafka_connector_s3_sink_spark.operators import serving
-
-    return serving.read_serving_plan(
-        spark, dest_dir, epoch, from_step=from_step
-    )
-
-
 def read_ingest_windows(
     spark: SparkSession,
     dest_dir: str,
@@ -1009,116 +961,6 @@ def read_ingest_windows(
         id_col=id_col,
         text_col=text_col,
         pack_key=("batch_id", "pack_id"),
-    )
-
-
-def ingest_datasheet(
-    spark: SparkSession,
-    dest_dir: str,
-    text_col: str = "text",
-) -> DataFrame:
-    """One-call data card for a streaming-ingest destination — the
-    ``pretraining.corpus_datasheet`` contract (Gebru et al. 2018, the
-    numbers section) on the streaming ladder (r13, VERDICT item 2), so
-    BOTH trainer-facing ladders ship a governance artifact. Assembled
-    entirely from the written tables (``<dest>/metrics``,
-    ``<dest>/pack_stats``, ``<dest>/documents``): no live pipeline state,
-    so a trainer can datasheet a finished corpus long after the stream
-    stopped, and a replayed epoch datasheets identically. Returns the same
-    LONG-format frame ``(section, key, value)``:
-
-    - ``stage_rows``: classification counts SUMMED across epochs
-      (``n_input / n_qualified / n_canonical / n_exact_dup / n_near_dup /
-      n_keep``) plus ``n_epochs`` — the streaming analogue of the preset's
-      per-stage survivor counts (``n_keep`` ≡ the preset's admitted set on
-      a shared corpus, the r11 parity contract);
-    - ``epoch``: the same counts at per-epoch grain (keys
-      ``<batch_id>:<metric>``) — the drill-down a batch build doesn't have;
-    - ``split``: per-split admitted-document counts from the documents
-      table;
-    - ``packs``: per-epoch AND total pack volumetrics from ``pack_stats``
-      (``n_packs / n_docs / n_segments / n_tokens`` — what
-      ``read_ingest_packs`` verifies against the data);
-    - ``pii``: per-type placeholder totals counted in the sink-bound text.
-      With ``IngestConfig.redact_pii`` these equal the preset's
-      ``pii_totals`` (each counted match inserted exactly one typed
-      placeholder); without redaction they count organic placeholder-shaped
-      strings (normally zero).
-
-    Cost: O(epochs + splits) driver rows plus ONE aggregation pass over the
-    documents table for the pii section — run once per consumed corpus.
-    Requires ``IngestConfig.write_metrics=True`` (the default); a missing
-    metrics, documents, or pack_stats table raises ``ValueError`` naming
-    the table (never a raw ``AnalysisException``)."""
-    import re as _re
-
-    from pyspark.errors import AnalysisException
-
-    from kafka_connector_s3_sink_spark.operators.text import PII_PATTERNS
-
-    try:
-        metrics = spark.read.parquet(f"{dest_dir}/metrics")
-    except AnalysisException as exc:
-        raise ValueError(
-            f"no metrics table under {dest_dir} — the stage_rows/epoch "
-            "sections need IngestConfig.write_metrics=True (the default) "
-            "at ingest time"
-        ) from exc
-    rows: list[tuple[str, str, float]] = []
-    stage_cols = [c for c in metrics.columns if c != "batch_id"]
-    epochs = metrics.orderBy("batch_id").collect()
-    rows.append(("stage_rows", "n_epochs", float(len(epochs))))
-    for c in stage_cols:
-        rows.append(
-            ("stage_rows", c, float(sum(r[c] or 0 for r in epochs)))
-        )
-    for r in epochs:
-        for c in stage_cols:
-            rows.append(("epoch", f"{r['batch_id']}:{c}", float(r[c] or 0)))
-    try:
-        docs = spark.read.parquet(f"{dest_dir}/documents")
-    except AnalysisException as exc:
-        raise ValueError(
-            f"no documents table under {dest_dir} — the split/pii sections "
-            "read the ingest's admitted-document sink; is this the ingest "
-            "destination, and has the first epoch committed?"
-        ) from exc
-    for r in (
-        docs.groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("split")
-        .collect()
-    ):
-        rows.append(("split", f"{r['split']}:n_docs", float(r["n"])))
-    pack_metrics = ("n_packs", "n_docs", "n_segments", "n_tokens")
-    try:
-        stats_df = spark.read.parquet(f"{dest_dir}/pack_stats")
-    except AnalysisException as exc:
-        raise ValueError(
-            f"no pack_stats table under {dest_dir} — the packs section "
-            "needs the pack writer's stats table (it lands after the "
-            "epoch's packs; an in-flight first epoch has neither)"
-        ) from exc
-    stats = stats_df.orderBy("batch_id").collect()
-    for r in stats:
-        for m in pack_metrics:
-            rows.append(("packs", f"{r['batch_id']}:{m}", float(r[m])))
-    for m in pack_metrics:
-        rows.append(("packs", f"total:{m}", float(sum(r[m] for r in stats))))
-    ptot = docs.agg(
-        *[
-            F.sum(
-                F.regexp_count(F.col(text_col), F.lit(_re.escape(token)))
-            ).alias(f"n_pii_{name}")
-            for name, _, token in PII_PATTERNS
-        ]
-    ).collect()[0]
-    for name, _, _ in PII_PATTERNS:
-        rows.append(
-            ("pii", f"n_pii_{name}", float(ptot[f"n_pii_{name}"] or 0))
-        )
-    return spark.createDataFrame(
-        rows, "section string, key string, value double"
     )
 
 

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from kafka_connector_s3_sink_spark.formats import avro
 from kafka_connector_s3_sink_spark.streaming.cdc import (
-    cdc_op_counts,
     cdc_snapshot,
     unwrap_cdc_envelope,
 )
@@ -113,19 +112,6 @@ def test_snapshot_is_one_hash_aggregation(changes):
         .executedPlan().toString()
     )
     assert "max_by" in plan and "Window" not in plan
-
-
-def test_op_counts_and_unknown_routing(spark, changes):
-    extra = spark.createDataFrame(
-        [Row(op="x", deleted=False)], "op string, deleted boolean"
-    )
-    counts = {
-        r["op"]: r["n_events"]
-        for r in cdc_op_counts(
-            changes.select("op", "deleted").unionByName(extra)
-        ).collect()
-    }
-    assert counts == {"c": 2, "u": 1, "d": 1, "r": 1, "unknown": 1}
 
 
 def test_null_envelope_rows_survive(spark):

@@ -119,54 +119,3 @@ def test_empty_batch_reads_as_full_shift(docs, tmp_path):
     # smoothing keeps the metrics finite; n_cur is 0
     assert all(r["n_cur"] == 0 for r in rep.values())
     assert all(r["psi"] is not None for r in rep.values())
-
-
-def test_corpus_diff_statuses_and_duckdb_twin(spark):
-    """Full status matrix + the DuckDB replay of the identical fingerprint
-    (md5 of lowercased whitespace-collapsed text) and full-outer-join chain."""
-    import duckdb
-
-    from kafka_connector_s3_sink_spark.operators.drift import (
-        corpus_diff,
-        corpus_diff_summary,
-    )
-
-    old_rows = [(1, "Alpha text"), (2, "beta"), (3, "gamma  SPACED"), (4, "delta")]
-    new_rows = [(2, "beta"), (3, "Gamma spaced"), (4, "delta EDITED"), (5, "new doc")]
-    old = spark.createDataFrame(old_rows, ["doc_id", "text"])
-    new = spark.createDataFrame(new_rows, ["doc_id", "text"])
-    diff = corpus_diff(old, new)
-    got = {r.doc_id: r.status for r in diff.collect()}
-    # doc 3: case+whitespace-only edit → same normalized fingerprint
-    assert got == {1: "removed", 2: "unchanged", 3: "unchanged",
-                   4: "changed", 5: "added"}
-    summary = {r.status: r.n_docs for r in corpus_diff_summary(diff).collect()}
-    assert summary == {"removed": 1, "unchanged": 2, "changed": 1, "added": 1}
-
-    con = duckdb.connect()
-    for tbl, rows in (("old_t", old_rows), ("new_t", new_rows)):
-        con.execute(
-            f"CREATE TABLE {tbl} AS SELECT * FROM (VALUES "
-            + ", ".join(f"({d}, '{t}')" for d, t in rows)
-            + ") t(doc_id, text)"
-        )
-    duck = con.execute("""
-        WITH o AS (SELECT doc_id,
-                md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-            FROM old_t),
-        n AS (SELECT doc_id,
-                md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
-            FROM new_t)
-        SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-            CASE WHEN o.fp IS NULL THEN 'added'
-                 WHEN n.fp IS NULL THEN 'removed'
-                 WHEN o.fp = n.fp THEN 'unchanged'
-                 ELSE 'changed' END AS status,
-            o.fp AS old_fp, n.fp AS new_fp
-        FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-        ORDER BY 1
-    """).fetchall()
-    spark_rows = sorted(
-        (r.doc_id, r.status, r.old_fp, r.new_fp) for r in diff.collect()
-    )
-    assert spark_rows == [tuple(r) for r in duck]

@@ -1,10 +1,8 @@
-"""Z-order layout + zonemap pruning (`operators/layout.py`): the Morton key
-interleaves correctly, clustered writes make point/range queries touch a
-small fraction of files, pruning is lossless vs the full scan, and an
-unclustered layout shows why clustering matters."""
+"""Z-order clustering key (`operators/layout.py`): the Morton key
+interleaves correctly, clamps out-of-range values, and refuses widths that
+would overflow the sign bit."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from kafka_connector_s3_sink_spark.operators import layout
 from kafka_connector_s3_sink_spark.operators.layout import ZColumn
@@ -30,70 +28,6 @@ def test_zorder_key_clamps_out_of_range(spark):
     ).collect()[0]["z"]
     # x clamps to bucket 0, y to bucket 7 (0b111 -> odd positions 1,3,5)
     assert z == (1 << 1) + (1 << 3) + (1 << 5)
-
-
-@pytest.fixture(scope="module")
-def clustered(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("zorder") / "events")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "event_id", "user_id", "value"
-    )
-    cols = [ZColumn("user_id", 0.0, 16.0), ZColumn("value", 0.0, 350.0)]
-    layout.cluster_write(ev, path, cols, n_files=16)
-    return path, ev, cols
-
-
-def test_cluster_write_produces_n_files(clustered):
-    path, _, _ = clustered
-    zms = layout.file_zonemaps(path, ["user_id", "value"])
-    assert len(zms) == 16
-    assert all(zm["user_id_min"] is not None for zm in zms)
-
-
-def test_point_query_prunes_most_files(clustered):
-    path, _, _ = clustered
-    zms = layout.file_zonemaps(path, ["user_id", "value"])
-    picked = layout.prune_files(
-        zms, {"user_id": (3, 4), "value": (0, 40)}
-    )
-    # a tight 2-D box must hit a small corner of the z-curve
-    assert 0 < len(picked) <= 6, f"pruned to {len(picked)} of 16"
-
-
-def test_pruned_read_equals_full_scan(spark, clustered):
-    path, ev, _ = clustered
-    zms = layout.file_zonemaps(path, ["user_id", "value"])
-    preds = {"user_id": (2.0, 6.0), "value": (100.0, 200.0)}
-    pruned = layout.read_pruned(spark, path, zms, preds)
-    full = ev.filter(
-        F.col("user_id").between(2, 6) & F.col("value").between(100, 200)
-    )
-    got = sorted(r["event_id"] for r in pruned.collect())
-    want = sorted(r["event_id"] for r in full.collect())
-    assert got == want and len(want) > 0
-
-
-def test_unclustered_layout_cannot_prune(spark, clustered, tmp_path):
-    """Control: the same data written round-robin leaves every file's
-    envelope covering everything — zero files prune. This is the measured
-    difference layout makes (the 100x version of this is scan cost)."""
-    path, ev, _ = clustered
-    upath = str(tmp_path / "unclustered")
-    ev.repartition(16).write.parquet(upath)
-    uzms = layout.file_zonemaps(upath, ["user_id", "value"])
-    upicked = layout.prune_files(uzms, {"user_id": (3, 4), "value": (0, 40)})
-    zms = layout.file_zonemaps(path, ["user_id", "value"])
-    zpicked = layout.prune_files(zms, {"user_id": (3, 4), "value": (0, 40)})
-    assert len(upicked) == 16  # no pruning possible
-    assert len(zpicked) <= 6
-
-
-def test_everything_pruned_returns_empty_with_schema(spark, clustered):
-    path, ev, _ = clustered
-    zms = layout.file_zonemaps(path, ["user_id", "value"])
-    out = layout.read_pruned(spark, path, zms, {"user_id": (1e9, 2e9)})
-    assert out.count() == 0
-    assert set(out.columns) == set(ev.columns)
 
 
 def test_zorder_key_rejects_sign_bit_overflow(spark):

@@ -72,6 +72,34 @@ def test_embedding_cosine_dedup(spark):
     assert pairs == {(1, 2): 1.0}  # orthogonal excluded; cross-block not compared
 
 
+@pytest.mark.parametrize("size", [2, 4])
+def test_embedding_cosine_dim_mismatch_fails_loudly(spark, size):
+    """``dim=`` is a contract on every vector's length: with dim=3, two
+    IDENTICAL 4-element vectors must not come back as a plausible wrong
+    cosine (the tail dropped from the dot but not the norm), and a
+    2-element vector must not surface as a bare index error — both raise
+    an error naming the function, ``dim`` and the actual size. The
+    ``semantic_dupes`` delegate inherits the check."""
+    vec = [1.0, 2.0, 3.0, 4.0][:size]
+    df = spark.createDataFrame(
+        [Row(vec_id=1, embedding=vec, label=0), Row(vec_id=2, embedding=vec, label=0)]
+    )
+    msg = f"embedding_cosine_dupes: dim=3 but vector [12] has size {size}"
+    with pytest.raises(Exception, match=msg):
+        dedup.embedding_cosine_dupes(df, threshold=0.0, dim=3).collect()
+    with pytest.raises(Exception, match=msg):
+        dedup.semantic_dupes(
+            df.drop("label"), centroids=[(0, vec)], threshold=0.0, dim=3
+        ).collect()
+    # the matching dimension still scores the identical pair at 1.0
+    ok = spark.createDataFrame(
+        [Row(vec_id=1, embedding=[1.0, 2.0, 3.0], label=0),
+         Row(vec_id=2, embedding=[1.0, 2.0, 3.0], label=0)]
+    )
+    got = dedup.embedding_cosine_dupes(ok, threshold=0.0, dim=3).collect()
+    assert [(r["id1"], r["id2"], r["cosine"]) for r in got] == [(1, 2, 1.0)]
+
+
 def test_semantic_dupes_kmeans_blocking(spark):
     """SemDeDup-style learned blocking (r7): k-means cells replace the
     caller-supplied block column. Cosine is scale-invariant, so a scaled
@@ -315,44 +343,6 @@ def test_ivf_index_append_replay_and_probe(spark, tmp_path, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     got = similarity.ivf_topk_indexed(spark, dest, queries, k=1, nprobe=1)
-    top = {r["query_id"]: (r["nbr_id"], r["cosine"]) for r in got.collect()}
-    for qid in (0, 1, 2):
-        assert top[qid][0] == qid + 100_000 and top[qid][1] == 1.0
-
-
-def test_ivf_rebuild_refits_and_preserves_corpus(spark, tmp_path, sf_dir):
-    """The rebuild step of the IVF lifecycle: refit over the index's current
-    contents into a NEW location — every vector present exactly once under
-    the new quantizer, history lineage folded to one batch, probes correct,
-    and the old index untouched (queryable during the switch)."""
-    corpus = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base = corpus.filter(F.col("vec_id") >= 100)
-    old = str(tmp_path / "ivf_old")
-    similarity.write_ivf_index(base, old, n_centroids=8)
-    batch = corpus.filter(F.col("vec_id") < 100).select(
-        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
-    )
-    similarity.append_to_ivf_index(batch, old, batch_id="crawl-1")
-
-    new = str(tmp_path / "ivf_new")
-    cents = similarity.rebuild_ivf_index(spark, old, new)
-    assert len(cents) == 8  # defaults to the old quantizer's k
-
-    total = base.count() + batch.count()
-    new_ids = [r["vec_id"] for r in spark.read.parquet(new).select("vec_id").collect()]
-    assert len(new_ids) == total and len(set(new_ids)) == total
-    batches = {
-        r["batch_id"]
-        for r in spark.read.parquet(new).select("batch_id").distinct().collect()
-    }
-    assert batches == {"rebuilt"}  # rebuild IS a lineage compaction
-
-    # old index untouched and still queryable
-    assert spark.read.parquet(old).count() == total
-    queries = corpus.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    got = similarity.ivf_topk_indexed(spark, new, queries, k=1, nprobe=1)
     top = {r["query_id"]: (r["nbr_id"], r["cosine"]) for r in got.collect()}
     for qid in (0, 1, 2):
         assert top[qid][0] == qid + 100_000 and top[qid][1] == 1.0
@@ -858,100 +848,6 @@ def test_dedup_media_hashes_precomputed(spark):
     assert all(r["phash_error"] is None for r in out.values())
 
 
-def test_incremental_media_dedup_index(spark, tmp_path):
-    """The persisted phash-block index: build from a base corpus, classify a
-    new batch O(batch)-style — resized image and resampled audio match
-    history, fresh and corrupt payloads keep; append is idempotent per
-    batch_id; the multi-TB index side is never shuffled (a broadcast Join
-    sits between the index FileScan and any hash Exchange)."""
-    rows = [
-        [((c * 13 + r * 7) % 240, (c * 29) % 240, (r * 31) % 240) for c in range(18)]
-        for r in range(16)
-    ]
-    base_img = _bmp_bytes(18, 16, rows)
-    other_img = _bmp_bytes(
-        18, 16, [[(255 - b, 255 - g, 255 - r_) for (b, g, r_) in row] for row in rows]
-    )
-    import math
-
-    ramp = [int(16000 * (i / 4000) * math.sin(i * 0.7)) for i in range(4000)]
-    base_wav = _wav_bytes(ramp)
-
-    def media_df(items):
-        return spark.createDataFrame(
-            [
-                Row(media_id=i, media_type=t, payload=bytearray(p),
-                    meta=Row(n_bytes=len(p), content_md5="", mime=""))
-                for i, t, p in items
-            ],
-            multimodal.MEDIA_SCHEMA,
-        )
-
-    corpus = media_df(
-        [(1, "image", base_img), (2, "image", other_img), (3, "audio", base_wav)]
-    )
-    loc = str(tmp_path / "midx")
-    multimodal.build_media_index(corpus, "mediaidx", loc, max_hamming=6, num_buckets=4)
-    try:
-        batch = media_df(
-            [
-                (101, "image", multimodal._resize_bmp(base_img, 36, 32)),  # dup of 1
-                (102, "image", _bmp_bytes(18, 16, [[(r_ % 256,) * 3 for r_ in range(40, 58)]] * 16)),  # fresh
-                (103, "audio", multimodal._resample_wav(base_wav, 11025)),  # dup of 3
-                (104, "image", b"not a bmp"),  # corrupt
-            ]
-        )
-        res = multimodal.incremental_media_dedup(batch, "mediaidx", max_hamming=6)
-        out = {r["media_id"]: r for r in res.collect()}
-        assert out[101]["is_duplicate"] and out[101]["match_id"] == 1
-        assert not out[102]["is_duplicate"]
-        assert out[103]["is_duplicate"] and out[103]["match_id"] == 3
-        assert not out[104]["is_duplicate"] and out[104]["phash_error"] is not None
-
-        # plan contract (r5b): walking UP from the index FileScan, a Join
-        # appears before any hash Exchange — history never reshuffles
-        final = res._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in final
-        lines = final.splitlines()
-        scan_line = next(i for i, l in enumerate(lines) if "phash_blocks" in l)
-
-        def indent(l):
-            return len(l) - len(l.lstrip(" :+-*(0123456789)"))
-
-        cur = indent(lines[scan_line])
-        for i in range(scan_line - 1, -1, -1):
-            if indent(lines[i]) >= cur:
-                continue
-            cur = indent(lines[i])
-            body = lines[i].strip(" :+-")
-            if "Join" in body:
-                break
-            assert "Exchange hashpartitioning" not in body, lines[i]
-
-        # idempotent append: same batch_id twice inserts once
-        fresh_only = media_df(
-            [(102, "image", _bmp_bytes(18, 16, [[(r_ % 256,) * 3 for r_ in range(40, 58)]] * 16))]
-        )
-        multimodal.append_media_to_index(
-            fresh_only, "mediaidx", loc, batch_id="b1", max_hamming=6, num_buckets=4
-        )
-        n1 = spark.table("mediaidx_phash_blocks").count()
-        multimodal.append_media_to_index(
-            fresh_only, "mediaidx", loc, batch_id="b1", max_hamming=6, num_buckets=4
-        )
-        assert spark.table("mediaidx_phash_blocks").count() == n1
-        # and the appended member is now found
-        re_res = multimodal.incremental_media_dedup(
-            media_df([(201, "image", _bmp_bytes(18, 16, [[(r_ % 256,) * 3 for r_ in range(40, 58)]] * 16))]),
-            "mediaidx",
-            max_hamming=6,
-        )
-        rr = {r["media_id"]: r for r in re_res.collect()}
-        assert rr[201]["is_duplicate"] and rr[201]["match_id"] == 102
-    finally:
-        multimodal.drop_media_index(spark, "mediaidx")
-
-
 def test_perceptual_dupes_exact_radius_zero(spark):
     """max_hamming=0 degenerates to exact-hash dedup: one unsliced 64-bit
     block, only identical fingerprints pair."""
@@ -1294,64 +1190,6 @@ def test_url_ops(spark):
     assert stats[None] == (1, 0, 1)  # unparseable rolls up, never dropped
 
 
-def test_resize_images_bmp_roundtrip(spark):
-    """resize_images: a 4x4 quadrant BMP downsamples to 2x2 with one pixel
-    per quadrant, the output is a VALID BMP (real_decoder round-trips it at
-    the new dimensions), and a non-BMP payload routes its error."""
-    from pyspark.sql import Row
-
-    from kafka_connector_s3_sink_spark.operators.multimodal import (
-        _decode_bmp,
-        resize_images,
-    )
-
-    black, white = (0, 0, 0), (255, 255, 255)
-    # bottom-up rows: bottom half black, top half white, 4x4
-    bmp = _bmp_bytes(4, 4, [[black] * 4, [black] * 4, [white] * 4, [white] * 4])
-    media = spark.createDataFrame(
-        [
-            Row(media_id=1, payload=bytearray(bmp)),
-            Row(media_id=2, payload=bytearray(b"not a bitmap")),
-        ]
-    )
-    out = {r["media_id"]: r for r in resize_images(media, 2, 2).collect()}
-    ok = out[1]
-    assert (ok["width"], ok["height"], ok["resize_error"]) == (2, 2, None)
-    decoded = _decode_bmp(bytes(ok["payload"]))
-    assert (decoded["width"], decoded["height"]) == (2, 2)
-    # 2 black + 2 white pixels -> luminance histogram at the extremes
-    assert decoded["feature"][0] == 0.5 and decoded["feature"][7] == 0.5
-    bad = out[2]
-    assert bad["payload"] is None and "NotImplementedError" in bad["resize_error"]
-
-
-def test_resample_audio_wav_roundtrip(spark):
-    """resample_audio: an 8 kHz ramp halves to 4 kHz with frame count ~halved
-    and the output is a valid PCM WAV (_decode_wav round-trips at the new
-    rate); non-WAV payloads route their error."""
-    from pyspark.sql import Row
-
-    from kafka_connector_s3_sink_spark.operators.multimodal import (
-        _decode_wav,
-        resample_audio,
-    )
-
-    samples = list(range(0, 1600))  # 0.2 s ramp at 8 kHz
-    media = spark.createDataFrame(
-        [
-            Row(media_id=1, payload=bytearray(_wav_bytes(samples, 8000))),
-            Row(media_id=2, payload=bytearray(b"xxxx not audio")),
-        ]
-    )
-    out = {r["media_id"]: r for r in resample_audio(media, 4000).collect()}
-    ok = out[1]
-    assert ok["resize_error"] is None and ok["height"] == 4000
-    assert abs(ok["width"] - 800) <= 1  # ~half the frames
-    decoded = _decode_wav(bytes(ok["payload"]))
-    assert decoded["height"] == 4000 and decoded["width"] == ok["width"]
-    assert "NotImplementedError" in out[2]["resize_error"]
-
-
 def _y4m_bytes(width, height, y_frames):
     """Minimal YUV4MPEG2 stream: given per-frame Y planes (bytes), U/V filled
     with 128 (neutral chroma)."""
@@ -1360,87 +1198,6 @@ def _y4m_bytes(width, height, y_frames):
     for y in y_frames:
         out += b"FRAME\n" + y + uv + uv
     return out
-
-
-def test_extract_frame_features_y4m(spark):
-    """Real video frame sampling: every_n picks frames 0 and 2 of 4, per-frame
-    luma histograms are exact, and a non-y4m payload routes its error."""
-    from pyspark.sql import Row
-
-    from kafka_connector_s3_sink_spark.operators.multimodal import (
-        extract_frame_features,
-    )
-
-    w, h = 4, 2
-    dark, bright = bytes([0]) * (w * h), bytes([255]) * (w * h)
-    video = _y4m_bytes(w, h, [dark, bright, bright, dark])
-    media = spark.createDataFrame(
-        [
-            Row(media_id=1, payload=bytearray(video)),
-            Row(media_id=2, payload=bytearray(b"AVI nope")),
-        ]
-    )
-    rows = extract_frame_features(media, every_n=2).collect()
-    good = {(r["media_id"], r["frame_no"]): r for r in rows
-            if r["decode_error"] is None}
-    assert set(good) == {(1, 0), (1, 2)}
-    assert good[(1, 0)]["feature"][0] == 1.0   # all-dark frame -> bin 0
-    assert good[(1, 2)]["feature"][7] == 1.0   # all-bright frame -> bin 7
-    assert good[(1, 0)]["width"] == w and good[(1, 0)]["height"] == h
-    bad = [r for r in rows if r["decode_error"] is not None]
-    assert len(bad) == 1 and "NotImplementedError" in bad[0]["decode_error"]
-
-
-def test_registrable_domain_psl(spark):
-    """r6: real-PSL algorithm — wildcard (*.ck), exception (!www.ck), deep
-    suffixes, and divergence from the heuristic on rules it doesn't know."""
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from kafka_connector_s3_sink_spark.operators.urls import (
-        registrable_domain,
-        registrable_domain_psl,
-    )
-
-    rules = [
-        "// comment line", "",
-        "com", "uk", "co.uk", "com.au", "au",
-        "ck", "*.ck", "!www.ck",
-        "us", "k12.ma.us", "pvt.k12.ma.us",
-    ]
-    cases = [
-        # (url, psl_domain)
-        ("https://a.b.example.co.uk/x", "example.co.uk"),
-        ("https://shop.big.com.au/", "big.com.au"),
-        ("https://example.com/", "example.com"),
-        # wildcard: every label under ck is a public suffix...
-        ("https://foo.bar.ck/", "foo.bar.ck"),
-        # ...except the exception rule: www.ck IS registrable
-        ("https://www.ck/", "www.ck"),
-        ("https://sub.www.ck/", "www.ck"),
-        # deep suffix: pvt.k12.ma.us is public, one more label registers
-        ("https://school.pvt.k12.ma.us/", "school.pvt.k12.ma.us"),
-        # host that IS a public suffix -> null
-        ("https://co.uk/", None),
-        # unlisted TLD: implicit * rule
-        ("https://x.y.internal/", "y.internal"),
-        # relative URL: null host -> null domain
-        ("/rel/only", None),
-    ]
-    df = spark.createDataFrame([Row(url=u, tag=i) for i, (u, _) in enumerate(cases)])
-    got = {r["tag"]: r["domain"]
-           for r in registrable_domain_psl(df, rules).collect()}
-    for i, (u, want) in enumerate(cases):
-        assert got[i] == want, (u, got[i], want)
-    # divergence from the heuristic where the PSL knows better:
-    heur = {
-        r["tag"]: r["d"]
-        for r in df.select("tag", registrable_domain(F.col("url")).alias("d")).collect()
-    }
-    assert heur[3] == "bar.ck" and got[3] == "foo.bar.ck"      # *.ck
-    assert heur[6] == "ma.us" and got[6] == "school.pvt.k12.ma.us"
-    # passthrough: original columns survive
-    assert set(registrable_domain_psl(df, rules).columns) == {"url", "tag", "domain"}
 
 
 def test_language_id_multi(spark):
@@ -1588,29 +1345,6 @@ def test_topk_recall_evaluation(spark):
     )
     bad = similarity.topk_recall(wrong, exact, k=5).collect()
     assert all(r["recall"] == 0.0 for r in bad)
-
-
-def test_url_dedup(spark):
-    """r6 URL-level dedup: tracking-param variants collapse to one canonical
-    row; latest-fetch wins with an order column; deterministic without."""
-    from pyspark.sql import Row
-
-    rows = [
-        Row(url="https://a.io/p?utm_source=x&id=7", fetched=1, text="old"),
-        Row(url="https://a.io/p?id=7&utm_campaign=y", fetched=2, text="new"),
-        Row(url="https://a.io/q", fetched=1, text="only"),
-    ]
-    df = spark.createDataFrame(rows)
-    out = {r["canonical_url"]: r
-           for r in dedup.url_dedup(df, order_col="fetched").collect()}
-    assert set(out) == {"https://a.io/p?id=7", "https://a.io/q"}
-    dup = out["https://a.io/p?id=7"]
-    assert dup["n_variants"] == 2 and dup["text"] == "new" and dup["fetched"] == 2
-    assert out["https://a.io/q"]["n_variants"] == 1
-    # orderless form is deterministic across runs
-    a = {(r["canonical_url"], r["text"]) for r in dedup.url_dedup(df).collect()}
-    b = {(r["canonical_url"], r["text"]) for r in dedup.url_dedup(df).collect()}
-    assert a == b
 
 
 def test_bm25_topk_ranking_and_blocking(spark):
@@ -1850,58 +1584,6 @@ def test_ivfpq_reuses_prefitted_models(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))  # same fit -> same result
 
 
-def test_ivfpq_persisted_index_prunes_and_matches(spark, tmp_path):
-    """Disk-resident IVF-PQ: codes read partition-pruned to probed cells,
-    results identical to the in-memory composition with the same models."""
-    raw = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    idx = str(tmp_path / "ivfpq")
-    cents = similarity.write_ivf_index(raw, idx, n_centroids=8)
-    books = similarity.add_pq_to_ivf_index(spark, idx, m=8, k_codes=16)
-    assert similarity.read_pq_codebooks(idx) == books
-    qs = raw.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    got = similarity.ivfpq_topk_indexed(
-        spark, idx, qs, k=10, nprobe=2, k_candidates=50)
-    # partition pruning reaches the codes scan
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan
-    mem = similarity.ivfpq_topk(
-        raw, qs, n_centroids=8, nprobe=2, m=8, k_codes=16,
-        k=10, k_candidates=50, centroids=cents, codebooks=books)
-    g = sorted((r["query_id"], r["nbr_id"], r["score"], r["rank"])
-               for r in got.collect())
-    e = sorted((r["query_id"], r["nbr_id"], r["score"], r["rank"])
-               for r in mem.collect())
-    assert g == e and len(g) == 50
-
-
-def test_append_pq_codes_is_batch_scoped_and_idempotent(spark, tmp_path):
-    raw = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    base = raw.filter(F.col("vec_id") < 400)
-    newb = raw.filter(F.col("vec_id") >= 400).select(
-        (F.col("vec_id")).alias("vec_id"), "embedding")
-    idx = str(tmp_path / "ivfpq")
-    similarity.write_ivf_index(base, idx, n_centroids=8)
-    similarity.add_pq_to_ivf_index(spark, idx, m=8, k_codes=16)
-    similarity.append_to_ivf_index(newb, idx, batch_id="b1")
-    n1 = similarity.append_pq_codes(spark, idx, "b1")
-    codes = spark.read.parquet(f"{idx}/_pq_codes")
-    assert codes.count() == 500 and n1 == 100
-    # replay the append: same rows, not doubled
-    n2 = similarity.append_pq_codes(spark, idx, "b1")
-    assert n2 == 100 and spark.read.parquet(f"{idx}/_pq_codes").count() == 500
-    # the appended batch's codes match a fresh frozen-codebook encode
-    books = similarity.read_pq_codebooks(idx)
-    nrm = spark.read.parquet(idx).filter(F.col("batch_id") == "b1").select(
-        "vec_id", F.transform(F.col("vec"), lambda x: x / F.col("norm")).alias("nvec"))
-    fresh = {r["vec_id"]: list(r["codes"]) for r in
-             similarity.pq_encode(nrm, books, id_col="vec_id", vec_col="nvec").collect()}
-    stored = {r["vec_id"]: list(r["codes"]) for r in
-              spark.read.parquet(f"{idx}/_pq_codes")  # re-read: the replay
-              .filter(F.col("batch_id") == "b1").collect()}  # rewrote files
-    assert stored == fresh
-
-
 # ---------------------------------------------- hash embeddings (r7)
 
 
@@ -2009,61 +1691,6 @@ def test_ivfpq_residual_encoding_beats_raw_recall(spark):
     r_raw, r_res = recall(False), recall(True)
     assert r_res >= r_raw
     assert r_res >= 0.7  # the measured residual level, with slack
-
-
-def test_ivfpq_persisted_residual_matches_in_memory(spark, tmp_path):
-    raw = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    idx = str(tmp_path / "ivfpq_res")
-    cents = similarity.write_ivf_index(raw, idx, n_centroids=8)
-    books = similarity.add_pq_to_ivf_index(
-        spark, idx, m=8, k_codes=16, residual=True)
-    qs = raw.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    got = sorted(tuple(r) for r in similarity.ivfpq_topk_indexed(
-        spark, idx, qs, k=10, nprobe=2, k_candidates=50).collect())
-    mem = sorted(tuple(r) for r in similarity.ivfpq_topk(
-        raw, qs, n_centroids=8, nprobe=2, m=8, k_codes=16, k=10,
-        k_candidates=50, centroids=cents, codebooks=books,
-        residual=True).collect())
-    assert got == mem and len(got) == 50
-    # replayed appends keep working under the residual flag
-    similarity.append_to_ivf_index(
-        raw.filter(F.col("vec_id") < 3).select(
-            (F.col("vec_id") + 9000).alias("vec_id"), "embedding"),
-        idx, batch_id="b9")
-    n = similarity.append_pq_codes(spark, idx, "b9")
-    assert n == 3
-
-
-def test_ivfpq_accepts_string_query_ids(spark, tmp_path):
-    """Every *_topk entry point takes non-long query ids via query_id_col;
-    the IVF-PQ probe frames must derive the id type from the input schema
-    like pq_topk does, not hardcode long (ADVICE r7)."""
-    raw = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # rename ids in BOTH runs so neither collides with corpus ids: the
-    # self-exclusion filter then behaves identically and results map 1:1
-    qs_long = raw.filter(F.col("vec_id") < 3).select(
-        (F.col("vec_id") + 1_000_000).alias("query_id"), "embedding")
-    qs_str = qs_long.withColumn(
-        "query_id",
-        F.concat(F.lit("q"), (F.col("query_id") - 1_000_000).cast("string")))
-    kw = dict(n_centroids=8, nprobe=2, m=8, k_codes=16, k=5,
-              k_candidates=30)
-    got = similarity.ivfpq_topk(raw, qs_str, **kw).collect()
-    ref = similarity.ivfpq_topk(raw, qs_long, **kw).collect()
-    assert sorted((r["query_id"], r["nbr_id"], r["rank"]) for r in got) == \
-        sorted((f"q{r['query_id'] - 1_000_000}", r["nbr_id"], r["rank"])
-               for r in ref)
-    idx = str(tmp_path / "ivfpq_str")
-    similarity.write_ivf_index(raw, idx, n_centroids=8)
-    similarity.add_pq_to_ivf_index(spark, idx, m=8, k_codes=16)
-    goti = similarity.ivfpq_topk_indexed(
-        spark, idx, qs_str, k=5, nprobe=2, k_candidates=30).collect()
-    refi = similarity.ivfpq_topk_indexed(
-        spark, idx, qs_long, k=5, nprobe=2, k_candidates=30).collect()
-    assert sorted((r["query_id"], r["nbr_id"], r["rank"]) for r in goti) == \
-        sorted((f"q{r['query_id'] - 1_000_000}", r["nbr_id"], r["rank"])
-               for r in refi)
 
 
 def test_fit_sample_threshold_clamps_to_one(spark):

@@ -51,15 +51,6 @@ def test_hash_split_matches_duckdb(docs):
     assert by_split["val"] >= 10 and by_split["test"] >= 10
 
 
-def test_bernoulli_sample_is_nested_and_deterministic(docs):
-    small = {r["doc_id"] for r in sampling.bernoulli_sample(docs, 0.2).collect()}
-    big = {r["doc_id"] for r in sampling.bernoulli_sample(docs, 0.5).collect()}
-    again = {r["doc_id"] for r in sampling.bernoulli_sample(docs, 0.2).collect()}
-    assert small == again  # rerun-stable (unlike df.sample)
-    assert small <= big  # threshold nesting: growing the rate only adds rows
-    assert 0 < len(small) < len(big) < 500
-
-
 def test_mixture_sample_matches_duckdb(docs):
     """Dataset mixing: per-source keep rates over the shared md5 bucket
     space; unlisted sources dropped; deterministic across re-runs."""
@@ -162,36 +153,6 @@ def test_mixture_upsample_matches_duckdb(docs):
     ]
     assert sorted({e for _, e in two}) == [0, 1]
     assert len(two) == 2 * len(n_src1)
-
-
-def test_stratified_sample_exact_quota(docs):
-    n = 5
-    out = sampling.stratified_sample(docs, ["lang", "source"], n).collect()
-    sizes = {}
-    for r in out:
-        sizes[(r["lang"], r["source"])] = sizes.get((r["lang"], r["source"]), 0) + 1
-    stratum_totals = {
-        (r["lang"], r["source"]): r["n"]
-        for r in docs.groupBy("lang", "source").agg(F.count("*").alias("n")).collect()
-    }
-    assert set(sizes) == set(stratum_totals)
-    for k, got_n in sizes.items():
-        assert got_n == min(n, stratum_totals[k])
-
-
-def test_deterministic_shuffle_matches_duckdb(docs):
-    got = [r["doc_id"] for r in sampling.deterministic_shuffle(docs).limit(10).collect()]
-    want = [
-        int(d)
-        for (d,) in duckdb.sql(
-            f"""
-            SELECT doc_id FROM '{DOCS}'
-            ORDER BY md5('shuffle:' || CAST(doc_id AS VARCHAR)), doc_id
-            LIMIT 10
-            """
-        ).fetchall()
-    ]
-    assert got == want
 
 
 def test_cap_per_domain_salted_matches_plain(docs):
@@ -471,65 +432,6 @@ def test_compact_parquet_synthetic_listing(spark, tmp_path):
     a = {tuple(r) for r in spark.read.parquet(src).collect()}
     b = {tuple(r) for r in spark.read.parquet(dest).collect()}
     assert a == b
-
-
-def test_chunk_documents_matches_duckdb(docs):
-    """r6 sliding-window chunking: window starts, counts, and chunk texts
-    reproduce exactly in DuckDB (closed-form starts over the token array)."""
-    got = {
-        (r["doc_id"], r["chunk_no"], r["n_chunks"], r["chunk_text"],
-         r["n_chunk_tokens"])
-        for r in packing.chunk_documents(docs, max_tokens=40, overlap=8).collect()
-    }
-    want = {
-        (d, c, n, t, k)
-        for d, c, n, t, k in duckdb.sql(f"""
-            WITH toks AS (
-                SELECT doc_id,
-                    regexp_split_to_array(trim(text), '\\s+') AS w
-                FROM read_parquet('{DOCS}')
-            ), sized AS (
-                SELECT doc_id, w,
-                    CAST(1 + ceil(greatest(len(w) - 40, 0) / 32.0) AS INTEGER)
-                        AS n_chunks
-                FROM toks
-            )
-            SELECT doc_id, chunk_no, n_chunks,
-                array_to_string(w[chunk_no * 32 + 1 : chunk_no * 32 + 40], ' ')
-                    AS chunk_text,
-                len(w[chunk_no * 32 + 1 : chunk_no * 32 + 40])
-                    AS n_chunk_tokens
-            FROM sized, unnest(range(0, n_chunks)) AS t(chunk_no)
-        """).fetchall()
-    }
-    assert got == want
-
-
-def test_chunk_documents_invariants(spark):
-    """Coverage + overlap invariants on a synthetic doc: windows tile the
-    token sequence with exactly `overlap` shared tokens, the final window
-    carries the remainder, short docs chunk to themselves."""
-    text = " ".join(f"t{i}" for i in range(100))
-    df = spark.createDataFrame([(1, text), (2, "short doc")], ["doc_id", "text"])
-    out = packing.chunk_documents(df, max_tokens=30, overlap=5)
-    rows = sorted(
-        [r for r in out.collect() if r["doc_id"] == 1],
-        key=lambda r: r["chunk_no"],
-    )
-    # 100 tokens, window 30, step 25 -> 1 + ceil(70/25) = 4 windows
-    assert [r["n_chunks"] for r in rows] == [4, 4, 4, 4]
-    assert [r["n_chunk_tokens"] for r in rows] == [30, 30, 30, 25]
-    toks = text.split()
-    for r in rows:
-        start = r["chunk_no"] * 25
-        assert r["chunk_text"].split() == toks[start:start + 30]
-    # consecutive windows share exactly `overlap` tokens
-    for a, b in zip(rows, rows[1:]):
-        assert a["chunk_text"].split()[-5:] == b["chunk_text"].split()[:5]
-    short = [r for r in out.collect() if r["doc_id"] == 2]
-    assert len(short) == 1 and short[0]["chunk_text"] == "short doc"
-    with pytest.raises(ValueError):
-        packing.chunk_documents(df, max_tokens=10, overlap=10)
 
 
 def test_weighted_sample_matches_python_and_duckdb(spark):

@@ -145,6 +145,60 @@ def test_pinned_weights_reproduce_exactly(spark):
     assert tuple(fit_quality_classifier(df)) == PINNED_WEIGHTS_V1
 
 
+def test_fit_kernel_is_bit_identical_under_other_cpu_dispatch(spark):
+    """The fit's arithmetic does not depend on which SIMD/BLAS kernels the
+    host CPU selects: the Spark-free kernel, rerun in a subprocess with
+    OpenBLAS forced to Haswell and NumPy's AVX-512 loops disabled, returns
+    the same weights bit for bit — and those equal the Spark fit and the
+    pinned constant. (A BLAS matmul, ``np.exp`` or ``np.linalg.solve`` in
+    the fit breaks this on AVX-512 hosts.)"""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from numpy.core._multiarray_umath import __cpu_features__
+
+    from kafka_connector_s3_sink_spark.operators.quality import (
+        PINNED_CORPUS,
+        PINNED_WEIGHTS_V1,
+        fit_irls,
+    )
+
+    df = spark.createDataFrame([Row(text=t) for t, _ in PINNED_CORPUS])
+    feats = [
+        list(r["f"])
+        for r in df.select(quality_features(F.col("text")).alias("f")).collect()
+    ]
+    labels = [y for _, y in PINNED_CORPUS]
+    here = fit_irls(feats, labels)
+    assert tuple(here) == PINNED_WEIGHTS_V1
+
+    avx512 = ["AVX512F", "AVX512CD", "AVX512_SKX", "AVX512_CLX",
+              "AVX512_CNL", "AVX512_ICL"]
+    env = dict(
+        os.environ,
+        OPENBLAS_CORETYPE="Haswell",
+        NPY_DISABLE_CPU_FEATURES=",".join(
+            f for f in avx512 if __cpu_features__.get(f)
+        ),
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from kafka_connector_s3_sink_spark.operators.quality import fit_irls\n"
+        "d = json.load(sys.stdin)\n"
+        "print(json.dumps(fit_irls(d['f'], d['y'])))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=json.dumps({"f": feats, "y": labels}),
+        capture_output=True, text=True, env=env, check=True, timeout=120,
+    )
+    assert json.loads(out.stdout) == here
+
+
 def test_bigram_perplexity_hand_computed(spark):
     """CCNet-style add-k bigram perplexity (r7): hand-checked probabilities
     on a tiny corpus; docs with < 2 tokens have no defined perplexity and

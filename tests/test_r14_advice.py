@@ -1,4 +1,5 @@
-"""r14: the three low ADVICE items from the r13 review, pinned.
+"""r14: the low ADVICE items from the r13 review that still have a subject,
+pinned.
 
 - `assemble_packs` joins documents on the doc-identifying columns implied
   by `pack_key` (batch_id alongside id_col when both frames carry it), so
@@ -7,9 +8,7 @@
   across every epoch's copy;
 - `verify_pack_layout`'s id-col stamp check is scoped to `key_value`, so a
   destination whose epochs were written under different id_col configs can
-  still verify the epoch whose own stamp matches;
-- `ingest_datasheet` raises a ValueError NAMING the missing table for all
-  three table reads (documents and pack_stats, not just metrics).
+  still verify the epoch whose own stamp matches.
 """
 
 import pytest
@@ -155,20 +154,3 @@ def test_stamp_check_scoped_to_verified_epoch(spark, two_epochs):
     # unscoped: mixed stamps cannot verify under one id_col — named error
     with pytest.raises(ValueError, match="id_col"):
         ingest.read_ingest_packs(spark, cfg.dest_dir)
-
-
-def test_datasheet_names_every_missing_table(spark, tmp_path):
-    dest = str(tmp_path / "sheet")
-    # nothing at all: metrics named first
-    with pytest.raises(ValueError, match="metrics"):
-        ingest.ingest_datasheet(spark, dest)
-    spark.createDataFrame(
-        [("e0", 3)], ["batch_id", "n_input"]
-    ).write.parquet(f"{dest}/metrics")
-    with pytest.raises(ValueError, match="documents"):
-        ingest.ingest_datasheet(spark, dest)
-    spark.createDataFrame(
-        [("train", "hello world")], ["split", "text"]
-    ).write.parquet(f"{dest}/documents")
-    with pytest.raises(ValueError, match="pack_stats"):
-        ingest.ingest_datasheet(spark, dest)

@@ -4,17 +4,10 @@ schedule a trainer reads a packed corpus in.
 Pinned properties:
 - global_step is a bijection onto [0, n_packs) every epoch;
 - shard assignment is epoch-stable, visit order is not (fresh permutation
-  per epoch, reproducible across runs);
-- the manifest's per-shard spans are contiguous, disjoint, and cover the
-  step range;
-- resume_filter returns exactly the steps >= the checkpoint, with manifest
-  shard-pruning changing nothing but the plan;
-- write/read round-trip is self-contained (knobs from serving.json, named
-  refusals when absent or out of range).
+  per epoch, reproducible across runs).
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from kafka_connector_s3_sink_spark.operators import packing, serving
 
@@ -56,171 +49,3 @@ def test_shards_stable_epochs_permute(packs):
     assert {
         r["pack_id"]: (r["shard_id"], r["global_step"]) for r in p0b.collect()
     } == a
-
-
-def test_manifest_spans_partition_the_step_range(packs):
-    plan = serving.serving_order(packs, n_shards=8, epoch=0)
-    man = serving.shard_manifest(plan).collect()
-    n = packs.count()
-    spans = sorted((r["step_lo"], r["step_hi"], r["n_packs"]) for r in man)
-    # contiguous within a shard, disjoint between, covering [0, n)
-    cursor = 0
-    for lo, hi, cnt in spans:
-        assert lo == cursor
-        assert hi - lo + 1 == cnt
-        cursor = hi + 1
-    assert cursor == n
-    assert sum(r["n_tokens"] for r in man) == sum(
-        r["pack_tokens"] for r in packs.collect()
-    )
-
-
-def test_resume_filter_with_and_without_manifest(packs):
-    plan = serving.serving_order(packs, n_shards=8, epoch=0)
-    man = serving.shard_manifest(plan)
-    n = packs.count()
-    mid = n // 2
-    plain = serving.resume_filter(plan, mid)
-    pruned = serving.resume_filter(plan, mid, manifest=man)
-    want = set(range(mid, n))
-    assert {r["global_step"] for r in plain.collect()} == want
-    assert {r["global_step"] for r in pruned.collect()} == want
-    # resuming at 0 is the whole epoch
-    assert serving.resume_filter(plan, 0, manifest=man).count() == n
-
-
-def test_write_read_round_trip(spark, layout, packs, tmp_path):
-    dest = str(tmp_path / "corpus")
-    man = serving.write_serving_plan(layout, dest, n_shards=4, epochs=2)
-    assert man.count() <= 8  # epochs × shards, empty shards absent
-    n = packs.count()
-    got = serving.read_serving_plan(spark, dest, epoch=1)
-    assert got.count() == n
-    # persisted plan matches the recomputed order bit-for-bit
-    live = serving.serving_order(packs, n_shards=4, epoch=1)
-    assert {
-        (r["pack_id"], r["shard_id"], r["global_step"])
-        for r in got.collect()
-    } == {
-        (r["pack_id"], r["shard_id"], r["global_step"])
-        for r in live.collect()
-    }
-    # resume through the persisted manifest
-    resumed = serving.read_serving_plan(spark, dest, epoch=1, from_step=n - 5)
-    assert {r["global_step"] for r in resumed.collect()} == set(
-        range(n - 5, n)
-    )
-
-
-def test_preset_ladder_wrapper(spark, layout, tmp_path):
-    """write_corpus_serving_plan schedules one split of a packed-corpus
-    destination under <dest>/serving/<split>/ — coexisting per-split plans,
-    reader scoped the same way."""
-    from kafka_connector_s3_sink_spark import pretraining
-
-    dest = str(tmp_path / "corpus")
-    # a minimal write_packed_corpus-shaped destination: packed table
-    # partitioned by split (verify=False readers don't need stats)
-    train = layout.withColumn("split", F.lit("train"))
-    val = (
-        layout.filter(F.col("pack_id") < 3)
-        .withColumn("split", F.lit("val"))
-        .withColumn("pack_id", F.col("pack_id") + 1_000_000)
-    )
-    train.unionByName(val).write.partitionBy("split").parquet(
-        f"{dest}/packed"
-    )
-    pretraining.write_corpus_serving_plan(spark, dest, n_shards=4, epochs=1)
-    pretraining.write_corpus_serving_plan(
-        spark, dest, n_shards=2, epochs=1, split="val"
-    )
-    got_t = pretraining.read_corpus_serving_plan(spark, dest, epoch=0)
-    got_v = pretraining.read_corpus_serving_plan(
-        spark, dest, epoch=0, split="val"
-    )
-    n_train = layout.select("pack_id").distinct().count()
-    assert sorted(
-        r["global_step"] for r in got_t.collect()
-    ) == list(range(n_train))
-    assert sorted(r["global_step"] for r in got_v.collect()) == [0, 1, 2]
-    with pytest.raises(ValueError, match="no serving plan"):
-        pretraining.read_corpus_serving_plan(
-            spark, dest, epoch=0, split="test"
-        )
-
-
-def test_ingest_ladder_wrapper(spark, tmp_path):
-    """write_ingest_serving_plan schedules the composite (batch, pack)
-    grain across all completed ingest epochs into one plan."""
-    from kafka_connector_s3_sink_spark.operators import incremental
-    from kafka_connector_s3_sink_spark.streaming import ingest
-
-    prefix = "r15srv"
-    loc = str(tmp_path / "index")
-    incremental.build_dedup_index(
-        spark.createDataFrame(
-            [(999_999, "serving probe history seed")], ["doc_id", "text"]
-        ),
-        prefix,
-        loc,
-        num_buckets=2,
-    )
-    try:
-        cfg = ingest.IngestConfig(
-            index_prefix=prefix,
-            index_location=loc,
-            dest_dir=str(tmp_path / "out"),
-            checkpoint_location=str(tmp_path / "ckpt"),
-            num_buckets=2,
-            ctx_len=48,
-            split_weights={"train": 1.0},
-        )
-        stops = ["the", "and", "of", "to", "is"]
-        for epoch in range(2):
-            docs = spark.createDataFrame(
-                [
-                    (
-                        100 * epoch + i,
-                        " ".join(
-                            w
-                            for j in range(10 + i)
-                            for w in (stops[j % 5], f"e{epoch}d{i}w{j}")
-                        ),
-                    )
-                    for i in range(1, 5)
-                ],
-                ["doc_id", "text"],
-            )
-            ingest.process_crawl_batch(docs, epoch, cfg)
-        ingest.write_ingest_serving_plan(spark, cfg.dest_dir, n_shards=2)
-        plan = ingest.read_ingest_serving_plan(spark, cfg.dest_dir, epoch=0)
-        rows = plan.collect()
-        packs = (
-            ingest.read_ingest_packs(spark, cfg.dest_dir, verify=False)
-            .select("batch_id", "pack_id")
-            .distinct()
-            .collect()
-        )
-        assert {r["pack_key"] for r in rows} == {
-            f"{r['batch_id']}#{r['pack_id']}" for r in packs
-        }
-        assert sorted(r["global_step"] for r in rows) == list(
-            range(len(packs))
-        )
-        # both ingest epochs interleave into the one schedule
-        assert len({r["pack_key"].split("#")[0] for r in rows}) == 2
-    finally:
-        incremental.drop_dedup_index(spark, prefix)
-
-
-def test_named_refusals(spark, layout, tmp_path):
-    with pytest.raises(ValueError, match="no serving plan"):
-        serving.read_serving_plan(spark, str(tmp_path / "nowhere"), epoch=0)
-    dest = str(tmp_path / "corpus2")
-    serving.write_serving_plan(layout, dest, n_shards=4, epochs=1)
-    with pytest.raises(ValueError, match="not in the persisted plan"):
-        serving.read_serving_plan(spark, dest, epoch=3)
-    with pytest.raises(ValueError, match="n_shards must be positive"):
-        serving.serving_order(layout.limit(1), n_shards=0)
-    with pytest.raises(ValueError, match="epoch must be"):
-        serving.serving_order(layout.limit(1), n_shards=4, epoch=-1)

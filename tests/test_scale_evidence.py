@@ -46,8 +46,8 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path, sf_dir):
 
 
 def test_partition_pruned_scan(spark, tmp_path, sf_dir):
-    """The native directory-layout sink (write_spark_native's partitionBy
-    scheme) makes topic/event_type predicates PARTITION filters: the scan
+    """A native directory layout (``partitionBy``) makes topic/event_type
+    predicates PARTITION filters: the scan
     plans only the matching directory — at 100 TB a per-topic query reads
     one topic's bytes, not the table's."""
     from kafka_connector_s3_sink_spark.records import read_events
@@ -309,46 +309,6 @@ def test_readback_parse_stays_jvm_with_one_python_boundary(spark, tmp_path):
     # (object_name, offset) projection
     scan = pruned[pruned.index("FileScan parquet"):].split("\n")[0]
     assert "offset" in scan and "value" not in scan
-
-
-def test_chunk_documents_is_shuffle_free_codegen(spark):
-    """r6: sliding-window chunking claims zero shuffles and no Python — the
-    plan is explode+project inside whole-stage codegen over the scan."""
-    from kafka_connector_s3_sink_spark.operators import packing
-
-    df = spark.createDataFrame(
-        [(i, "tok " * 50) for i in range(100)], ["doc_id", "text"]
-    )
-    plan = _plan(packing.chunk_documents(df, max_tokens=16, overlap=4))
-    assert "Exchange" not in plan
-    assert "Python" not in plan and "MapInPandas" not in plan
-    assert "Generate explode" in plan
-
-
-def test_robots_admission_plan_shape(spark):
-    """r6: match_rules is one host equi-join + one aggregation — no
-    cartesian product, no Python, no window over the URL corpus."""
-    from pyspark.sql import Row
-
-    from kafka_connector_s3_sink_spark.operators.robots import (
-        match_rules,
-        parse_robots,
-    )
-
-    rules = parse_robots(spark.createDataFrame(
-        [Row(host=f"h{i}.com",
-             robots_txt="User-agent: *\nDisallow: /private/") for i in range(20)]
-    ))
-    urls = spark.createDataFrame(
-        [Row(url=f"https://h{i % 20}.com/p/{i}") for i in range(200)]
-    )
-    out = match_rules(urls, rules)
-    plan = _plan(out)
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    assert "Python" not in plan
-    # verdict values stay correct at this shape
-    got = out.collect()
-    assert len(got) == 200 and all(r["allowed"] for r in got)
 
 
 def test_bm25_plan_filters_postings_before_scoring(spark):

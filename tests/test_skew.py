@@ -44,34 +44,3 @@ def test_salted_join_matches_plain(spark):
         for r in skew.salted_join(large, small, "k", n_salts=4).collect()
     )
     assert plain == salted
-
-
-def test_key_skew_report_flags_the_hot_key(spark):
-    from kafka_connector_s3_sink_spark.operators.skew import key_skew_report
-
-    rows = [(0, i) for i in range(900)] + [(k, 0) for k in range(1, 101)]
-    df = spark.createDataFrame(rows, "user_id long, v long")
-    rep = key_skew_report(
-        df, ["user_id"], top_n=3, target_rows_per_task=100
-    ).collect()
-    hot = rep[0]
-    assert hot["user_id"] == 0 and hot["key_rows"] == 900
-    assert hot["total_rows"] == 1000 and hot["n_keys"] == 101
-    assert abs(hot["row_share"] - 0.9) < 1e-12
-    # 900 rows vs uniform ~9.9 rows/key -> skew ratio ~90.9
-    assert 90 < hot["skew_ratio"] < 92
-    assert hot["advised_salts"] == 9  # ceil(900/100)
-    # the uniform keys advise no salting
-    assert all(r["advised_salts"] == 1 for r in rep[1:])
-
-
-def test_key_skew_report_plans_bounded_topk(spark):
-    from kafka_connector_s3_sink_spark.operators.skew import key_skew_report
-
-    df = spark.createDataFrame([(i % 7, i) for i in range(100)],
-                               "k long, v long")
-    plan = (
-        key_skew_report(df, ["k"])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan  # no global sort of the counts

@@ -241,48 +241,3 @@ def test_backpressure_bounds_batch_size(spark, tmp_path):
         )
     finally:
         query.stop()
-
-
-def test_checkpoint_introspection(spark, tmp_path):
-    """r6: read_checkpoint_state reads a REAL checkpoint — every drained
-    epoch shows committed with its source offset JSON; the replay frontier
-    is empty after a clean availableNow drain."""
-    from pyspark.sql import Row
-
-    from kafka_connector_s3_sink_spark.streaming.checkpoints import (
-        read_checkpoint_state,
-        replay_frontier,
-    )
-
-    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ck"))
-    spark.createDataFrame([Row(x=1), Row(x=2)]).write.parquet(src)
-    q = (
-        spark.readStream.schema("x long").parquet(src)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    state = read_checkpoint_state(spark, ckpt).collect()
-    assert len(state) >= 1
-    assert all(r["committed"] for r in state)
-    assert all(r["n_sources"] == 1 for r in state)
-    assert all(r["batch_timestamp_ms"] is not None for r in state)
-    assert replay_frontier(spark, ckpt) == []
-    # simulate a crash between offsets-write and commit: batch N+1 planned
-    last = max(r["batch_id"] for r in state)
-    offsets_dir = tmp_path / "ck" / "offsets"
-    src_line = '{"logOffset":99}'
-    (offsets_dir / str(last + 1)).write_text(
-        "v1\n"
-        '{"batchWatermarkMs":0,"batchTimestampMs":1700000000000}\n'
-        + src_line + "\n"
-    )
-    assert replay_frontier(spark, ckpt) == [last + 1]
-    frontier_row = [
-        r for r in read_checkpoint_state(spark, ckpt).collect()
-        if r["batch_id"] == last + 1
-    ][0]
-    assert frontier_row["source_offsets"] == [src_line]

@@ -72,71 +72,6 @@ def _docs_by_epoch(spark, cfg):
     }
 
 
-def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark semantics: first occurrence of each
-    content hash is emitted, duplicates arriving within the horizon are
-    dropped — across micro-batches, from the state store."""
-    import time as _time
-
-    from kafka_connector_s3_sink_spark.operators import dedup
-
-    src = tmp_path / "src"
-    src.mkdir()
-    base = 1_700_000_000
-
-    def emit(name, rows):
-        spark.createDataFrame(
-            [(i, t, __import__("datetime").datetime.fromtimestamp(ts)) for i, t, ts in rows],
-            "doc_id long, text string, ts timestamp",
-        ).coalesce(1).write.parquet(str(src / name))
-
-    emit(
-        "b0",
-        [
-            (1, "alpha beta gamma", base),
-            (2, "alpha beta gamma", base + 10),  # intra-batch dup → dropped
-            (3, "delta epsilon zeta", base + 20),
-        ],
-    )
-    stream = spark.readStream.schema("doc_id long, text string, ts timestamp").parquet(
-        str(src / "*")
-    )
-    out = dedup.streaming_exact_dedup(stream, ts_col="ts", watermark="1 hour")
-    query = (
-        out.writeStream.format("memory")
-        .queryName("sdedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 30
-        while _time.time() < deadline:
-            if {r["doc_id"] for r in spark.sql("SELECT * FROM sdedup_out").collect()} == {1, 3}:
-                break
-            _time.sleep(0.5)
-        # batch 1, still within the horizon: cross-batch dup dropped via state
-        emit("b1", [(4, "alpha beta gamma", base + 60), (5, "eta theta iota", base + 70)])
-        deadline = _time.time() + 30
-        got = set()
-        while _time.time() < deadline:
-            got = {r["doc_id"] for r in spark.sql("SELECT * FROM sdedup_out").collect()}
-            if 5 in got:
-                break
-            _time.sleep(0.5)
-    finally:
-        query.stop()
-    assert got == {1, 3, 5}, f"expected cross-batch dup 4 dropped, got {got}"
-
-    # batch path: same function, same semantics, no watermark needed
-    batch = spark.createDataFrame(
-        [(1, "x y z"), (2, "x y z"), (3, "p q r")], ["doc_id", "text"]
-    ).withColumn("ts", F.current_timestamp())
-    kept = {r["doc_id"] for r in dedup.streaming_exact_dedup(batch).collect()}
-    assert len(kept) == 2 and 3 in kept
-
-
 def test_cold_start_empty_index(spark, tmp_path):
     """start_ingest_pipeline's documented cold start: an index built over an
     EMPTY frame classifies everything in the first batch as keep."""

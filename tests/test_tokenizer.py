@@ -101,15 +101,6 @@ def test_encode_plan_has_no_shuffle(tiny_docs):
     assert "Exchange" not in plan
 
 
-def test_token_length_stats(tiny_docs):
-    wf = tok.word_frequencies(tiny_docs)
-    merges = tok.fit_bpe(wf, n_merges=4)
-    enc = tok.bpe_encode(tiny_docs, merges)
-    s = tok.token_length_stats(enc).collect()[0]
-    assert s["n_docs"] == 1 and s["total_tokens"] == s["avg_tokens"]
-    assert s["fertility"] > 1.0  # subword tokenization always >= 1 token/word
-
-
 def test_merge_table_round_trips_through_storage(tiny_docs, tmp_path):
     wf = tok.word_frequencies(tiny_docs)
     merges = tok.fit_bpe(wf, n_merges=10)

@@ -360,46 +360,6 @@ def test_enrich_crawl_documents(spark, tmp_path):
     assert "Exchange" not in plan  # enrichment fuses into the parse stage
 
 
-def test_compact_warc_store(spark, tmp_path):
-    """Many tiny archives fold into ceil(n/target) right-sized ones; every
-    response round-trips byte-identically; warcinfo/request records drop
-    and each output archive leads with a fresh warcinfo."""
-    from kafka_connector_s3_sink_spark.sources.warc import compact_warc_store
-
-    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
-    import os
-    os.makedirs(src)
-    for i in range(7):  # 7 archives x 3 records
-        recs = [build_record("warcinfo", b"fetcher: %d\r\n" % i)] + [
-            build_record(
-                "response",
-                build_http_response_payload(b"<p>%d-%d</p>" % (i, j)),
-                target_uri=f"https://c/{i}/{j}",
-            )
-            for j in range(3)
-        ]
-        (tmp_path / "src" / f"f-{i}.warc.gz").write_bytes(
-            b"".join(gzip.compress(r, mtime=0) for r in recs)
-        )
-    written = compact_warc_store(
-        spark, src, dest, target_records_per_archive=8
-    )
-    # 21 responses / 8 per archive -> 3 output archives
-    assert len(written) == 3
-    back = read_warc(spark, dest)
-    resp = back.filter(F.col("warc_type") == "response").collect()
-    assert len(resp) == 21
-    assert {r["target_uri"] for r in resp} == {
-        f"https://c/{i}/{j}" for i in range(7) for j in range(3)
-    }
-    for r in resp:
-        _, i, j = r["target_uri"].rsplit("/", 2)[-3:][0], *r["target_uri"].rsplit("/", 2)[-2:]
-        assert bytes(r["payload"]) == f"<p>{i}-{j}</p>".encode()
-    infos = back.filter(F.col("warc_type") == "warcinfo").collect()
-    assert len(infos) == 3  # fresh warcinfo per output archive, old ones gone
-    assert all(b"compaction" in bytes(i["payload"]) for i in infos)
-
-
 def test_warc_sql_view(warc_registered, spark, tmp_path):
     """The warc format is SQL-reachable: CREATE TEMPORARY VIEW ... USING
     warc, queried with plain SQL over record columns."""
@@ -452,43 +412,6 @@ def test_bare_lf_header_with_crlfcrlf_in_payload():
         b"HTTP/1.1 200 OK\nContent-Type: text/plain\n\n" + body
     )
     assert status == 200 and ctype == "text/plain" and got_body == body
-
-
-def test_compact_warc_store_mixed_types_sized_per_subset(spark, tmp_path):
-    """A mixed response+conversion store sizes each output set off ITS OWN
-    record count (r7 advice fix): 10 responses + 2 conversions at
-    target=6 -> 2 response archives + 1 WET archive, not 2+2 half-filled."""
-    from kafka_connector_s3_sink_spark.sources.warc import compact_warc_store
-
-    import os
-    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
-    os.makedirs(src)
-    resp = [
-        build_record(
-            "response",
-            build_http_response_payload(b"<p>r%d</p>" % i),
-            target_uri=f"https://m/{i}",
-        )
-        for i in range(10)
-    ]
-    conv = [
-        build_record(
-            "conversion", b"wet %d" % i,
-            target_uri=f"https://m/wet/{i}", content_type="text/plain",
-        )
-        for i in range(2)
-    ]
-    (tmp_path / "src" / "mixed.warc.gz").write_bytes(
-        b"".join(gzip.compress(r, mtime=0) for r in resp + conv)
-    )
-    written = compact_warc_store(spark, src, dest, target_records_per_archive=6)
-    wet = [w for w in written if "compact-wet" in w]
-    warc = [w for w in written if "compact-wet" not in w]
-    assert len(warc) == 2  # ceil(10/6)
-    assert len(wet) == 1   # ceil(2/6)
-    back = read_warc(spark, dest)
-    assert back.filter(F.col("warc_type") == "response").count() == 10
-    assert back.filter(F.col("warc_type") == "conversion").count() == 2
 
 
 def _members(n=5):

@@ -373,61 +373,6 @@ def test_timestamp_grouping_respects_timezone(spark, tmp_path):
     assert written == [("t-0-7-2024-03-02", 1)]
 
 
-def test_write_spark_native_directory_layout(spark, tmp_path):
-    """The 100% JVM alternative writer: partitionBy(topic, partition) directory
-    scheme, native compression, rendered CSV lines as text files."""
-    rows = [
-        Row(topic="t", partition=p, offset=p * 10 + i, key=f"k{i}", value=f"v-{p}-{i}",
-            timestamp=None, headers=None)
-        for p in (0, 1) for i in range(3)
-    ]
-    from kafka_connector_s3_sink_spark.sinks.writer import write_spark_native
-
-    cfg = EngineConfig(
-        value_encoding=FieldEncoding.NONE, file_compression=CompressionType.GZIP
-    )
-    dest = tmp_path / "native"
-    write_spark_native(records_df(spark, rows), cfg, str(dest))
-    out = (
-        spark.read.option("compression", "gzip")
-        .text(f"{dest}/topic=t/partition=0")
-        .collect()
-    )
-    assert sorted(r.value for r in out) == ["v-0-0", "v-0-1", "v-0-2"]
-    # partition dirs exist for both kafka partitions
-    assert (dest / "topic=t" / "partition=1").exists()
-
-
-def test_write_spark_native_max_records_applies_to_text(spark, tmp_path):
-    """file.max.records must bound TEXT directory-layout files too, not just
-    parquet — the writer previously rebuilt the text chain without
-    maxRecordsPerFile, silently dropping the cap."""
-    rows = [
-        Row(topic="t", partition=0, offset=i, key=None, value=f"v{i}",
-            timestamp=None, headers=None)
-        for i in range(10)
-    ]
-    from kafka_connector_s3_sink_spark.sinks.writer import write_spark_native
-
-    cfg = EngineConfig(
-        value_encoding=FieldEncoding.NONE,
-        file_compression=CompressionType.NONE,
-        file_max_records=3,
-    )
-    dest = tmp_path / "native_capped"
-    write_spark_native(
-        records_df(spark, rows).repartition(1), cfg, str(dest)
-    )
-    part_dir = dest / "topic=t" / "partition=0"
-    data_files = [p for p in part_dir.iterdir() if p.name.startswith("part-")]
-    # 10 records / cap 3 → at least 4 files, none exceeding the cap
-    assert len(data_files) >= 4
-    for p in data_files:
-        assert len(p.read_text().splitlines()) <= 3
-    out = spark.read.text(str(part_dir)).collect()
-    assert sorted(r.value for r in out) == sorted(f"v{i}" for i in range(10))
-
-
 def test_sidecar_manifest_mode(spark, tmp_path):
     """manifest='sidecar': per-object entries land in dest/_manifest/*.jsonl
     written by the writer tasks themselves; the driver gets nothing back —
