@@ -133,6 +133,37 @@ BRANCH_TAGS = {
 }
 
 
+def _session(app_name: str):
+    """The bench's Spark session: local[$SPARK_GRAFT_CPUS], AQE on, UTC."""
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master(f"local[{CPUS}]")
+        .appName(app_name)
+        .config("spark.sql.shuffle.partitions", CPUS)
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .config("spark.driver.memory", "16g")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _cold_and_warm(run, release=lambda: None) -> tuple[float, float]:
+    """(cold seconds, median of three warm seconds) of ``run()``: one cold
+    pass, then three timed warm passes. ``release`` runs after every pass,
+    outside the timed region."""
+    passes = []
+    for _ in range(4):
+        t0 = time.time()
+        run()
+        passes.append(time.time() - t0)
+        release()
+    return passes[0], sorted(passes[1:])[1]
+
+
 def check_mode() -> int:
     """``bench.py --check``: re-run the 5 most expensive committed entries
     and warn when a median disagrees >2x with BENCH_LAST.json — the round's
@@ -140,8 +171,6 @@ def check_mode() -> int:
     two same-day runs on a shared sandbox disagreed 17% on totals with
     per-query swings to 2.5x; a >2x delta means either a quiet-machine
     violation or a real regression, and both deserve a second look)."""
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
 
     here = os.path.dirname(os.path.abspath(__file__))
@@ -152,39 +181,24 @@ def check_mode() -> int:
         ((t, n) for n, t in committed["queries"].items() if n in qs),
         reverse=True,
     )[:5]
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bench-check")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("bench-check")
     disagreements = []
+
+    def compare(label: str, committed_t: float, now: float) -> None:
+        ratio = max(now, committed_t) / max(min(now, committed_t), 1e-9)
+        flag = "DISAGREES" if ratio > 2.0 else "ok"
+        print(
+            f"{flag:9s} {label}: committed {committed_t:.2f}s, "
+            f"re-measured {now:.2f}s ({ratio:.2f}x)"
+        )
+        if ratio > 2.0:
+            disagreements.append(label)
+
     for committed_t, name in top:
         run = lambda: qs[name](spark, SF_DIR).write.format("noop").mode(
             "overwrite"
         ).save()
-        run()  # cold
-        entrymod.release_caches()
-        warm = []
-        for _ in range(3):
-            t1 = time.time()
-            run()
-            warm.append(time.time() - t1)
-            entrymod.release_caches()
-        now = sorted(warm)[1]
-        ratio = max(now, committed_t) / max(min(now, committed_t), 1e-9)
-        flag = "DISAGREES" if ratio > 2.0 else "ok"
-        print(
-            f"{flag:9s} {name}: committed {committed_t:.2f}s, "
-            f"re-measured {now:.2f}s ({ratio:.2f}x)"
-        )
-        if ratio > 2.0:
-            disagreements.append(name)
+        compare(name, committed_t, _cold_and_warm(run, entrymod.release_caches)[1])
     # also re-validate the top committed BRANCHES of the decomposed entries
     # (r8): the branch numbers are the per-operator regression signal, so
     # they deserve the same self-validation as the entry totals.
@@ -209,21 +223,7 @@ def check_mode() -> int:
             run = lambda: df.filter(F.col(tag) == br).write.format(
                 "noop"
             ).mode("overwrite").save()
-            run()
-            warm = []
-            for _ in range(3):
-                t1 = time.time()
-                run()
-                warm.append(time.time() - t1)
-            now = sorted(warm)[1]
-            ratio = max(now, committed_t) / max(min(now, committed_t), 1e-9)
-            flag = "DISAGREES" if ratio > 2.0 else "ok"
-            print(
-                f"{flag:9s} {entry}[{br}]: committed {committed_t:.2f}s, "
-                f"re-measured {now:.2f}s ({ratio:.2f}x)"
-            )
-            if ratio > 2.0:
-                disagreements.append(f"{entry}[{br}]")
+            compare(f"{entry}[{br}]", committed_t, _cold_and_warm(run)[1])
         entrymod.release_caches()
     if disagreements:
         print(
@@ -237,24 +237,12 @@ def check_mode() -> int:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
     from kafka_connector_s3_sink_spark.config import EngineConfig
     from kafka_connector_s3_sink_spark.records import kafka_records_from_events
     from kafka_connector_s3_sink_spark.sinks.writer import write_batch
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("kafka-connector-s3-sink-spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = _session("kafka-connector-s3-sink-spark-bench")
 
     # JVM warmup (codegen compile, parquet footer cache) so per-query numbers
     # measure the operators, not first-query session startup
@@ -274,17 +262,9 @@ def main() -> None:
     cold: dict[str, float] = {}
 
     def timed(name, run) -> None:
-        t0 = time.time()
-        run()
-        cold[name] = round(time.time() - t0, 3)
-        entrymod.release_caches()
-        warm = []
-        for _ in range(3):
-            t1 = time.time()
-            run()
-            warm.append(time.time() - t1)
-            entrymod.release_caches()
-        timings[name] = round(sorted(warm)[1], 3)
+        cold[name], timings[name] = (
+            round(t, 3) for t in _cold_and_warm(run, entrymod.release_caches)
+        )
 
     for name in BENCH_QUERIES:
         fn = qs[name]
@@ -316,13 +296,9 @@ def main() -> None:
                 .mode("overwrite")
                 .save()
             )
-            run()  # cold: codegen + first materialization of shared persists
-            warm = []
-            for _ in range(3):
-                t1 = time.time()
-                run()
-                warm.append(time.time() - t1)
-            branches[name][v] = round(sorted(warm)[1], 3)
+            # the cold pass pays codegen + first materialization of shared
+            # persists; caches are released once per entry, after its branches
+            branches[name][v] = round(_cold_and_warm(run)[1], 3)
         entrymod.release_caches()
 
     # end-to-end sink writes (exact object names) to local objects

@@ -497,7 +497,15 @@ class EngineConfig:
 
     def spark_hadoop_conf(self) -> dict[str, str]:
         """Map transport knobs onto hadoop-s3a settings (SURVEY.md §2.5: multipart,
-        retry, endpoint, credentials are s3a's job, not ours)."""
+        retry, endpoint, credentials are s3a's job, not ours).
+
+        These settings reach only Spark's own S3 reads, once the caller applies
+        them to the session (``spark.hadoop.*`` configs): the binaryFile scan and
+        the native parquet/ORC scan of ``sources.objects.read_sink_objects``. The
+        object writer never reads them: it writes through ``pyarrow.fs``
+        (``sinks.storage.ObjectStorage``), which takes region and endpoint from
+        the destination URI's query string and credentials from the AWS
+        environment, with pyarrow's own multipart and retry defaults."""
         conf: dict[str, str] = {
             "fs.s3a.multipart.size": str(self.part_size_bytes),
             "fs.s3a.retry.limit": str(self.backoff_max_retries),

@@ -1,3 +1,3 @@
-from kafka_connector_s3_sink_spark.functions.numeric import stable_round, stable_round_sql
+from kafka_connector_s3_sink_spark.functions.numeric import stable_round
 
-__all__ = ["stable_round", "stable_round_sql"]
+__all__ = ["stable_round"]

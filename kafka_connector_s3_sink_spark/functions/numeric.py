@@ -21,8 +21,3 @@ from pyspark.sql import functions as F
 def stable_round(col: Column, digits: int) -> Column:
     scale = float(10**digits)
     return F.floor(col * scale + F.lit(0.5)) / scale
-
-
-def stable_round_sql(expr: str, digits: int) -> str:
-    scale = float(10**digits)
-    return f"floor(({expr}) * {scale} + 0.5) / {scale}"

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark import StorageLevel
@@ -22,7 +22,7 @@ from kafka_connector_s3_sink_spark.operators.text import normalized_text, tokens
 from kafka_connector_s3_sink_spark.functions.numeric import stable_round
 
 
-def _materialize(df: DataFrame) -> DataFrame:
+def _materialize(df: DataFrame, unpersist_registry: list | None = None) -> DataFrame:
     """Persist an intermediate reused by several plan branches (self-join
     sides, frequency maps, size tables).
 
@@ -32,8 +32,14 @@ def _materialize(df: DataFrame) -> DataFrame:
     scans in one Jaccard plan). The persisted tables are the *reduced*
     intermediates (doc_id + hash rows, far smaller than the text corpus), the
     canonical LSH-pipeline materialization point at any scale;
-    MEMORY_AND_DISK spills instead of failing on big executors."""
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
+    MEMORY_AND_DISK spills instead of failing on big executors.
+
+    ``unpersist_registry`` (a list), when given, collects the persisted frame
+    so the caller can release it once the result is materialized."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if unpersist_registry is not None:
+        unpersist_registry.append(df)
+    return df
 
 # -- deterministic duplicate synthesis (for correctness fixtures) ---------
 
@@ -83,19 +89,6 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
 
 # -- shingles -------------------------------------------------------------
-
-
-def shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word-k-gram md5 shingles of the normalized text (array column).
-
-    Stays JVM-side: sequence + transform + slice, no explode until the caller
-    decides (exploding is the scalable path for the candidate join).
-    """
-    toks = tokens_column(normalized_text(text))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, k))))
-    return F.array_distinct(grams)
 
 
 def shingle_rows(
@@ -264,10 +257,7 @@ def minhash_bands(
                 "whatever frame YOU materialize from the result instead)"
             )
         return out
-    out = _materialize(out)
-    if unpersist_registry is not None:
-        unpersist_registry.append(out)
-    return out
+    return _materialize(out, unpersist_registry)
 
 
 def minhash_lsh_pairs(
@@ -333,6 +323,32 @@ def minhash_lsh_pairs(
     )
 
 
+def _containment_matches(
+    c_sh: DataFrame, b_sh: DataFrame, min_overlap_ratio: float
+) -> DataFrame:
+    """The exact decontamination kernel (``decontamination_matches`` and
+    ``incremental.decontaminate_against_index``): corpus (corpus_id,
+    shingle) ⋈ benchmark (bench_id, shingle) on the shingle, n_overlap and
+    overlap_ratio per pair. Pass ``b_sh`` wrapped in ``F.broadcast`` to keep
+    the corpus side from shuffling."""
+    b_sizes = b_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    return (
+        c_sh.join(b_sh, "shingle")
+        .groupBy("corpus_id", "bench_id")
+        .agg(F.count(F.lit(1)).alias("n_overlap"))
+        .join(b_sizes, "bench_id")
+        .select(
+            "corpus_id",
+            "bench_id",
+            "n_overlap",
+            stable_round(F.col("n_overlap") / F.col("n_sh"), 4).alias(
+                "overlap_ratio"
+            ),
+        )
+        .filter(F.col("overlap_ratio") >= min_overlap_ratio)
+    )
+
+
 def decontamination_matches(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -352,38 +368,90 @@ def decontamination_matches(
 
     Plan shape: both sides explode to distinct (doc, shingle) rows
     (Generate — no shuffle), equi-join on the shingle hash, aggregate per
-    pair. The benchmark set is small by definition (evaluation suites are
-    thousands of documents against a 100 TB corpus), so AQE broadcasts its
-    shingle side and the corpus side never shuffles for the join; output is
+    pair (``_containment_matches``). The benchmark set is small by
+    definition (evaluation suites are thousands of documents against a
+    100 TB corpus), so AQE broadcasts its shingle side; output is
     O(shared-shingle pairs), never all-pairs. At production scale use a
     LARGER ``k`` (8-13-grams are customary for decontamination) — common
     3-grams collide on boilerplate and inflate the candidate set the same
     way hot LSH bands do."""
     b_sh = _materialize(
-        shingle_rows(benchmark, id_col, text_col, k).select(
-            F.col("doc_id").alias("bench_id"), "shingle"
-        )
+        shingle_rows(benchmark, id_col, text_col, k).withColumnRenamed(
+            "doc_id", "bench_id"
+        ),
+        unpersist_registry,
     )
-    if unpersist_registry is not None:
-        unpersist_registry.append(b_sh)
-    b_sizes = b_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    c_sh = shingle_rows(corpus, id_col, text_col, k).select(
-        F.col("doc_id").alias("corpus_id"), "shingle"
+    c_sh = shingle_rows(corpus, id_col, text_col, k)
+    return _containment_matches(
+        c_sh.withColumnRenamed("doc_id", "corpus_id"), b_sh, min_overlap_ratio
+    )
+
+
+def _benchmark_fingerprints(
+    benchmark: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    band_size: int,
+    k: int,
+    unpersist_registry: list | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The benchmark's persisted (bench_id, band_id, band_hash) bands and
+    (bench_id, shingle) rows — the near kernel's benchmark side."""
+    # materialize=False: the renamed frame is the one persisted
+    bands = minhash_bands(
+        benchmark, id_col, text_col, num_hashes, band_size, k, materialize=False
+    )
+    sh = shingle_rows(benchmark, id_col, text_col, k)
+    return tuple(
+        _materialize(f.withColumnRenamed("doc_id", "bench_id"), unpersist_registry)
+        for f in (bands, sh)
+    )
+
+
+def _band_jaccard_matches(
+    c_bands: DataFrame,
+    b_bands: DataFrame,
+    c_sh: DataFrame,
+    b_sh: DataFrame,
+    jaccard_threshold: float,
+    unpersist_registry: list | None,
+) -> DataFrame:
+    """The near decontamination kernel (``near_decontamination_matches`` and
+    ``incremental.near_decontaminate_against_index``): band candidates of
+    corpus (corpus_id, …) × benchmark (bench_id, …), persisted, then exact
+    n-gram Jaccard over the shingle rows. The corpus shingles are cut to
+    the candidates by a broadcast join on their distinct ids — bounded by
+    the benchmark, so the corpus side streams instead of shuffling. Pass
+    ``b_bands``/``b_sh`` wrapped in ``F.broadcast`` to keep every corpus-side
+    join shuffle-free."""
+    cands = _materialize(
+        c_bands.join(b_bands, ["band_id", "band_hash"])
+        .select("corpus_id", "bench_id")
+        .distinct(),
+        unpersist_registry,
+    )
+    b_sizes = b_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("n_b"))
+    flagged = c_sh.join(
+        F.broadcast(cands.select("corpus_id").distinct()), "corpus_id"
+    )
+    c_sizes = flagged.groupBy("corpus_id").agg(F.count(F.lit(1)).alias("n_c"))
+    inter = (
+        flagged.join(b_sh, "shingle")
+        .groupBy("corpus_id", "bench_id")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+        # verified pairs must also be BAND candidates: the shingle join alone
+        # would resurrect pairs the banding rejected (that's the exact pass)
+        .join(cands, ["corpus_id", "bench_id"])
+    )
+    jac = stable_round(
+        F.col("n_inter") / (F.col("n_c") + F.col("n_b") - F.col("n_inter")), 4
     )
     return (
-        c_sh.join(b_sh, "shingle")
-        .groupBy("corpus_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .join(b_sizes, "bench_id")
-        .select(
-            "corpus_id",
-            "bench_id",
-            "n_overlap",
-            stable_round(F.col("n_overlap") / F.col("n_sh"), 4).alias(
-                "overlap_ratio"
-            ),
-        )
-        .filter(F.col("overlap_ratio") >= min_overlap_ratio)
+        inter.join(b_sizes, "bench_id")
+        .join(c_sizes, "corpus_id")
+        .select("corpus_id", "bench_id", "n_inter", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= jaccard_threshold)
     )
 
 
@@ -409,63 +477,31 @@ def near_decontamination_matches(
     unlike the containment ratio of the exact pass), filtered at
     ``jaccard_threshold``.
 
-    Plan shape: the benchmark side is small by definition (eval suites), so
-    its band AND shingle tables persist once and broadcast (AQE); the
-    corpus computes signatures in one shingle-shuffle (``minhash_bands``),
-    candidates come from the band equi-join (never all-pairs), and the
-    verify re-shingles ONLY corpus docs that banded with some benchmark doc
-    (a semi-join-shaped inner on the distinct candidate ids — at 100 TB the
-    candidate set is a vanishing fraction of the corpus). For the
-    corpus-side-indexed form see
+    Plan shape (``_band_jaccard_matches``): the benchmark side is small by
+    definition (eval suites), so its band AND shingle tables persist once
+    and broadcast (AQE); the corpus computes signatures in one
+    shingle-shuffle (``minhash_bands``), candidates come from the band
+    equi-join (never all-pairs), and the verify keeps ONLY the shingles of
+    corpus docs that banded with some benchmark doc (a broadcast join on
+    the distinct candidate ids — at 100 TB the candidate set is a vanishing
+    fraction of the corpus). For the corpus-side-indexed form see
     ``incremental.near_decontaminate_against_index``, which reads the
     persisted band/shingle tables instead of re-fingerprinting."""
-    bands_b = _materialize(
-        # materialize=False: the rename below is the single consumer and is
-        # persisted here — persisting inside minhash_bands too would cache the
-        # same eval-sized band table twice per call
-        minhash_bands(
-            benchmark, id_col, text_col, num_hashes, band_size, k,
-            materialize=False,
-        ).select(F.col("doc_id").alias("bench_id"), "band_id", "band_hash")
+    b_bands, b_sh = _benchmark_fingerprints(
+        benchmark, id_col, text_col, num_hashes, band_size, k, unpersist_registry
     )
-    bands_c = minhash_bands(
+    c_bands = minhash_bands(
         corpus, id_col, text_col, num_hashes, band_size, k,
         unpersist_registry=unpersist_registry,
     )
-    cands = _materialize(
-        bands_c.join(bands_b, ["band_id", "band_hash"])
-        .select(F.col("doc_id").alias("corpus_id"), "bench_id")
-        .distinct()
-    )
-    b_sh = _materialize(
-        shingle_rows(benchmark, id_col, text_col, k).select(
-            F.col("doc_id").alias("bench_id"), "shingle"
-        )
-    )
-    if unpersist_registry is not None:
-        unpersist_registry.extend([bands_b, cands, b_sh])
-    b_sizes = b_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("n_b"))
-    c_sh = shingle_rows(corpus, id_col, text_col, k).select(
-        F.col("doc_id").alias("corpus_id"), "shingle"
-    )
-    flagged = c_sh.join(cands.select("corpus_id").distinct(), "corpus_id")
-    c_sizes = flagged.groupBy("corpus_id").agg(F.count(F.lit(1)).alias("n_c"))
-    inter = (
-        flagged.join(b_sh, "shingle")
-        .groupBy("corpus_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        # verified pairs must also be BAND candidates: the shingle join alone
-        # would resurrect pairs the banding rejected (that's the exact pass)
-        .join(cands, ["corpus_id", "bench_id"])
-    )
-    jac = stable_round(
-        F.col("n_inter") / (F.col("n_c") + F.col("n_b") - F.col("n_inter")), 4
-    )
-    return (
-        inter.join(b_sizes, "bench_id")
-        .join(c_sizes, "corpus_id")
-        .select("corpus_id", "bench_id", "n_inter", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
+    c_sh = shingle_rows(corpus, id_col, text_col, k)
+    return _band_jaccard_matches(
+        c_bands.withColumnRenamed("doc_id", "corpus_id"),
+        b_bands,
+        c_sh.withColumnRenamed("doc_id", "corpus_id"),
+        b_sh,
+        jaccard_threshold,
+        unpersist_registry,
     )
 
 
@@ -517,6 +553,55 @@ def embedding_band_signatures(
     )
 
 
+def _vectors(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, out_vec: str
+) -> DataFrame:
+    """(out_id, out_vec) — a document set's embeddings as array<double>."""
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.col(vec_col).cast("array<double>").alias(out_vec),
+    )
+
+
+def _cosine_matches(
+    c_sig: DataFrame,
+    c_vec: DataFrame,
+    b_sig: DataFrame,
+    b_vec: DataFrame,
+    cosine_threshold: float,
+    unpersist_registry: list | None,
+) -> DataFrame:
+    """The semantic decontamination kernel
+    (``semantic_decontamination_matches`` and
+    ``incremental.semantic_decontaminate_against_index``): (band, bucket)
+    candidates of corpus (corpus_id, …) × benchmark (bench_id, …),
+    persisted, then the exact cosine of ``c_vec`` (corpus_id, cvec) and
+    ``b_vec`` (bench_id, bvec). Both callers broadcast the benchmark frames;
+    the corpus vectors are cut to the candidate ids (broadcast, as in
+    ``_band_jaccard_matches``) before their norms are computed."""
+    from kafka_connector_s3_sink_spark.operators.similarity import dot, l2norm
+
+    cands = _materialize(
+        c_sig.join(b_sig, ["band", "bucket"])
+        .select("corpus_id", "bench_id")
+        .distinct(),
+        unpersist_registry,
+    )
+    c_vec = c_vec.join(
+        F.broadcast(cands.select("corpus_id").distinct()), "corpus_id"
+    ).withColumn("cnorm", l2norm(F.col("cvec")))
+    b_vec = b_vec.withColumn("bnorm", l2norm(F.col("bvec")))
+    cos = stable_round(
+        dot(F.col("cvec"), F.col("bvec")) / (F.col("cnorm") * F.col("bnorm")), 4
+    )
+    return (
+        cands.join(c_vec, "corpus_id")
+        .join(b_vec, "bench_id")
+        .select("corpus_id", "bench_id", cos.alias("cosine"))
+        .filter(F.col("cosine") >= cosine_threshold)
+    )
+
+
 def semantic_decontamination_matches(
     corpus_emb: DataFrame,
     benchmark_emb: DataFrame,
@@ -550,41 +635,19 @@ def semantic_decontamination_matches(
     all-pairs, nothing is corpus²; work scales with |corpus| × n_bands +
     |candidates| × dim. Same hyperplane construction as similarity.lsh_topk
     (md5-derived, engine-portable)."""
-    from kafka_connector_s3_sink_spark.operators.similarity import (
-        dot,
-        l2norm,
-    )
 
     def signatures(df: DataFrame, out_id: str) -> DataFrame:
         return embedding_band_signatures(
             df, id_col, vec_col, dim, n_bands, band_planes, out_id=out_id
         )
 
-    bench_sig = signatures(benchmark_emb, "bench_id")
-    cands = _materialize(
-        signatures(corpus_emb, "corpus_id")
-        .join(F.broadcast(bench_sig), ["band", "bucket"])
-        .select("corpus_id", "bench_id")
-        .distinct()
-    )
-    if unpersist_registry is not None:
-        unpersist_registry.append(cands)
-    c_vec = corpus_emb.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    ).withColumn("cnorm", l2norm(F.col("cvec")))
-    b_vec = benchmark_emb.select(
-        F.col(id_col).alias("bench_id"),
-        F.col(vec_col).cast("array<double>").alias("bvec"),
-    ).withColumn("bnorm", l2norm(F.col("bvec")))
-    cos = stable_round(
-        dot(F.col("cvec"), F.col("bvec")) / (F.col("cnorm") * F.col("bnorm")), 4
-    )
-    return (
-        cands.join(c_vec, "corpus_id")
-        .join(F.broadcast(b_vec), "bench_id")
-        .select("corpus_id", "bench_id", cos.alias("cosine"))
-        .filter(F.col("cosine") >= cosine_threshold)
+    return _cosine_matches(
+        signatures(corpus_emb, "corpus_id"),
+        _vectors(corpus_emb, id_col, vec_col, "corpus_id", "cvec"),
+        F.broadcast(signatures(benchmark_emb, "bench_id")),
+        F.broadcast(_vectors(benchmark_emb, id_col, vec_col, "bench_id", "bvec")),
+        cosine_threshold,
+        unpersist_registry,
     )
 
 
@@ -616,10 +679,9 @@ def jaccard_verify(
     sh = _materialize(
         shingle_rows(
             docs.join(ids, docs[id_col] == ids.vid, "left_semi"), id_col, text_col, k
-        )
+        ),
+        unpersist_registry,
     )
-    if unpersist_registry is not None:
-        unpersist_registry.append(sh)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     s1 = sh.select(F.col(id_col).alias("id1"), F.col("shingle").alias("sh1"))
     s2 = sh.select(F.col(id_col).alias("_rid2"), F.col("shingle").alias("sh2"))
@@ -705,10 +767,9 @@ def dedup_cascade_artifacts(
             survivors, id_col, text_col, num_hashes, band_size, k,
             max_band_df=max_band_df,
             unpersist_registry=unpersist_registry,
-        )
+        ),
+        unpersist_registry,
     )
-    if unpersist_registry is not None:
-        unpersist_registry.append(candidates)
     verified = jaccard_verify(
         candidates, survivors, id_col, text_col, k,
         unpersist_registry=unpersist_registry,
@@ -1238,9 +1299,7 @@ def duplicate_spans(
     # single window group that one task must buffer, while the groupBy
     # combines it map-side to one row per partition and the semi join
     # streams it (build side is one row per hash).
-    grams = _materialize(grams)
-    if unpersist_registry is not None:
-        unpersist_registry.append(grams)
+    grams = _materialize(grams, unpersist_registry)
     repeated = (
         grams.groupBy("h")
         .agg(F.count(F.lit(1)).alias("_n"))

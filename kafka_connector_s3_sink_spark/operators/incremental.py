@@ -98,6 +98,15 @@ def _ensure_database(spark: SparkSession, database: str | None) -> None:
         spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
 
 
+def _corpus_side(
+    spark: SparkSession, prefix: str, name: str, database: str | None
+) -> DataFrame:
+    """One index table as the corpus side of a ``dedup`` decontamination
+    kernel: ``doc_id`` renamed to ``corpus_id``."""
+    table = spark.table(_qualified(prefix, name, database))
+    return table.withColumnRenamed("doc_id", "corpus_id")
+
+
 def _fingerprints(
     df: DataFrame,
     id_col: str,
@@ -530,7 +539,9 @@ def decontaminate_against_index(
     broadcast only after both shuffle stages exist), which is exactly the
     cost this operator exists to avoid. The static broadcast makes the
     index a straight scan→join with no Exchange below it (plan-asserted);
-    only the O(matches) overlap rows move for the pair aggregation.
+    only the O(matches) overlap rows move for the pair aggregation. The
+    join/aggregate is the batch form's kernel (``dedup._containment_matches``)
+    over the index's shingle rows.
 
     Contract: the BENCHMARK must be broadcast-small (eval suites — docs in
     the thousands). For corpus-vs-corpus overlap use
@@ -540,27 +551,12 @@ def decontaminate_against_index(
 
     Run it when a new eval suite lands: the flagged ``hist_id``s are the
     training documents to quarantine before the next training snapshot."""
-    spark = benchmark.sparkSession
-    b_sh = shingle_rows(benchmark, id_col, text_col, k).select(
-        F.col("doc_id").alias("bench_id"), "shingle"
-    )
-    b_sizes = b_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    idx_sh = spark.table(_qualified(prefix, "shingles", database))
-    return (
-        idx_sh.join(F.broadcast(b_sh), "shingle")
-        .groupBy(F.col("doc_id").alias("hist_id"), "bench_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .join(b_sizes, "bench_id")
-        .select(
-            "hist_id",
-            "bench_id",
-            "n_overlap",
-            stable_round(F.col("n_overlap") / F.col("n_sh"), 4).alias(
-                "overlap_ratio"
-            ),
-        )
-        .filter(F.col("overlap_ratio") >= min_overlap_ratio)
-    )
+    b_sh = shingle_rows(benchmark, id_col, text_col, k)
+    return dedup._containment_matches(
+        _corpus_side(benchmark.sparkSession, prefix, "shingles", database),
+        F.broadcast(b_sh.withColumnRenamed("doc_id", "bench_id")),
+        min_overlap_ratio,
+    ).withColumnRenamed("corpus_id", "hist_id")
 
 
 def near_decontaminate_against_index(
@@ -584,7 +580,9 @@ def near_decontaminate_against_index(
     ``decontaminate_against_index``: the benchmark's band and shingle sides
     are broadcast EXPLICITLY so neither multi-TB index table grows an
     Exchange below its scan — the band join feeds O(candidates) ids into a
-    semi-join that prunes the shingle scan before the verify aggregation.
+    broadcast join that prunes the shingle scan before the verify
+    aggregation. Candidates and verify are the batch form's kernel
+    (``dedup._band_jaccard_matches``) over the index's band/shingle rows.
 
     Index fingerprint params (num_hashes, band_size, k) must match the
     values the index was built with — band hashes are not comparable across
@@ -597,53 +595,17 @@ def near_decontaminate_against_index(
     new-suite decontams otherwise accumulates three eval-sized caches per
     call."""
     spark = benchmark.sparkSession
-
-    def _mat(df: DataFrame) -> DataFrame:
-        df = dedup._materialize(df)
-        if unpersist_registry is not None:
-            unpersist_registry.append(df)
-        return df
-
-    b_bands = _mat(
-        # materialize=False: _mat persists the renamed frame — persisting
-        # inside minhash_bands too would double-cache the benchmark bands
-        minhash_bands(
-            benchmark, id_col, text_col, num_hashes, band_size, k,
-            materialize=False,
-        ).select(F.col("doc_id").alias("bench_id"), "band_id", "band_hash")
+    b_bands, b_sh = dedup._benchmark_fingerprints(
+        benchmark, id_col, text_col, num_hashes, band_size, k, unpersist_registry
     )
-    idx_bands = spark.table(_qualified(prefix, "bands", database))
-    cands = _mat(
-        idx_bands.join(F.broadcast(b_bands), ["band_id", "band_hash"])
-        .select(F.col("doc_id").alias("hist_id"), "bench_id")
-        .distinct()
-    )
-    b_sh = _mat(
-        shingle_rows(benchmark, id_col, text_col, k).select(
-            F.col("doc_id").alias("bench_id"), "shingle"
-        )
-    )
-    b_sizes = b_sh.groupBy("bench_id").agg(F.count(F.lit(1)).alias("n_b"))
-    idx_sh = spark.table(_qualified(prefix, "shingles", database))
-    flagged = idx_sh.select(
-        F.col("doc_id").alias("hist_id"), "shingle"
-    ).join(F.broadcast(cands.select("hist_id").distinct()), "hist_id")
-    h_sizes = flagged.groupBy("hist_id").agg(F.count(F.lit(1)).alias("n_c"))
-    inter = (
-        flagged.join(F.broadcast(b_sh), "shingle")
-        .groupBy("hist_id", "bench_id")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .join(cands, ["hist_id", "bench_id"])
-    )
-    jac = stable_round(
-        F.col("n_inter") / (F.col("n_c") + F.col("n_b") - F.col("n_inter")), 4
-    )
-    return (
-        inter.join(b_sizes, "bench_id")
-        .join(h_sizes, "hist_id")
-        .select("hist_id", "bench_id", "n_inter", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
+    return dedup._band_jaccard_matches(
+        _corpus_side(spark, prefix, "bands", database),
+        F.broadcast(b_bands),
+        _corpus_side(spark, prefix, "shingles", database),
+        F.broadcast(b_sh),
+        jaccard_threshold,
+        unpersist_registry,
+    ).withColumnRenamed("corpus_id", "hist_id")
 
 
 def _read_embparams(
@@ -811,7 +773,8 @@ def semantic_decontaminate_against_index(
     """SEMANTIC decontamination of the accepted corpus against a new eval
     set, off the persisted embedding signature index — the index-backed
     form of ``dedup.semantic_decontamination_matches`` (identical plane
-    construction and cosine verify, pinned by parity test): a translated
+    construction; the candidate join and cosine verify are the same kernel,
+    ``dedup._cosine_matches``; pinned by parity test): a translated
     or deeply paraphrased leak that shares no n-grams with its eval twin
     is found WITHOUT rescanning or re-embedding the corpus.
 
@@ -832,51 +795,30 @@ def semantic_decontaminate_against_index(
     2+ plan branches); pass ``unpersist_registry`` to collect them for
     caller release — same contract as the batch decontam forms and the
     lexical ``*_against_index`` reader."""
-    from kafka_connector_s3_sink_spark.operators.similarity import dot, l2norm
-
     spark = benchmark_emb.sparkSession
     pinned = _read_embparams(spark, prefix, database)
     if pinned is not None:
         dim, n_bands, band_planes = pinned
-
-    def _mat(df: DataFrame) -> DataFrame:
-        df = dedup._materialize(df)
-        if unpersist_registry is not None:
-            unpersist_registry.append(df)
-        return df
-
-    b_sig = _mat(
+    b_sig = dedup._materialize(
         dedup.embedding_band_signatures(
             benchmark_emb, id_col, vec_col, dim, n_bands, band_planes,
             out_id="bench_id",
-        )
+        ),
+        unpersist_registry,
     )
-    idx_sig = spark.table(_qualified(prefix, "embsig", database))
-    cands = _mat(
-        idx_sig.select(F.col("doc_id").alias("hist_id"), "band", "bucket")
-        .join(F.broadcast(b_sig), ["band", "bucket"])
-        .select("hist_id", "bench_id")
-        .distinct()
-    )
-    idx_vec = spark.table(_qualified(prefix, "embvec", database))
-    h_vec = idx_vec.select(
-        F.col("doc_id").alias("hist_id"), F.col("embedding").alias("cvec")
-    ).join(F.broadcast(cands.select("hist_id").distinct()), "hist_id")
-    b_vec = benchmark_emb.select(
-        F.col(id_col).alias("bench_id"),
-        F.col(vec_col).cast("array<double>").alias("bvec"),
-    ).withColumn("bnorm", l2norm(F.col("bvec")))
-    cos = stable_round(
-        dot(F.col("cvec"), F.col("bvec"))
-        / (l2norm(F.col("cvec")) * F.col("bnorm")),
-        4,
-    )
-    return (
-        cands.join(h_vec, "hist_id")
-        .join(F.broadcast(b_vec), "bench_id")
-        .select("hist_id", "bench_id", cos.alias("cosine"))
-        .filter(F.col("cosine") >= cosine_threshold)
-    )
+    return dedup._cosine_matches(
+        _corpus_side(spark, prefix, "embsig", database),
+        dedup._vectors(
+            spark.table(_qualified(prefix, "embvec", database)),
+            "doc_id", "embedding", "corpus_id", "cvec",
+        ),
+        F.broadcast(b_sig),
+        F.broadcast(
+            dedup._vectors(benchmark_emb, id_col, vec_col, "bench_id", "bvec")
+        ),
+        cosine_threshold,
+        unpersist_registry,
+    ).withColumnRenamed("corpus_id", "hist_id")
 
 
 def compact_dedup_index(

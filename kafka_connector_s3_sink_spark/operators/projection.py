@@ -12,7 +12,7 @@ in the hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 

@@ -85,10 +85,9 @@ def bm25_topk(
     with idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)) — the standard Okapi
     form with the non-negative idf variant. Duplicate query terms count
     once (set semantics, the common convention for short queries)."""
-    from pyspark.sql import Window
-
     from kafka_connector_s3_sink_spark.operators.similarity import (
         _partition_local_topk,
+        _rank_topk,
     )
 
     tf = term_frequencies(docs, id_col=id_col, text_col=text_col)
@@ -131,11 +130,4 @@ def bm25_topk(
     candidates = scored.mapInPandas(
         _partition_local_topk(k, score_col="score"), schema=scored.schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "score", "rank")
-    )
+    return _rank_topk(candidates, k, score_col="score")

@@ -50,10 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kafka_connector_s3_sink_spark.operators.sampling import (
-    hash_bucket,
-    hash_unit,
-)
+from kafka_connector_s3_sink_spark.operators.sampling import hash_unit
 from kafka_connector_s3_sink_spark.operators.text import tokens_column
 
 N_BUCKETS = 4096

@@ -18,7 +18,7 @@ from __future__ import annotations
 import hashlib
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from kafka_connector_s3_sink_spark.functions.numeric import stable_round
 
@@ -83,8 +83,6 @@ def brute_force_topk(
     determinism; the result and oracle are identical to the single-phase plan
     (modulo zero-norm vectors, whose NaN cosine is filtered before ranking).
     """
-    from pyspark.sql import Window
-
     # zero-norm vectors are dropped up front: their cosine is undefined
     # (0/0 — an ANSI-mode error, NaN otherwise, and NaN would additionally
     # rank differently in the window vs the pandas pre-filter). Excluding
@@ -116,11 +114,22 @@ def brute_force_topk(
         ).alias("cosine"),
     )
     candidates = scored.mapInPandas(_partition_local_topk(k), schema=scored.schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
+    return _rank_topk(candidates, k)
+
+
+def _rank_topk(scored: DataFrame, k: int, score_col: str = "cosine") -> DataFrame:
+    """The one per-query top-k rank step of every search here: ``rank`` =
+    ``row_number`` over (query_id; score desc, nbr_id asc), kept at rank ≤ k,
+    as (query_id, nbr_id, score_col, rank). Callers that pre-trim with
+    ``_partition_local_topk`` feed it the trimmed candidates; the window then
+    sees ≤ |queries|·k rows per partition."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("nbr_id").asc()
+    )
     return (
-        candidates.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
+        .select("query_id", "nbr_id", score_col, "rank")
     )
 
 
@@ -390,8 +399,6 @@ def _probe_centroids(
     if assignment == "literal":
         probes = top_centroids_expr(F.col(vec_col), F.col(norm_col), cents, nprobe)
         return df.withColumn("centroid_id", F.explode(probes))
-    from pyspark.sql import Window
-
     cdf = df.sparkSession.createDataFrame(
         [(cid, cvec, math.sqrt(sum(c * c for c in cvec))) for cid, cvec in cents],
         schema="_cid INT, _cvec array<double>, _cnorm double",
@@ -466,8 +473,6 @@ def ivf_topk(
     the corpus written partitioned by centroid_id — a probe becomes a
     partition-pruned scan of nprobe buckets.
     """
-    from pyspark.sql import Window
-
     if assigned_corpus is not None and centroids is None:
         raise ValueError(
             "assigned_corpus requires the centroids it was assigned with"
@@ -484,7 +489,24 @@ def ivf_topk(
         if assigned_corpus is not None
         else assign_corpus(corpus, cents, id_col, vec_col, assignment)
     )
-    q_assigned = _probe_centroids(
+    return _ivf_search(
+        _probe_queries(queries, cents, nprobe, query_id_col, vec_col, assignment),
+        c_assigned,
+        k,
+    )
+
+
+def _probe_queries(
+    queries: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    nprobe: int,
+    query_id_col: str,
+    vec_col: str,
+    assignment: str,
+) -> DataFrame:
+    """The query side of an IVF probe: every nonzero query vector as
+    (query_id, qvec, qnorm), one row per probed ``centroid_id``."""
+    return _probe_centroids(
         queries.select(
             F.col(query_id_col).alias("query_id"),
             F.col(vec_col).cast("array<double>").alias("qvec"),
@@ -498,6 +520,13 @@ def ivf_topk(
         norm_col="qnorm",
         assignment=assignment,
     )
+
+
+def _ivf_search(q_assigned: DataFrame, c_assigned: DataFrame, k: int) -> DataFrame:
+    """Score every (query, member of a probed bucket) pair and rank — the
+    search step of ``ivf_topk`` and ``ivf_topk_indexed``. ``c_assigned`` is
+    ``assign_corpus``-shaped (nbr_id, cvec_v, cnorm_v, centroid_id), computed
+    in memory or read back from a ``write_ivf_index`` directory."""
     scored = (
         F.broadcast(q_assigned)
         .join(c_assigned, "centroid_id")
@@ -512,13 +541,27 @@ def ivf_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
+    return _rank_topk(scored, k)
+
+
+# assign_corpus column -> column of the on-disk IVF index
+_IVF_COLUMNS = (("nbr_id", "vec_id"), ("cvec_v", "vec"), ("cnorm_v", "norm"))
+
+
+def _ivf_rows(
+    corpus: DataFrame,
+    cents: list[tuple[int, list[float]]],
+    id_col: str,
+    vec_col: str,
+    assignment: str,
+    batch_id: str,
+) -> DataFrame:
+    """A corpus's rows of the on-disk IVF index:
+    (vec_id, vec, norm, centroid_id, batch_id), assigned by ``assign_corpus``."""
+    return assign_corpus(corpus, cents, id_col, vec_col, assignment).select(
+        *[F.col(a).alias(d) for a, d in _IVF_COLUMNS],
+        "centroid_id",
+        F.lit(batch_id).alias("batch_id"),
     )
 
 
@@ -557,22 +600,8 @@ def write_ivf_index(
             corpus, n_centroids, 1, id_col, vec_col, fit_sample_cap, assignment
         )
     )
-    assigned = _assign_centroids(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-        )
-        .filter(nonzero_vec(F.col("vec")))
-        .withColumn("norm", l2norm(F.col("vec"))),
-        cents,
-        id_col="vec_id",
-        vec_col="vec",
-        norm_col="norm",
-        assignment=assignment,
-    )
     (
-        assigned.select("vec_id", "vec", "norm", "centroid_id")
-        .withColumn("batch_id", F.lit(batch_id))
+        _ivf_rows(corpus, cents, id_col, vec_col, assignment, batch_id)
         .write.mode("overwrite")
         .partitionBy("centroid_id", "batch_id")
         .parquet(dest_dir)
@@ -612,18 +641,11 @@ def append_to_ivf_index(
     (`S3SinkTask.java:121-144`)."""
     spark = new_vectors.sparkSession
     cents = read_ivf_centroids(index_dir)
-    assigned = assign_corpus(new_vectors, cents, id_col, vec_col, assignment)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         (
-            assigned.select(
-                F.col("nbr_id").alias("vec_id"),
-                F.col("cvec_v").alias("vec"),
-                F.col("cnorm_v").alias("norm"),
-                "centroid_id",
-            )
-            .withColumn("batch_id", F.lit(batch_id))
+            _ivf_rows(new_vectors, cents, id_col, vec_col, assignment, batch_id)
             .write.mode("overwrite")
             .partitionBy("centroid_id", "batch_id")
             .parquet(index_dir)
@@ -677,46 +699,18 @@ def ivf_topk_indexed(
     ``ivf_topk`` with the same quantizer because both score the same
     (query, bucket-member) pairs with the same rounded-cosine expression.
     """
-    from pyspark.sql import Window
-
     cents = read_ivf_centroids(index_dir)
-    q_assigned = _probe_centroids(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qvec"),
-        )
-        .filter(nonzero_vec(F.col("qvec")))
-        .withColumn("qnorm", l2norm(F.col("qvec"))),
-        cents,
-        nprobe,
-        id_col="query_id",
-        vec_col="qvec",
-        norm_col="qnorm",
-        assignment=assignment,
+    q_assigned = _probe_queries(
+        queries, cents, nprobe, query_id_col, vec_col, assignment
     )
     probe_ids = sorted(
         r["centroid_id"] for r in q_assigned.select("centroid_id").distinct().collect()
     )
     idx = spark.read.parquet(index_dir).filter(F.col("centroid_id").isin(probe_ids))
-    scored = (
-        F.broadcast(q_assigned)
-        .join(idx, "centroid_id")
-        .filter(not_self(F.col("query_id"), F.col("vec_id")))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("nbr_id"),
-            stable_round(
-                dot(F.col("qvec"), F.col("vec")) / (F.col("qnorm") * F.col("norm")), 4
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
+    return _ivf_search(
+        q_assigned,
+        idx.select(*[F.col(d).alias(a) for a, d in _IVF_COLUMNS], "centroid_id"),
+        k,
     )
 
 
@@ -735,8 +729,6 @@ def lsh_topk(
     At 100 TB the corpus side is pre-bucketed (partitioned/bucketed table on
     the bucket id) so a query probe touches one bucket's partitions only.
     """
-    from pyspark.sql import Window
-
     planes = _hyperplanes(dim, n_planes)
     c = (
         corpus.select(
@@ -769,12 +761,7 @@ def lsh_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)
 
 
 def topk_recall(approx: DataFrame, exact: DataFrame, k: int) -> DataFrame:
@@ -1117,8 +1104,6 @@ def pq_topk(
     corpus-sized ever funnels into one task. ``score`` = −ADC distance
     (higher is better, aligned with the other retrieval branches); ties →
     lowest nbr_id."""
-    from pyspark.sql import Window
-
     m = len(codebooks)
     d = len(codebooks[0][0][1])
     spark = encoded.sparkSession
@@ -1162,14 +1147,7 @@ def pq_topk(
     candidates = scored.mapInPandas(
         _partition_local_topk(k, score_col="score"), schema=scored.schema
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "score", "rank")
-    )
+    return _rank_topk(candidates, k, score_col="score")
 
 
 def normalize_vectors(
@@ -1213,8 +1191,6 @@ def pq_topk_rescored(
     measured by ``topk_recall`` (tests pin the monotone improvement).
     Output matches ``brute_force_topk``'s shape with ``score`` = exact
     cosine."""
-    from pyspark.sql import Window
-
     cands = pq_topk(
         encoded,
         codebooks,
@@ -1245,14 +1221,7 @@ def pq_topk_rescored(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc()
-    )
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "score", "rank")
-    )
+    return _rank_topk(joined, k, score_col="score")
 
 
 def ivfpq_topk(
@@ -1303,8 +1272,6 @@ def ivfpq_topk(
     the query LUT per probed cell on (query − centroid) — better recall
     at the same code budget (see inline note). A caller-supplied
     ``codebooks`` must then be residual-space (e.g. from a prior run)."""
-    from pyspark.sql import Window
-
     nrm = normalize_vectors(
         corpus.select(F.col(id_col), F.col(vec_col)), vec_col
     )
@@ -1411,17 +1378,9 @@ def ivfpq_topk(
         _partition_local_topk(k_candidates, score_col="score"),
         schema=scored.schema,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("nbr_id").asc()
-    )
-    cand_k = (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_candidates)
-    )
+    cand_k = _rank_topk(candidates, k_candidates, score_col="score")
     if not rescore:
-        return cand_k.filter(F.col("rank") <= k).select(
-            "query_id", "nbr_id", "score", "rank"
-        )
+        return cand_k.filter(F.col("rank") <= k)
     c = nrm.select(
         F.col(id_col).alias("nbr_id"),
         F.col(vec_col).cast("array<double>").alias("_cvec"),
@@ -1444,11 +1403,7 @@ def ivfpq_topk(
             ).alias("score"),
         )
     )
-    return (
-        resc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "score", "rank")
-    )
+    return _rank_topk(resc, k, score_col="score")
 
 
 def _with_residual(

@@ -41,6 +41,8 @@ from contextlib import contextmanager
 
 # Schemes where a PUT is atomic and rename is a server-side copy.
 _DIRECT_SCHEMES = {"s3", "s3a", "s3n", "gs", "gcs"}
+# Hadoop's S3 connector spellings; pyarrow.fs resolves the store only as s3
+_PYARROW_SCHEMES = {"s3a": "s3", "s3n": "s3"}
 
 
 def _split_uri(uri: str) -> tuple[str | None, str]:
@@ -86,14 +88,17 @@ class ObjectStorage:
         if self._fs is None:
             import pyarrow.fs as pafs
 
-            scheme, _ = _split_uri(self.base_uri)
+            scheme, rest = _split_uri(self.base_uri)
             if scheme is None:
                 import os
 
                 self._fs = pafs.LocalFileSystem()
                 self._base = os.path.abspath(self.base_uri)
             else:
-                self._fs, self._base = pafs.FileSystem.from_uri(self.base_uri)
+                uri = self.base_uri
+                if scheme in _PYARROW_SCHEMES:
+                    uri = f"{_PYARROW_SCHEMES[scheme]}:{rest}"
+                self._fs, self._base = pafs.FileSystem.from_uri(uri)
         return self._fs, self._base
 
     # -- path handling --

@@ -20,7 +20,7 @@ not O(events). The watermark bounds both state retention and late-data wait.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_connector_s3_sink_spark.functions.numeric import stable_round

@@ -389,6 +389,16 @@ def test_decontaminate_against_index(spark, tmp_path_factory):
         rows = {(r["hist_id"], r["bench_id"]): r["overlap_ratio"]
                 for r in res.collect()}
         assert rows == {(1, 101): 1.0}
+        # parity with the batch form on the same corpus: the same rows, with
+        # hist_id in place of corpus_id
+        from kafka_connector_s3_sink_spark.operators import dedup
+
+        batch = dedup.decontamination_matches(corpus, bench, min_overlap_ratio=0.5)
+        assert batch.columns == ["corpus_id"] + res.columns[1:]
+        assert res.columns[0] == "hist_id"
+        assert sorted(map(tuple, res.collect())) == sorted(
+            map(tuple, batch.collect())
+        )
         # plan contract: the index scan feeds its join directly — walking UP
         # from the decon_shingles FileScan toward the root, a (broadcast)
         # Join appears before any hash Exchange, i.e. the multi-TB index
@@ -454,6 +464,18 @@ def test_near_decontaminate_against_index(spark, tmp_path_factory):
             for r in res.collect()
         }
         assert rows == {(1, 201): (25, 0.8065)}
+        # parity with the batch form on the same corpus: the same rows, with
+        # hist_id in place of corpus_id
+        from kafka_connector_s3_sink_spark.operators import dedup
+
+        batch = dedup.near_decontamination_matches(
+            corpus, bench, jaccard_threshold=0.4
+        )
+        assert batch.columns == ["corpus_id"] + res.columns[1:]
+        assert res.columns[0] == "hist_id"
+        assert sorted(map(tuple, res.collect())) == sorted(
+            map(tuple, batch.collect())
+        )
         # plan contract: walking UP from each index FileScan, a (broadcast)
         # Join appears before any hash Exchange — the multi-TB index sides
         # never shuffle

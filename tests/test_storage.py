@@ -110,6 +110,37 @@ def test_object_storage_mode_defaults_by_scheme():
         ObjectStorage("/x", mode="yolo")
 
 
+@pytest.mark.parametrize(
+    "uri, resolved",
+    [
+        ("s3a://bucket/prefix", "s3://bucket/prefix"),
+        ("S3N://bucket/prefix", "s3://bucket/prefix"),
+        ("s3://bucket/prefix", "s3://bucket/prefix"),
+        ("gs://bucket/prefix", "gs://bucket/prefix"),
+    ],
+)
+def test_hadoop_s3_schemes_resolve_as_s3(monkeypatch, uri, resolved):
+    """pyarrow.fs knows S3 only as ``s3``; the Hadoop spellings the docs use
+    (``s3a://``, ``s3n://``) must reach it as ``s3://`` or the first object
+    write raises ``Unrecognized filesystem type``. The resolver is stubbed,
+    so no S3 client (and no region lookup) is created."""
+    import pyarrow.fs as pafs
+
+    seen = []
+
+    class StubFileSystem:
+        @staticmethod
+        def from_uri(u):
+            seen.append(u)
+            return pafs.LocalFileSystem(), "/bucket/prefix"
+
+    monkeypatch.setattr(pafs, "FileSystem", StubFileSystem)
+    storage = ObjectStorage(uri)
+    assert storage.full_path("a/b.csv") == "/bucket/prefix/a/b.csv"
+    assert seen == [resolved]
+    assert storage.mode == "direct"
+
+
 def test_write_batch_accepts_file_uri(spark, tmp_path):
     """The golden-name path through an explicit file:// URI — the same route an
     s3:// deployment takes, resolved by pyarrow.fs instead of plain open()."""

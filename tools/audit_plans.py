@@ -17,6 +17,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+# executor cores, as in bench.py: set SPARK_GRAFT_CPUS to the host's nproc
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
 OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
 )
@@ -153,7 +155,7 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .appName("plan-audit")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")

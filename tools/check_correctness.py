@@ -16,6 +16,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# executor cores, as in bench.py: set SPARK_GRAFT_CPUS to the host's nproc
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "8")
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -104,7 +107,7 @@ def main():
     import __spark_entry__ as entrymod
 
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .appName("correctness-check")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.session.timeZone", "UTC")

@@ -27,6 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 FACTOR = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+# executor cores, as in bench.py: set SPARK_GRAFT_CPUS to the host's nproc
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
@@ -36,7 +38,7 @@ def main() -> None:
     from kafka_connector_s3_sink_spark.operators import incremental, similarity
 
     spark = (
-        SparkSession.builder.master("local[32]")
+        SparkSession.builder.master(f"local[{CPUS}]")
         .appName("scale-probe")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
