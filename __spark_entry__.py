@@ -12,16 +12,17 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_connector_s3_sink_spark.config import EngineConfig, OutputField
+from kafka_connector_s3_sink_spark.config import CompressionType, EngineConfig, FormatType, OutputField
 from kafka_connector_s3_sink_spark.operators import dedup, grouping, projection, relational
 from kafka_connector_s3_sink_spark.operators import multimodal, packing, sampling, search, similarity, text as text_ops
 from kafka_connector_s3_sink_spark.operators import serving as serving_ops
 from kafka_connector_s3_sink_spark.operators import tokenizer as tokenizer_ops
 from kafka_connector_s3_sink_spark.formats import avro
 from kafka_connector_s3_sink_spark.records import KAFKA_VIEW_SQL, kafka_records_from_events, with_synthetic_headers
+from kafka_connector_s3_sink_spark.sinks.writer import prepare_with_filenames
 from kafka_connector_s3_sink_spark.operators import urls as _urls_mod
 from kafka_connector_s3_sink_spark.streaming import sessions
 
@@ -615,18 +616,27 @@ def q_sink_projection_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return string_lines.unionByName(binary_lines)
 
 
+def _object_rows(records: DataFrame, *keys) -> DataFrame:
+    """One row per ``keys`` group (an object the sink names) with its start
+    offset and record count."""
+    return records.groupBy(*keys).agg(
+        F.min("offset").alias("start_offset"),
+        F.count(F.lit(1)).alias("record_count"),
+    )
+
+
 def q_sink_group_topic_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.3: group by (topic, partition) with start-offset file naming."""
+    """§2.3: group by (topic, partition) with start-offset file naming — the
+    names the sink writes (``prepare_with_filenames``), uncompressed so no
+    extension is appended."""
     recs = kafka_records_from_events(spark, sf_dir)
-    cfg = EngineConfig()
-    agg = grouping.group_start_offsets(recs)
-    return agg.select(
+    cfg = EngineConfig(file_compression=CompressionType.NONE)
+    return _object_rows(
+        prepare_with_filenames(recs, cfg),
         "topic",
         "partition",
-        "start_offset",
-        "record_count",
-        cfg.template.filename_column(start_offset=F.col("start_offset")).alias("filename"),
-    )
+        F.col("_file").alias("filename"),
+    ).select("topic", "partition", "start_offset", "record_count", "filename")
 
 
 def q_sink_group_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,17 +714,18 @@ def q_sink_group_key_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sink_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.3: file.max.records chunk assignment (N=100)."""
+    """§2.3: file.max.records chunk assignment (N=100), one row per object the
+    sink names (``prepare_with_filenames``: a chunk whose records got two
+    names would show as two rows)."""
     recs = kafka_records_from_events(spark, sf_dir)
     cfg = EngineConfig(file_max_records=100)
-    chunked = grouping.assign_file_chunks(recs, cfg)
-    return grouping.chunk_start_offsets(chunked).select(
+    return _object_rows(
+        prepare_with_filenames(recs, cfg),
         "topic",
         "partition",
         F.col("_chunk").alias("chunk"),
-        "start_offset",
-        "record_count",
-    )
+        "_file",
+    ).drop("_file")
 
 
 def q_sink_timestamp_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,15 +734,13 @@ def q_sink_timestamp_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     recs = kafka_records_from_events(spark, sf_dir)
     clock = F.timestamp_millis(F.col("timestamp"))
-    return (
-        recs.groupBy(
-            "topic",
-            "partition",
-            F.date_format(clock, "yyyy").alias("ts_yyyy"),
-            F.date_format(clock, "MM").alias("ts_mm"),
-            F.date_format(clock, "dd").alias("ts_dd"),
-        )
-        .agg(F.min("offset").alias("start_offset"), F.count(F.lit(1)).alias("record_count"))
+    return _object_rows(
+        recs,
+        "topic",
+        "partition",
+        F.date_format(clock, "yyyy").alias("ts_yyyy"),
+        F.date_format(clock, "MM").alias("ts_mm"),
+        F.date_format(clock, "dd").alias("ts_dd"),
     )
 
 
@@ -904,7 +913,8 @@ def q_sink_schema_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
     each (topic, partition) at every value-schema change. Schema variety is
     synthesized deterministically (alternating 50-offset blocks gain an
     'extra' JSON key), mirroring the reference's schema-evolution fixture
-    (AvroParquetIntegrationTest.java:288-335)."""
+    (AvroParquetIntegrationTest.java:288-335). Runs and names come from the
+    sink's rule (``prepare_with_filenames`` under parquet rotation)."""
     recs = kafka_records_from_events(spark, sf_dir)
     varied = recs.withColumn(
         "value",
@@ -913,18 +923,17 @@ def q_sink_schema_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_replace(F.col("value"), r"\}$", ',"extra":1}'),
         ).otherwise(F.col("value")),
     )
-    runs = grouping.assign_schema_runs(varied)
+    cfg = EngineConfig(format_type=FormatType.PARQUET, parquet_schema_rotation=True)
     return (
-        runs.groupBy(
+        _object_rows(
+            prepare_with_filenames(varied, cfg),
             "topic",
             "partition",
             F.col("_schema_run").alias("schema_run"),
             F.col("_schema_fp").alias("schema_fp"),
+            "_file",
         )
-        .agg(
-            F.min("offset").alias("start_offset"),
-            F.count(F.lit(1)).alias("record_count"),
-        )
+        .drop("_file")
         .orderBy("topic", "partition", "schema_run")
     )
 

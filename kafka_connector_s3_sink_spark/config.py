@@ -20,7 +20,7 @@ Semantic rules kept from the reference:
 from __future__ import annotations
 
 import zoneinfo
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 from typing import Optional
 
@@ -186,9 +186,6 @@ class EngineConfig:
     aws_credentials: Optional[AwsStaticCredentials] = None
     aws_sts_role: Optional[AwsStsRole] = None
     s3_endpoint: Optional[str] = None
-
-    # extra output columns (topic/partition/etc. available to the template)
-    extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         self.validate()

@@ -1,43 +1,35 @@
 """Record-grouping operators (SURVEY.md §2.3).
 
 The reference buffers records in a driver-heap ``Map<filename, List<SinkRecord>>``
-(``S3SinkTask.java:117,121-124``). Here each grouping mode is a declarative
-DataFrame transform — one hash shuffle on the group key, map-side partial
-aggregation, AQE-friendly — so the same code scales from 60k rows to 100 TB:
+(``S3SinkTask.java:117,121-124``). Here each grouping step is a declarative
+DataFrame transform, so the same code scales from 60k rows to 100 TB.
+``sinks.writer.prepare_with_filenames`` composes them into the one
+record→object rule:
 
-- topic+partition (+start_offset filename): ``groupBy(topic, partition)`` with
-  ``min(offset)`` as the file's start offset (``README.md:101-133``).
-- topic+partition+timestamp: extra rendered-timestamp key columns
-  (``IntegrationTest.java:185-244``).
+- max-records-per-file chunking: ``assign_file_chunks`` — file ordinal via
+  ``row_number() over (partition by group order by offset)``
+  (``IntegrationTest.java:260-307``); the writer names each chunk by its
+  ``min(offset)`` (``README.md:101-133``).
+- schema-change rotation: ``assign_schema_runs`` — gaps-and-islands run
+  index per (topic, partition), folded into the chunk group
+  (``AvroParquetIntegrationTest.java:288-335``).
 - key upsert (last-value-per-key): ``max_by(struct(*), offset)`` — a single
   aggregate with partial map-side combine; deliberately NOT window+row_number,
   which has no partial aggregation and shuffles whole rows
   (``README.md:135-198``; cross-partition order is non-deterministic in the
   reference — we pin the deterministic tiebreak (offset, partition) and document
   the deviation).
-- max-records-per-file chunking: file ordinal via ``row_number() over
-  (partition by group order by offset)`` (``IntegrationTest.java:260-307``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_connector_s3_sink_spark.config import EngineConfig
 from kafka_connector_s3_sink_spark.template import key_string_column
-
-
-def group_start_offsets(df: DataFrame) -> DataFrame:
-    """One row per (topic, partition) group with the file's start offset and size
-    — the metadata that names the object (``{{topic}}-{{partition}}-{{start_offset}}``).
-
-    Scale note: single shuffle on (topic, partition); count/min combine map-side.
-    """
-    return df.groupBy("topic", "partition").agg(
-        F.min("offset").alias("start_offset"),
-        F.count(F.lit(1)).alias("record_count"),
-    )
 
 
 def last_value_per_key(df: DataFrame, order_col: str = "offset") -> DataFrame:
@@ -60,17 +52,21 @@ def last_value_per_key(df: DataFrame, order_col: str = "offset") -> DataFrame:
     return agged.select(*[f"_rec.{c}" for c in df.columns])
 
 
-def assign_file_chunks(df: DataFrame, config: EngineConfig) -> DataFrame:
-    """Add ``_chunk`` (file ordinal within group, 0-based) honoring
+def assign_file_chunks(
+    df: DataFrame,
+    config: EngineConfig,
+    group: Sequence[str] = ("topic", "partition"),
+) -> DataFrame:
+    """Add ``_chunk`` (file ordinal within ``group``, 0-based) honoring
     ``file.max.records``; 0 = unlimited → single chunk.
 
-    Scale note: the window sorts only within each (topic, partition) group —
-    the same shuffle the write needs anyway. Offsets are monotone within a
-    Kafka partition, so the sort is near-sorted input.
+    Scale note: the window sorts only within each group, on the
+    (topic, partition) exchange the start-offset window reuses. Offsets are
+    monotone within a Kafka partition, so the sort is near-sorted input.
     """
     if config.file_max_records <= 0:
         return df.withColumn("_chunk", F.lit(0))
-    w = Window.partitionBy("topic", "partition").orderBy("offset")
+    w = Window.partitionBy(*group).orderBy("offset")
     rn = F.row_number().over(w) - F.lit(1)
     return df.withColumn("_chunk", (rn / config.file_max_records).cast("int"))
 
@@ -91,7 +87,7 @@ def assign_schema_runs(df: DataFrame, order_col: str = "offset") -> DataFrame:
     rotates on every change, it never reopens old files).
 
     Gaps-and-islands via lag + running sum of change flags: one window over
-    the same (topic, partition) shuffle the write path already needs.
+    the (topic, partition) exchange the chunk and start-offset windows reuse.
     """
     w = Window.partitionBy("topic", "partition").orderBy(order_col)
     fp = value_schema_fingerprint(F.col("value"))
@@ -111,12 +107,3 @@ def assign_schema_runs(df: DataFrame, order_col: str = "offset") -> DataFrame:
         - 1
     )
     return with_chg.withColumn("_schema_run", run.cast("int")).drop("_schema_chg")
-
-
-def chunk_start_offsets(df_with_chunks: DataFrame) -> DataFrame:
-    """Per-(topic, partition, _chunk) start offset + size: file-naming metadata
-    when ``file.max.records`` splits groups (IntegrationTest.java:260-307)."""
-    return df_with_chunks.groupBy("topic", "partition", "_chunk").agg(
-        F.min("offset").alias("start_offset"),
-        F.count(F.lit(1)).alias("record_count"),
-    )

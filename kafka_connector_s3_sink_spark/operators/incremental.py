@@ -791,20 +791,17 @@ def semantic_decontaminate_against_index(
     present (so a query can never silently band with drifted planes); the
     explicit arguments are the fallback for a pre-params index.
 
-    The benchmark signature and candidate frames are persisted (each feeds
-    2+ plan branches); pass ``unpersist_registry`` to collect them for
-    caller release — same contract as the batch decontam forms and the
-    lexical ``*_against_index`` reader."""
+    The candidate frame is persisted (it feeds 2+ plan branches; the
+    benchmark signatures' only consumer is the candidate join); pass
+    ``unpersist_registry`` to collect it for caller release — same contract
+    as the batch decontam forms and the lexical ``*_against_index`` reader."""
     spark = benchmark_emb.sparkSession
     pinned = _read_embparams(spark, prefix, database)
     if pinned is not None:
         dim, n_bands, band_planes = pinned
-    b_sig = dedup._materialize(
-        dedup.embedding_band_signatures(
-            benchmark_emb, id_col, vec_col, dim, n_bands, band_planes,
-            out_id="bench_id",
-        ),
-        unpersist_registry,
+    b_sig = dedup.embedding_band_signatures(
+        benchmark_emb, id_col, vec_col, dim, n_bands, band_planes,
+        out_id="bench_id",
     )
     return dedup._cosine_matches(
         _corpus_side(spark, prefix, "embsig", database),

@@ -4,8 +4,8 @@ filename template (the reference's flush path, ``S3SinkTask.java:121-144``).
 Spark-first decomposition:
 
 1. group key + chunk assignment   — Column expressions (grouping.py)
-2. per-group start offset         — window ``min(offset)`` over the group
-                                    (same shuffle the write needs anyway)
+2. per-chunk start offset         — window ``min(offset)`` over group + chunk,
+                                    one hash exchange on (topic, partition)
 3. line rendering                 — Column expressions, JVM codegen (formats/render.py)
 4. distribution                   — ``repartition(filename)`` +
                                     ``sortWithinPartitions(filename, offset)``
@@ -37,7 +37,9 @@ Idempotence: object names derive from (topic, partition, start_offset) — at-le
 reprocessing overwrites the same objects (``README.md:101-133``); key-mode later
 flushes intentionally overwrite (``README.md:158-170``).
 
-Scale notes: ``repartition(filename)`` hash-distributes groups across executors;
+Scale notes: the write shuffles twice — the (topic, partition) exchange of
+the chunk and start-offset windows, then ``repartition(filename)``, which
+hash-distributes the objects across executors;
 a skewed group (one huge topic-partition) maps to one task, which is the
 reference's behavior too (one file is inherently one writer) — ``file.max.records``
 is the knob that splits it.
@@ -65,56 +67,42 @@ from kafka_connector_s3_sink_spark.sinks.storage import ObjectStorage
 from kafka_connector_s3_sink_spark.template import GrouperType, ensure_utc_session
 
 
-def _filename_column(config: EngineConfig, clock: Column | None) -> Column:
-    """Filename per record with per-group start offset resolved via a window
-    min — offsets arrive near-sorted per Kafka partition, so the sort is cheap."""
-    tpl = config.template
-    if tpl.grouper_type is GrouperType.KEY:
-        start = F.col("offset")
-    else:
-        gk = ["topic", "partition", "_chunk"]
-        start = F.min("offset").over(Window.partitionBy(*gk))
-    return tpl.filename_column(
-        start_offset=start,
-        clock=clock,
-        timezone=config.timestamp_timezone,
-        prefix=config.prefix,
-        extension=config.filename_extension,
-    )
-
-
 def prepare_with_filenames(
     df: DataFrame, config: EngineConfig, clock: Column | None = None
 ) -> DataFrame:
     """Records with their deterministic ``_file`` object name attached — the
-    grouping/chunking/rotation half of the write, shared by the writer, the
-    dry-run manifest, and the audit-driven repair path."""
+    one record→object rule, shared by the writer, the dry-run manifest, the
+    audit-driven repair path and the oracle gate's sink naming entries.
+
+    Key mode keeps one record per key (last value wins), named by its key.
+    Every other mode groups by ``(topic, partition)`` — plus ``_schema_run``
+    under parquet schema rotation, so each run of one value schema names its
+    own objects (AvroParquetIntegrationTest.java:288-335) — cuts each group
+    into ``_chunk``s of ``file_max_records`` records and names every chunk by
+    its first offset: a ``min(offset)`` window over group + ``_chunk``.
+    Offsets arrive near-sorted per Kafka partition, so its sort is cheap."""
     enforce_csv_schema_types(df.schema, config)
     tpl = config.template
     if tpl.grouper_type is GrouperType.KEY:
-        # last-value-per-key upsert (one record per key → one object per key)
         df = last_value_per_key(df)
-        return df.withColumn("_file", _filename_column(config, clock))
-    if config.format_type is FormatType.PARQUET and config.parquet_schema_rotation:
-        # schema-change rotation: fold the schema-run index into the chunk
-        # key so each run names its own object starting at the run's first
-        # offset (AvroParquetIntegrationTest.java:288-335). The run window
-        # and the chunk window share one (topic, partition) shuffle.
-        df = assign_schema_runs(df)
-        if config.file_max_records > 0:
-            w = Window.partitionBy("topic", "partition", "_schema_run").orderBy(
-                "offset"
-            )
-            rn = F.row_number().over(w) - F.lit(1)
-            sub = (rn / config.file_max_records).cast("int")
-        else:
-            sub = F.lit(0)
-        chunked = df.withColumn(
-            "_chunk", F.concat_ws("-", F.col("_schema_run"), sub)
-        )
+        start = F.col("offset")
     else:
-        chunked = assign_file_chunks(df, config)
-    return chunked.withColumn("_file", _filename_column(config, clock))
+        group = ["topic", "partition"]
+        if config.format_type is FormatType.PARQUET and config.parquet_schema_rotation:
+            df = assign_schema_runs(df)
+            group.append("_schema_run")
+        df = assign_file_chunks(df, config, group)
+        start = F.min("offset").over(Window.partitionBy(*group, "_chunk"))
+    return df.withColumn(
+        "_file",
+        tpl.filename_column(
+            start_offset=start,
+            clock=clock,
+            timezone=config.timestamp_timezone,
+            prefix=config.prefix,
+            extension=config.filename_extension,
+        ),
+    )
 
 
 def expected_manifest(

@@ -127,10 +127,6 @@ class FilenameTemplate:
             return GrouperType.TOPIC_PARTITION
         raise TemplateError(_UNSUPPORTED_SET_MSG + f" ({sorted(core)} given)")
 
-    @property
-    def timestamp_units(self) -> list[str]:
-        return [p.value for p in self.parts if p.variable == "timestamp"]
-
     # -- Spark-side rendering --------------------------------------------
     def filename_column(
         self,

@@ -110,19 +110,6 @@ def test_envelope_unwrap(spark):
     assert line == '{"name":"name0"}'  # S3SinkTaskTest.java:636-682
 
 
-def test_group_start_offsets(spark):
-    rows = [
-        Row(topic="t", partition=p, offset=o, key=None, value="v", timestamp=None, headers=None)
-        for p, o in [(0, 5), (0, 7), (0, 6), (1, 100), (1, 101)]
-    ]
-    df = spark.createDataFrame(rows, KAFKA_RECORD_SCHEMA)
-    got = {
-        (r["topic"], r["partition"]): (r["start_offset"], r["record_count"])
-        for r in grouping.group_start_offsets(df).collect()
-    }
-    assert got == {("t", 0): (5, 3), ("t", 1): (100, 2)}
-
-
 def test_last_value_per_key_with_null_key(spark):
     # F5 semantics: one record per stringified key, the max-offset one; null → 'null'
     rows = [
@@ -147,11 +134,6 @@ def test_file_chunking(spark):
     chunked = grouping.assign_file_chunks(df, cfg)
     got = sorted((r["offset"], r["_chunk"]) for r in chunked.collect())
     assert got == [(0, 0), (1, 0), (2, 1), (3, 1), (4, 2)]
-    starts = {
-        (r["_chunk"]): (r["start_offset"], r["record_count"])
-        for r in grouping.chunk_start_offsets(chunked).collect()
-    }
-    assert starts == {0: (0, 2), 1: (2, 2), 2: (4, 1)}
 
 
 def test_unlimited_chunking_single_chunk(spark):

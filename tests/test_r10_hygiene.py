@@ -159,8 +159,9 @@ def test_near_against_index_registry(spark, tmp_path_factory):
 
 
 def test_semantic_against_index_registry(spark, tmp_path_factory):
-    """semantic_decontaminate_against_index: same registry contract, two
-    persisted frames (benchmark signatures + candidates)."""
+    """semantic_decontaminate_against_index: same registry contract, one
+    persisted frame (the candidates; the benchmark signatures feed only the
+    candidate join, which ``dedup._cosine_matches`` persists)."""
     loc = str(tmp_path_factory.mktemp("r10_sem_idx"))
     base_vec = [3.0, -2.0, 5.0, -4.0, 2.5, -3.5, 4.0, -2.0]
     corpus = spark.createDataFrame(
@@ -177,7 +178,7 @@ def test_semantic_against_index_registry(spark, tmp_path_factory):
             unpersist_registry=reg,
         )
         assert {(r["hist_id"], r["bench_id"]) for r in res.collect()} == {(1, 901)}
-        assert len(reg) == 2
+        assert len(reg) == 1
         for df in reg:
             df.unpersist()
         assert _n_cached(spark) == n0

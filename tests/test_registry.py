@@ -2,6 +2,8 @@
 of queries() in order — round 2 lost two green rows by letting the registry
 grow past the window. Pin the contract so it cannot silently regress."""
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 # queries with no SQL-expressible oracle (engine-specific sketch internals);
@@ -41,3 +43,21 @@ def test_bench_branch_tags_match_live_entries(spark):
             f"{name}: BRANCH_TAGS has {sorted(vals)} but the entry emits "
             f"{sorted(live)}"
         )
+
+
+@pytest.mark.parametrize(
+    "name", ["sink_group_topic_partition", "sink_chunking", "sink_schema_rotation"]
+)
+def test_sink_naming_entries_match_oracle(spark, sf_dir, name):
+    """The gate's sink naming entries run the sink's own record→object rule
+    (``prepare_with_filenames``); comparing them with their DuckDB oracles
+    here, with the gate's normalisation and hash, puts a naming regression
+    in the default suite and not only in the separate gate run."""
+    from tools.check_correctness import compare_with_oracle, oracle_connection
+
+    sdf = entrymod.queries()[name](spark, sf_dir)
+    n_rows, problems = compare_with_oracle(
+        sdf, oracle_connection(sf_dir), entrymod.oracle_sql()[name]
+    )
+    assert n_rows > 0
+    assert problems == []

@@ -17,7 +17,6 @@ def test_timestamp_template_resolves_timestamp_grouper():
         "{{topic}}-{{partition}}-{{start_offset}}-{{timestamp:unit=yyyy}}{{timestamp:unit=MM}}"
     )
     assert t.grouper_type is GrouperType.TOPIC_PARTITION_TIMESTAMP
-    assert t.timestamp_units == ["yyyy", "MM"]
 
 
 def test_key_template_resolves_key_grouper():

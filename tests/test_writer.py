@@ -21,7 +21,7 @@ from kafka_connector_s3_sink_spark.records import (
     KAFKA_RECORD_SCHEMA,
     KAFKA_RECORD_SCHEMA_BINARY,
 )
-from kafka_connector_s3_sink_spark.sinks.writer import write_batch
+from kafka_connector_s3_sink_spark.sinks.writer import expected_manifest, write_batch
 
 
 def b64(s: str) -> str:
@@ -170,6 +170,60 @@ def test_max_records_one_record_per_file(spark, tmp_path):
         "test-topic-0-1-10", "test-topic-0-3-30",
     ]
     assert read_lines(tmp_path, "test-topic-0-3-30", CompressionType.NONE) == ["v-3-30"]
+
+
+def _rec(partition, offset, key=None, value="v"):
+    return Row(topic="t", partition=partition, offset=offset, key=key,
+               value=value, timestamp=None, headers=None)
+
+
+@pytest.mark.parametrize(
+    "rows, cfg, want",
+    [
+        pytest.param(
+            [_rec(0, 5), _rec(1, 101), _rec(0, 7), _rec(1, 100), _rec(0, 6)],
+            EngineConfig(),
+            [("t-0-5.gz", 3), ("t-1-100.gz", 2)],
+            id="plain_out_of_order",
+        ),
+        pytest.param(
+            [_rec(0, o) for o in (3, 0, 4, 1, 2)],
+            EngineConfig(file_max_records=2),
+            [("t-0-0.gz", 2), ("t-0-2.gz", 2), ("t-0-4.gz", 1)],
+            id="max_records_2",
+        ),
+        pytest.param(
+            [_rec(0, o, value='{"a":1}') for o in range(3)]
+            + [_rec(0, o, value='{"b":1}') for o in range(3, 6)],
+            EngineConfig(
+                format_type=FormatType.PARQUET,
+                output_fields=(OutputField.OFFSET,),
+                parquet_schema_rotation=True,
+                file_max_records=2,
+            ),
+            [("t-0-0", 2), ("t-0-2", 1), ("t-0-3", 2), ("t-0-5", 1)],
+            id="rotation_max_records_2",
+        ),
+        pytest.param(
+            [_rec(0, 1, "k1"), _rec(1, 4), _rec(1, 6), _rec(0, 9, "k1")],
+            EngineConfig(
+                file_name_template="{{key}}",
+                file_max_records=1,
+                file_compression=CompressionType.NONE,
+            ),
+            [("k1", 1), ("null", 1)],
+            id="key",
+        ),
+    ],
+)
+def test_expected_manifest_matches_write(spark, tmp_path, rows, cfg, want):
+    """The dry-run manifest (what repair and the bench's manifest check diff
+    against) names exactly the objects the write commits: start offsets are
+    each chunk's minimum offset whatever the arrival order, chunks restart at
+    every schema run, and key mode names one object per key."""
+    df = records_df(spark, rows)
+    assert write_batch(df, cfg, str(tmp_path)) == want
+    assert sorted(tuple(r) for r in expected_manifest(df, cfg).collect()) == want
 
 
 def test_timestamp_grouping_with_injected_clock(spark, tmp_path):

@@ -97,11 +97,71 @@ def table_hash(rows, cols):
     return h.hexdigest()[:16]
 
 
+def oracle_connection(sf_dir):
+    """DuckDB connection with one view per testdata table of ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+    return con
+
+
+def _first_diff(srows, scols, orows, ocols):
+    order_s = sorted(range(len(scols)), key=lambda i: scols[i])
+    order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
+    ss = sorted("\x1f".join(norm_value(r[i]) for i in order_s) for r in srows)
+    oo = sorted("\x1f".join(norm_value(r[i]) for i in order_o) for r in orows)
+    for a, b in zip(ss, oo):
+        if a != b:
+            return f"first diff:\n    spark : {a[:300]}\n    oracle: {b[:300]}"
+    return None
+
+
+def compare_with_oracle(sdf, con, sql):
+    """(Spark row count, problems) of a Spark frame against its DuckDB oracle
+    ``sql``. The problems — row count, column set, order-insensitive value
+    hash on the fetchall path and on the arrow/pandas path — are strings,
+    none when the two match; a hash mismatch also names the first differing
+    normalised row."""
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    try:
+        res = con.execute(sql)
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+    except Exception as e:  # noqa: BLE001 — report, don't mask
+        return len(srows), [f"oracle error: {e}"]
+    problems = []
+    if len(srows) != len(orows):
+        problems.append(f"rows spark={len(srows)} oracle={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
+    elif (hs := table_hash(srows, scols)) != (ho := table_hash(orows, ocols)):
+        problems.append(f"hash spark={hs} oracle={ho}")
+        diff = _first_diff(srows, scols, orows, ocols)
+        if diff:
+            problems.append(diff)
+    else:
+        # second fetch path: arrow/pandas. A hash that matches on fetchall()
+        # but not here means the oracle's output types skew under a pandas
+        # fetch (HUGEINT sums, all-NULL BIGINT -> float64).
+        try:
+            hsp = table_hash(pandas_rows(sdf.toPandas()), scols)
+            hop = table_hash(pandas_rows(con.execute(sql).df()), ocols)
+            if hsp != hop:
+                problems.append(f"pandas-path hash spark={hsp} oracle={hop}")
+        except Exception as e:  # noqa: BLE001 — report, don't mask
+            problems.append(f"pandas-path error: {e}")
+    return len(srows), problems
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
@@ -115,11 +175,7 @@ def main():
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = oracle_connection(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -130,8 +186,11 @@ def main():
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            if name in oracles:
+                n_rows, problems = compare_with_oracle(sdf, con, oracles[name])
+            else:
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
@@ -174,52 +233,11 @@ def main():
             print(f"?    {name}: no oracle (rows-only) — {len(srows)} rows "
                   f"[{time.time()-t0:.1f}s]")
             continue
-        try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: oracle error: {e}")
-            failures.append(name)
-            continue
-        problems = []
-        if len(srows) != len(orows):
-            problems.append(f"rows spark={len(srows)} oracle={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
-        else:
-            hs = table_hash(srows, scols)
-            ho = table_hash(orows, ocols)
-            if hs != ho:
-                problems.append(f"hash spark={hs} oracle={ho}")
-            else:
-                # second fetch path: arrow/pandas. A hash that matches on
-                # fetchall() but not here means the oracle's output types
-                # skew under a pandas fetch (HUGEINT sums, all-NULL BIGINT
-                # -> float64) — the exact signature of the r13 driver red.
-                try:
-                    hsp = table_hash(pandas_rows(sdf.toPandas()), scols)
-                    hop = table_hash(
-                        pandas_rows(con.execute(oracles[name]).df()), ocols)
-                    if hsp != hop:
-                        problems.append(
-                            f"pandas-path hash spark={hsp} oracle={hop}")
-                except Exception as e:  # noqa: BLE001 — report, don't mask
-                    problems.append(f"pandas-path error: {e}")
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
             failures.append(name)
-            if srows and orows and "hash" in " ".join(problems):
-                order_s = sorted(range(len(scols)), key=lambda i: scols[i])
-                order_o = sorted(range(len(ocols)), key=lambda i: ocols[i])
-                ss = sorted("\x1f".join(norm_value(r[i]) for i in order_s) for r in srows)
-                oo = sorted("\x1f".join(norm_value(r[i]) for i in order_o) for r in orows)
-                for a, b in zip(ss, oo):
-                    if a != b:
-                        print(f"  first diff:\n    spark : {a[:300]}\n    oracle: {b[:300]}")
-                        break
         else:
-            print(f"ok   {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"ok   {name}: {n_rows} rows [{time.time()-t0:.1f}s]")
 
     print()
     if failures:
